@@ -1,33 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf; default 100 entries thrashes across 221 distinct
-      // queries (~30-90 codegen units each) — stack sampling showed
-      // task threads convoying on the compile KeyLock. Compiled-class
-      // cache entries are small vs the 8g heap.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // constraint propagation is O(n²) in constraint×expression count
-      // and this suite's plans are deep (unrolled Lloyd rounds, 56 MR
-      // rewrites); every operator here adds its own null filters, so
-      // the inferred constraints buy nothing. A/B on the full sweep:
-      // median per-query ratio 0.963, total 175.8 s vs the 178.2/210.4
-      // baseline pair. Semantics-preserving (the optimizer only STOPS
-      // inferring extra predicates); Verify runs the oracle gate under
-      // the same conf so the verified path IS the timed path.
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // warm the session (codegen, parquet footer cache, executor threads)
     // so the first timed query isn't charged for JVM init
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -198,7 +174,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val meta = s"""{"run_start_epoch_ms":$runStart,""" +
         s""""load1_at_start":$loadAtStart,"load1_at_end":${load1()},""" +
-        s""""cpus":$cpus,"sf":"$sfDir","queries":$metaQs}"""
+        s""""cpus":${GraftSession.cpus},"sf":"$sfDir","queries":$metaQs}"""
       val metaOut = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_META_FILE", "BENCH_META.json"))
       java.nio.file.Files.write(metaOut,

@@ -67,7 +67,7 @@ object SparkEntry {
   //  queries — one per implemented operator family from SURVEY.md §2
   // -------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // B2+B4: filter predicate + projection with alias
     "q01_filter_project" -> ((s, dir) => {
@@ -3733,6 +3733,19 @@ object SparkEntry {
     * coordinate (`list(... ORDER BY pos)` = the Spark side's
     * array_sort-by-pos rebuild). Callers append their final shape.
     */
+  /** DuckDB text of the fixed-order dot product of list columns `a`
+    * and `b`, binding lambda variable `v` — `di` or `vi`, whichever
+    * the surrounding template does not bind itself (lambda shadowing).
+    */
+  private def duckDot(a: String, b: String, v: String): String =
+    s"list_sum(list_transform(range(1, len($a) + 1), " +
+      s"$v -> $a[$v]::DOUBLE * $b[$v]::DOUBLE))"
+
+  /** Squared L2 as `x·x − 2·x·c + c·c`, the Spark side's fixed order. */
+  private def duckDist(x: String, c: String, v: String): String =
+    s"(${duckDot(x, x, v)}) - 2.0 * (${duckDot(x, c, v)}) + " +
+      s"(${duckDot(c, c, v)})"
+
   /** Generic form of the replay, parameterized on the vector expression,
     * k and the source relation, so q89 (product quantization) replays
     * the same math per SLICED subspace and q94 replays it over the
@@ -3748,18 +3761,13 @@ object SparkEntry {
     */
   private def kmeansRounds(xExpr: String, k: Int,
       src: String = "embeddings", p: String = ""): String = {
-    def dot(a: String, bcol: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"di -> $a[di]::DOUBLE * $bcol[di]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dot(x, x)}) - 2.0 * (${dot(x, c)}) + (${dot(c, c)})"
     s"""WITH ${p}e AS (SELECT vec_id, $xExpr AS x FROM $src
        |  WHERE ($xExpr) IS NOT NULL),
        |${p}c0 AS (SELECT vec_id AS cid, x AS cv FROM ${p}e
        |  WHERE vec_id IN (SELECT vec_id FROM ${p}e
        |    ORDER BY vec_id LIMIT $k)),
        |${p}d1 AS (SELECT ${p}e.vec_id, ${p}c0.cid, ${p}e.x,
-       |    ${dist("x", "cv")} AS dist
+       |    ${duckDist("x", "cv", "di")} AS dist
        |  FROM ${p}e CROSS JOIN ${p}c0),
        |${p}a1 AS (SELECT vec_id, cid, x FROM (
        |    SELECT vec_id, cid, x, row_number() OVER (
@@ -3774,7 +3782,7 @@ object SparkEntry {
        |${p}c1 AS (SELECT cid, list(s::DOUBLE / (cnt::DOUBLE * 1048576.0)
        |    ORDER BY pos) AS cv FROM ${p}s1 GROUP BY cid),
        |${p}d2 AS (SELECT ${p}e.vec_id, ${p}c1.cid,
-       |    ${dist("x", "cv")} AS dist
+       |    ${duckDist("x", "cv", "di")} AS dist
        |  FROM ${p}e CROSS JOIN ${p}c1),
        |${p}a2 AS (SELECT vec_id, cid FROM (
        |    SELECT vec_id, cid, row_number() OVER (
@@ -3810,15 +3818,10 @@ object SparkEntry {
     * exact refine). Mirrors [[ivfPqChainCtes]]' role for q91/q100.
     */
   private lazy val pqChainCtes: String = {
-    def dotv(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"vi -> $a[vi]::DOUBLE * $b[vi]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dotv(x, x)}) - 2.0 * (${dotv(x, c)}) + (${dotv(c, c)})"
     def part(s: Int, xExpr: String) =
       s"""(${kmeansRounds(xExpr, 4, p = s"q${s}_")}
          |SELECT qe.vec_id AS query_id, a.vec_id,
-         |  ${dist("qe.x", "c.cv")} AS d
+         |  ${duckDist("qe.x", "c.cv", "vi")} AS d
          |FROM q${s}_a2 a JOIN q${s}_c1 c ON c.cid = a.cid,
          |  (SELECT vec_id, x FROM q${s}_e WHERE vec_id < 25) qe)""".stripMargin
     s"""WITH p0 AS ${part(0, "embedding[1:32]")},
@@ -3839,17 +3842,12 @@ object SparkEntry {
     * the Spark side's shared refine kernel.
     */
   private def exactRefineTailSql(depth: Int): String = {
-    def dotv(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"vi -> $a[vi]::DOUBLE * $b[vi]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dotv(x, x)}) - 2.0 * (${dotv(x, c)}) + (${dotv(c, c)})"
     s""",
        |sl AS (SELECT query_id, neighbor_id FROM r WHERE rank <= $depth),
        |fe AS (SELECT vec_id, embedding AS x FROM embeddings
        |  WHERE embedding IS NOT NULL),
        |ex AS (SELECT sl.query_id, sl.neighbor_id,
-       |    ${dist("qe.x", "ne.x")} AS l2
+       |    ${duckDist("qe.x", "ne.x", "vi")} AS l2
        |  FROM sl JOIN fe qe ON qe.vec_id = sl.query_id
        |    JOIN fe ne ON ne.vec_id = sl.neighbor_id),
        |rr AS (SELECT query_id, neighbor_id, l2, row_number() OVER (
@@ -4192,11 +4190,6 @@ object SparkEntry {
     * cell residual, and the fixed-order ADC sum `d0 + d1`.
     */
   private lazy val q94Oracle: String = {
-    def dotv(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"vi -> $a[vi]::DOUBLE * $b[vi]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dotv(x, x)}) - 2.0 * (${dotv(x, c)}) + (${dotv(c, c)})"
     def part(s: Int, xExpr: String) =
       s"""(${kmeansRounds(xExpr, 4, src = "resid", p = s"r${s}_")}
          |SELECT a.vec_id, c.cv
@@ -4210,7 +4203,7 @@ object SparkEntry {
        |    count(*)::BIGINT AS cnt FROM sx2 GROUP BY 1, 2),
        |c2 AS (SELECT cid, list(s::DOUBLE / (cnt::DOUBLE * 1048576.0)
        |    ORDER BY pos) AS cv FROM s2 GROUP BY cid),
-       |csc AS (SELECT e.vec_id, c.cid, ${dist("e.x", "c.cv")} AS d
+       |csc AS (SELECT e.vec_id, c.cid, ${duckDist("e.x", "c.cv", "vi")} AS d
        |  FROM e CROSS JOIN c2 c),
        |crk AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
        |    ORDER BY d, cid) AS rk FROM csc),
@@ -4229,8 +4222,8 @@ object SparkEntry {
        |  FROM qcell q JOIN e ON e.vec_id = q.query_id
        |    JOIN c2 ON c2.cid = q.cid),
        |g AS (SELECT qr.query_id, cc.vec_id AS neighbor_id,
-       |    (${dist("qr.v[1:32]", "p0.cv")}) +
-       |    (${dist("qr.v[33:64]", "p1.cv")}) AS adc
+       |    (${duckDist("qr.v[1:32]", "p0.cv", "vi")}) +
+       |    (${duckDist("qr.v[33:64]", "p1.cv", "vi")}) AS adc
        |  FROM qr JOIN ccell cc ON cc.cid = qr.cell
        |    AND cc.vec_id <> qr.query_id
        |    JOIN p0 ON p0.vec_id = cc.vec_id
@@ -4255,15 +4248,10 @@ object SparkEntry {
     * exact refine).
     */
   private lazy val ivfPqChainCtes: String = {
-    def dotv(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"vi -> $a[vi]::DOUBLE * $b[vi]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dotv(x, x)}) - 2.0 * (${dotv(x, c)}) + (${dotv(c, c)})"
     def part(s: Int, xExpr: String) =
       s"""(${kmeansRounds(xExpr, 4, p = s"q${s}_")}
          |SELECT qe.vec_id AS query_id, a.vec_id,
-         |  ${dist("qe.x", "c.cv")} AS d
+         |  ${duckDist("qe.x", "c.cv", "vi")} AS d
          |FROM q${s}_a2 a JOIN q${s}_c1 c ON c.cid = a.cid,
          |  (SELECT vec_id, x FROM q${s}_e WHERE vec_id < 25) qe)""".stripMargin
     s"""$kmeansCtes,
@@ -4275,7 +4263,7 @@ object SparkEntry {
        |    count(*)::BIGINT AS cnt FROM sx2 GROUP BY 1, 2),
        |c2 AS (SELECT cid, list(s::DOUBLE / (cnt::DOUBLE * 1048576.0)
        |    ORDER BY pos) AS cv FROM s2 GROUP BY cid),
-       |csc AS (SELECT e.vec_id, c.cid, ${dist("e.x", "c.cv")} AS d
+       |csc AS (SELECT e.vec_id, c.cid, ${duckDist("e.x", "c.cv", "vi")} AS d
        |  FROM e CROSS JOIN c2 c),
        |crk AS (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
        |    ORDER BY d, cid) AS rk FROM csc),
@@ -4318,17 +4306,14 @@ object SparkEntry {
     * integer.
     */
   private lazy val q76Oracle: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"di -> $a[di]::DOUBLE * $b[di]::DOUBLE))"
     s"""$kmeansCtes,
        |m AS (SELECT a2.vec_id, a2.cid AS cluster, e.x
        |  FROM a2 JOIN e ON e.vec_id = a2.vec_id),
        |pr AS (SELECT a.vec_id AS ida, b.vec_id AS idb,
-       |    CASE WHEN (${dot("a.x", "a.x")}) = 0
-       |        OR (${dot("b.x", "b.x")}) = 0 THEN 0.0
-       |      ELSE (${dot("a.x", "b.x")}) /
-       |        (sqrt(${dot("a.x", "a.x")}) * sqrt(${dot("b.x", "b.x")}))
+       |    CASE WHEN (${duckDot("a.x", "a.x", "di")}) = 0
+       |        OR (${duckDot("b.x", "b.x", "di")}) = 0 THEN 0.0
+       |      ELSE (${duckDot("a.x", "b.x", "di")}) /
+       |        (sqrt(${duckDot("a.x", "a.x", "di")}) * sqrt(${duckDot("b.x", "b.x", "di")}))
        |      END AS cos
        |  FROM m a JOIN m b ON a.cluster = b.cluster
        |    AND a.vec_id < b.vec_id),
@@ -4346,11 +4331,9 @@ object SparkEntry {
     * cosine top-3.
     */
   private lazy val q87Oracle: String = {
-    def dotv(a: String, b: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"vi -> $a[vi]::DOUBLE * $b[vi]::DOUBLE))"
     def cos(a: String, b: String) =
-      s"(${dotv(a, b)}) / (sqrt(${dotv(a, a)}) * sqrt(${dotv(b, b)}))"
+      s"(${duckDot(a, b, "vi")}) / " +
+        s"(sqrt(${duckDot(a, a, "vi")}) * sqrt(${duckDot(b, b, "vi")}))"
     s"""$kmeansCtes,
        |sx2 AS (SELECT a2.cid, unnest(list_transform(range(1, len(e.x) + 1),
        |    di -> {'pos': di,
@@ -4993,26 +4976,21 @@ object SparkEntry {
     * fixed-order double arithmetic as [[kmeansRounds]].
     */
   private lazy val q155Oracle: String = {
-    def dot(a: String, bcol: String) =
-      s"list_sum(list_transform(range(1, len($a) + 1), " +
-        s"di -> $a[di]::DOUBLE * $bcol[di]::DOUBLE))"
-    def dist(x: String, c: String) =
-      s"(${dot(x, x)}) - 2.0 * (${dot(x, c)}) + (${dot(c, c)})"
     s"""WITH e AS (SELECT vec_id, embedding AS x FROM embeddings
        |  WHERE embedding IS NOT NULL),
        |c0 AS (SELECT vec_id AS cid, x AS cv FROM e
        |  ORDER BY vec_id LIMIT 1),
-       |d0 AS (SELECT e.vec_id, e.x, ${dist("x", "cv")} AS dmin
+       |d0 AS (SELECT e.vec_id, e.x, ${duckDist("x", "cv", "di")} AS dmin
        |  FROM e CROSS JOIN c0),
        |c1 AS (SELECT vec_id AS cid, x AS cv FROM d0
        |  ORDER BY dmin DESC, vec_id LIMIT 1),
        |d1 AS (SELECT d0.vec_id, d0.x,
-       |    least(d0.dmin, ${dist("x", "cv")}) AS dmin
+       |    least(d0.dmin, ${duckDist("x", "cv", "di")}) AS dmin
        |  FROM d0 CROSS JOIN c1),
        |c2 AS (SELECT vec_id AS cid, x AS cv FROM d1
        |  ORDER BY dmin DESC, vec_id LIMIT 1),
        |d2 AS (SELECT d1.vec_id, d1.x,
-       |    least(d1.dmin, ${dist("x", "cv")}) AS dmin
+       |    least(d1.dmin, ${duckDist("x", "cv", "di")}) AS dmin
        |  FROM d1 CROSS JOIN c2),
        |c3 AS (SELECT vec_id AS cid, x AS cv FROM d2
        |  ORDER BY dmin DESC, vec_id LIMIT 1),
@@ -5023,7 +5001,7 @@ object SparkEntry {
        |asg AS (SELECT vec_id, cid FROM (
        |    SELECT e.vec_id, cents.cid,
        |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${dist("e.x", "cents.cv")}, cents.cid) AS rn
+       |        ORDER BY ${duckDist("e.x", "cents.cv", "di")}, cents.cid) AS rn
        |    FROM e CROSS JOIN cents) WHERE rn = 1)
        |SELECT asg.vec_id, asg.cid AS center_id,
        |  (CASE WHEN cc.cid IS NULL THEN 0 ELSE 1 END)::INT AS is_center
@@ -5266,7 +5244,7 @@ object SparkEntry {
        |FROM documents d LEFT JOIN hit ON d.doc_id = hit.doc_id""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q01_filter_project" ->
       """SELECT event_id, user_id, round(value, 6) AS value_r
         |FROM events WHERE value > 0.5 AND event_type = 'click'""".stripMargin,

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
-import scala.jdk.CollectionConverters._
-
 /** Loader for the driver-generated test tables (TESTDATA.md).
   *
   * Streams in the reference are user-registered named inputs
@@ -19,104 +17,8 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Planned input-split count and footer row count per file, cached:
-    * both are pure scan METADATA (file length ÷ maxPartitionBytes
-    * packing; parquet footer row counts), so caching them never caches
-    * data. `.rdd` only plans — no job runs.
-    */
-  private val scanMeta =
-    new scala.collection.concurrent.TrieMap[String, (Int, Long)]
-
-  /** Parquet footer row count (no data read, no job). -1 if unreadable
-    * (directory tables, exotic layouts) — the floor then falls back to
-    * full default parallelism.
-    */
-  private def footerRows(spark: SparkSession, p: String): Long =
-    try {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(hp, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    } catch { case _: Throwable => -1L }
-
-  /** Parallelism floor for tiny scans (optimization guide §2/§6): the
-    * test tables are single-row-group parquet files, which plan as ONE
-    * input split — every per-row kernel downstream (gram hashing, BPE,
-    * LM scoring) would run on one core no matter how many the session
-    * has. When the planned scan has fewer partitions than the session's
-    * default parallelism, round-robin repartition up to
-    * min(defaultParallelism, ceil(rows / rowsPerSplit)) — proportional
-    * to the data, so a 2 000-row vector table gets a handful of
-    * partitions (its queries are job-count-bound; 32-way tiny tasks
-    * only add shuffle-file and scheduling overhead) while a table with
-    * row counts at or above rowsPerSplit·cores parallelizes fully. On
-    * any production-scale table (many files / row groups) the scan
-    * already splits past the floor and this is the identity, so the
-    * setting is scale-adaptive, not a local[32] constant. Every
-    * operator in this repo is partitioning-independent by design
-    * (integer-exact folds, explicit orderings), and the 221-query
-    * oracle gate adjudicates that claim after this change.
-    *
-    * The floor is OFF by default (spark.graft.scanFloorTables lists
-    * the tables to floor; default empty). Round-21 paired A/B runs on
-    * the full 221-query sweep measured the floor as a small net LOSS
-    * at sf0.1 on the bench host (per-query-min sums 197.2 s floored vs
-    * 183.6 s unfloored; median per-query ratio 1.04): the apparent
-    * single-task-scan costs at the round open (q101 18 s) were C2/
-    * Janino warmup mismeasurement — once the bench warms the engine on
-    * synthetic data, the heavy text kernels cost ~2-3 s single-task,
-    * below the ~0.1–0.5 s/query per-stage fixed cost (shuffle-file
-    * creation, 33-task scheduling, codegen-compile lock convoys —
-    * stack-sampled) the floor adds to every floored query. A blanket
-    * floor was worse still (246 → 334 s; MATCH_RECOGNIZE family 3–5×).
-    * On a corpus where per-document kernels dominate (longer docs,
-    * higher SF), set spark.graft.scanFloorTables=documents — the
-    * mechanism is rows-proportional and self-disables on any
-    * production multi-split table.
-    *
-    * Correctness caveat if flooring more tables: q02/q10 over
-    * `lineitem` aggregate large per-group DOUBLE populations whose
-    * sums match the sequential DuckDB oracle only in row order
-    * (oracle-verified: 4/6 q02 rows drift under a 32-way floor) —
-    * never floor `lineitem`.
-    *
-    * Overrides: spark.graft.scanFloor = hard target partition count
-    * (<= 1 disables); spark.graft.scanFloorRows = rows per split
-    * (default 256); spark.graft.scanFloorTables = comma list.
-    */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir, name)
-    val df = spark.read.parquet(p)
-    val floored = spark.conf
-      .getOption("spark.graft.scanFloorTables")
-      .getOrElse("").split(",").map(_.trim).contains(name)
-    if (!floored) return df
-    // the lineitem float-sum-order hazard above is enforced in CODE,
-    // not just documentation: flooring it silently drifts q02/q10
-    if (name == "lineitem")
-      throw new IllegalArgumentException(
-        "spark.graft.scanFloorTables must not include 'lineitem': " +
-          "q02/q10 sum large per-group DOUBLE populations whose totals " +
-          "match the sequential oracle only in row order (4/6 q02 rows " +
-          "drift at 6dp under a 32-way floor — round-21 finding)")
-    val dp = spark.sparkContext.defaultParallelism
-    val hard = spark.conf.getOption("spark.graft.scanFloor").map(_.toInt)
-    if (hard.exists(_ <= 1)) return df
-    val (parts, rows) = scanMeta.getOrElseUpdate(p,
-      (df.rdd.getNumPartitions, footerRows(spark, p)))
-    val target = hard.getOrElse {
-      val perSplit = spark.conf
-        .getOption("spark.graft.scanFloorRows").map(_.toLong)
-        .getOrElse(256L)
-      if (rows < 0) dp
-      else math.min(dp.toLong,
-        (rows + perSplit - 1) / perSplit).toInt
-    }
-    if (parts < target) df.repartition(target) else df
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(path(dir, name))
 
   /** The events table with a µs-epoch `ts_us` BIGINT plus `ts`
     * normalized to a µs TimestampType — whatever physical type the

@@ -260,8 +260,9 @@ final case class RxPermute[E](members: IndexedSeq[RxNode[E]])
     extends RxNode[E] {
   require(members.length >= 2, "rx permute needs at least two members")
   // The 16 bound is validated empirically through k=10 (BASELINE.md
-  // round 18, ScaleProbe mr_cep_permute8/10 + the *_adv adversarial
-  // rows): real-events k=8/k=10 run sub-linearly per data decade, and
+  // round 18, the mr_cep_permute8/10 + *_adv adversarial rows of the
+  // per-operator scale probe, since deleted; DecadeSweep now times
+  // every MR query at 10×): real-events k=8/k=10 run sub-linearly per data decade, and
   // the constructed worst case — all classes interleaved with every
   // 3rd event a wildcard satisfying EVERY member, forcing the full
   // C(k, k/2) mask-branching — stays bounded by maxPartialMatches'

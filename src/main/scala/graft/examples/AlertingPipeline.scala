@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.GraftSession
 import graft.control._
 
 /** The reference's production shape end-to-end: a live event stream, a
@@ -16,11 +17,7 @@ import graft.control._
   */
 object AlertingPipeline {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
 
     // live stream: rate ticks shaped into typed events with event time.
     // value%5 buckets users; slow ticks (value%3==0) act as "errors".

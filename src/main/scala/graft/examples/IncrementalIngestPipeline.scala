@@ -1,8 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{Dedup, TextOps}
 
 /** Continuous ingestion composed end-to-end: batch 1 lands and
@@ -20,11 +19,7 @@ import graft.operators.{Dedup, TextOps}
 object IncrementalIngestPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
     import spark.implicits._
 
     val docs = Tables.load(spark, sfDir, "documents")

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** The SQL:2016 MATCH_RECOGNIZE surface end-to-end on the sf0.001
   * events table — one statement per round-13 dialect capability, each
@@ -38,13 +38,8 @@ object SqlPatternShowcase {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR",
+      Map("spark.sql.extensions" -> "graft.plans.GraftExtensions"))
 
     graft.Tables.eventsTsUs(spark, sf)
       .select("event_id", "ts_us", "user_id", "event_type", "value")

@@ -1,8 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{Hll, Text}
 import graft.operators.{Bpe, CorpusWriter, Dedup, HtmlOps, Pii, Similarity, TextOps, UrlOps, Validate}
 
@@ -19,11 +18,7 @@ import graft.operators.{Bpe, CorpusWriter, Dedup, HtmlOps, Pii, Similarity, Text
 object TrainingDataPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
     import spark.implicits._
 
     val raw = Tables.load(spark, sfDir, "documents")

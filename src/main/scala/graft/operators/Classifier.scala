@@ -120,11 +120,15 @@ object Classifier {
     * over already carries everything the frozen scorer emits —
     * `margin = Σ_b c_b·w[b]` (integer adds commute exactly, so the
     * per-bucket total equals [[perceptronScore]]'s per-occurrence
-    * scan-side fold bit-for-bit; banked as decimal(38,0) like the
-    * training margins so corpus-scale sums cannot wrap) and
+    * scan-side fold bit-for-bit; a LONG fold like the dsirScore
+    * kernel, identical wherever either path is defined — decimal(38,0)
+    * stays only on the training margins) and
     * `n_feats = Σ_b c_b = 2·|toks|−1` — so the corpus is tokenized
     * once, not twice. Output rows are identical to
-    * `perceptronScore(df, …, perceptronTrain(df, …))`; docs with
+    * `perceptronScore(df, …, perceptronTrain(df, …))` provided `idCol`
+    * is unique and non-null (the assumption training already makes):
+    * rows sharing an id merge their features into one margin, and a
+    * null id misses the left join and scores `(0, 0, 0)`. Docs with
     * empty/null text score `(0, 0, 0)` via the left join.
     */
   def perceptronTrainScore(df: DataFrame, textCol: String, idCol: String,
@@ -206,7 +210,8 @@ object Classifier {
     * ([[perceptronTrainScore]] — one tokenize pass instead of three:
     * train features, score features, and the report all read the one
     * materialized per-doc relation). Output identical to
-    * `calibrationReport(df, …, perceptronTrain(df, …), thresholds)`.
+    * `calibrationReport(df, …, perceptronTrain(df, …), thresholds)`
+    * under the same unique non-null `idCol` assumption.
     */
   def trainCalibrationReport(df: DataFrame, textCol: String,
       idCol: String, label: Column, buckets: Int = 1024,

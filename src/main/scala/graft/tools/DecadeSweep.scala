@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Replication is key-shifted (copy i adds i·10⁹ to every PK/FK),
   * so joins keep resolving and per-key densities stay constant while
-  * key cardinalities grow 10× — the same decade model as ScaleProbe.
+  * key cardinalities grow 10× — the decade model behind BASELINE.md's
+  * per-family growth rows.
   * Dimension tables (region, nation) are NOT replicated: group-bys
   * over them keep their cardinality, as they would at 100 TB.
   *
@@ -22,6 +23,8 @@ import org.apache.spark.sql.functions._
   *   SPARK_GRAFT_DECADE_DIR=/root/repo/.decade/x10 \
   *   sbt "runMain graft.tools.DecadeSweep"            # all queries
   * Env:
+  *   SPARK_GRAFT_CPUS            local cores ([[graft.GraftSession]],
+  *     default 4) — match the core count the baseline was swept at
   *   SPARK_GRAFT_COPIES          replication factor (default 10)
   *   SPARK_GRAFT_SWEEP_ONLY      comma-separated query-name filter
   *   SPARK_GRAFT_SWEEP_OUT       also append JSON lines to this file
@@ -119,14 +122,8 @@ object DecadeSweep {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_DECADE_DIR",
       "/root/repo/.decade/x10")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session: the decade gate times the planner setup it gates
+    val spark = graft.GraftSession("ERROR")
 
     buildReplica(spark, sfDir, outDir, copies)
 

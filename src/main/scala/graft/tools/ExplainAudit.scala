@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Prints the formatted physical plan of selected queries — the
   * shuffle/broadcast/codegen audit loop (run ad hoc, not by the driver).
@@ -9,19 +8,8 @@ import graft.SparkEntry
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // mirror the bench session's planner conf so the audited plans
-      // are the plans the bench times (see Bench.scala) — both confs
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's session, so the audited plans are the timed plans
+    val spark = GraftSession("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q10_join_stream_table", "q26_embedding_pairs", "q42_rollup_cascade",
       "q151_winnow", "q156_pack_pairs", "q158_asof_nearest",

@@ -1,8 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Per-query job/stage wall-time profile — the measurement half of the
   * optimization loop (guide §1): for each named query it runs the same
@@ -19,15 +18,8 @@ object JobProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sys.env.get("SPARK_GRAFT_SCANFLOOR").foreach(v =>
-      spark.conf.set("spark.graft.scanFloor", v))
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     // ad-hoc conf overrides: SPARK_GRAFT_CONF="k=v;k=v" (malformed
     // entries — e.g. a trailing ';' — are skipped with a warning, not
     // a MatchError)
@@ -39,8 +31,6 @@ object JobProfile {
           s"SPARK_GRAFT_CONF entry: '$kv'")
       }
     })
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => }
     try spark.read.parquet(s"$sfDir/events.parquet").count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.cep.{Cep, PatternDef, Step}
@@ -22,14 +22,8 @@ object ThroughputBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val ss: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    ss.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.GraftSession.cpus
+    val ss = graft.GraftSession("ERROR")
     import ss.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     implicit val evtEnc: Encoder[TpEvt] = Encoders.product[TpEvt]
