@@ -1,7 +1,10 @@
 package graft.cep
 
+import org.apache.spark.{SparkConf, SparkEnv}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
 import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Batch and streaming executors for [[PatternDef]] over keyed event
   * datasets. One NFA kernel ([[Nfa]]), two execution modes:
@@ -20,6 +23,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   *    them, so out-of-order arrival within the watermark delay is
   *    handled identically to the reference. Watermark advance also
   *    drives absence (`not … for`) resolution via [[Nfa.advanceTime]].
+  *    It is the only streaming executor: every streaming plan (the
+  *    `pattern:` dialect, programmatic and SQL MATCH_RECOGNIZE) runs
+  *    on it, on any state store provider.
   *
   * Scale: state per key = unreleased event buffer (bounded by watermark
   * delay × rate) + live partials (bounded by `maxPartialMatches`).
@@ -68,8 +74,9 @@ object Cep {
     }
   }
 
-  /** Streaming state: event-time buffer + NFA partials. Kryo-encoded —
-    * internal state only, never crosses the query boundary.
+  /** Streaming state: event-time buffer + NFA partials. Kryo-encoded
+    * ([[encodeState]]) — internal state only, never crosses the query
+    * boundary.
     */
   final case class CepState[E](
       buffer: Vector[E],
@@ -145,17 +152,8 @@ object Cep {
     * checkpoint written by an older [[CepState]] shape either throws
     * inside kryo or decodes into a wrong-version object — both
     * surface here as one actionable error (fresh checkpointLocation)
-    * instead of silent state corruption mid-stream.
-    *
-    * Coverage caveat (documented in DIALECT.md): the decode-failure arm
-    * is guaranteed only on the transformWithState executor, whose state
-    * reads are lazy (`st.get()` runs inside this guard). On
-    * flatMapGroupsWithState Spark's stateManager deserializes the kryo
-    * blob EAGERLY before the user function is invoked, so a
-    * layout-incompatible checkpoint throws raw kryo there and never
-    * reaches this try — best-effort on that executor; the
-    * version-mismatch arm (structurally decodable foreign state) is
-    * guarded on both. */
+    * instead of silent state corruption mid-stream. `read` runs inside
+    * the guard, so [[restoredBytes]]' kryo decode is covered. */
   private[graft] def restored[E](expectFp: Long, strict: Boolean = false)(
       read: => Option[CepState[E]]): CepState[E] = {
     def incompat(cause: Throwable): Nothing =
@@ -191,6 +189,33 @@ object Cep {
         st
     }
   }
+
+  /** The executor's restore: decode the stored bytes with
+    * [[decodeState]] inside [[restored]]'s guard. */
+  private[graft] def restoredBytes[E](expectFp: Long, strict: Boolean = false)(
+      bytes: Option[Array[Byte]]): CepState[E] =
+    restored[E](expectFp, strict)(bytes.map(decodeState[E]))
+
+  // kryo instances are not thread-safe and costly to build: one per
+  // thread, created the way Encoders.kryo's generated code does
+  private val kryo = ThreadLocal.withInitial[SerializerInstance](() =>
+    new KryoSerializer(Option(SparkEnv.get).map(_.conf)
+      .getOrElse(new SparkConf)).newInstance())
+
+  /** Kryo bytes of a [[CepState]] — the same encoding `Encoders.kryo`
+    * writes. The executor keeps state as `Encoders.BINARY` and runs
+    * this codec itself, so decoding happens inside [[restored]]. */
+  private[graft] def encodeState[E](st: CepState[E]): Array[Byte] =
+    JavaUtils.bufferToArray(kryo.get.serialize[AnyRef](st))
+
+  private[graft] def decodeState[E](bytes: Array[Byte]): CepState[E] =
+    kryo.get.deserialize[AnyRef](java.nio.ByteBuffer.wrap(bytes)) match {
+      case st: CepState[E @unchecked] => st
+      case other => throw new IllegalStateException(
+        "streaming state decoded to " +
+          Option(other).map(_.getClass.getName).orNull +
+          ", not a CepState")
+    }
 
   /** Fingerprint stored with (and checked against) streaming state: the
     * compiled-automaton layout alone by default; under strict restore
@@ -541,7 +566,7 @@ object Cep {
       nextFlushHorizon: Option[Long] = None,
       restoreSalt: Long = 0L)(
       build: (K, PatternMatch[E]) => IterableOnce[O]): Dataset[O] = {
-    implicit val stateEnc: Encoder[CepState[E]] = Encoders.kryo[CepState[E]]
+    implicit val stateEnc: Encoder[Array[Byte]] = Encoders.BINARY
     // PREV/NEXT composes with absence elements: step() caps the
     // watermark advance at the NEXT hold-back frontier, so no absence
     // window resolves while a withheld event could still violate it
@@ -551,8 +576,8 @@ object Cep {
     val layoutFp = storedFp(pattern.layoutFp, restoreSalt)
     val strictG = restoreSalt != 0L
 
-    val fn = (k: K, it: Iterator[E], state: GroupState[CepState[E]]) => {
-      val prev = restored(layoutFp, strictG)(state.getOption)
+    val fn = (k: K, it: Iterator[E], state: GroupState[Array[Byte]]) => {
+      val prev = restoredBytes[E](layoutFp, strictG)(state.getOption)
       val wmMs = state.getCurrentWatermarkMs()
       val wm = wmMs * tsScale // watermark in event-time units
 
@@ -564,7 +589,7 @@ object Cep {
       next match {
         case None => state.remove()
         case Some(ns) =>
-          state.update(ns.copy(layoutFp = layoutFp))
+          state.update(encodeState(ns.copy(layoutFp = layoutFp)))
           // wake this key when its earliest pending work becomes
           // releasable: the oldest buffered event, the earliest partial
           // expiry, or the earliest armed absence deadline
@@ -578,81 +603,5 @@ object Cep {
 
     ds.groupByKey(key).flatMapGroupsWithState(
       OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
-
-  /** The same streaming executor on Spark's `transformWithState`
-    * StatefulProcessor API (the successor to flatMapGroupsWithState:
-    * named state variables, first-class event-time timers, TTL) — the
-    * primitive SURVEY §2.A5 maps the reference's operator onto. Both
-    * executors drive the SAME pure [[step]] kernel, so the chunking
-    * property holds for either; this one replaces the wake-up
-    * set-timeout dance with real `registerTimer`/`handleExpiredTimer`
-    * callbacks (multiple pending deadlines coexist instead of one
-    * min-timeout per key).
-    *
-    * Requires the RocksDB state store (multiple column families):
-    * `spark.sql.streaming.stateStore.providerClass =
-    * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
-    * — also the provider you want at 100 TB (state spills to local disk
-    * instead of living on the executor heap like HDFSBackedStateStore).
-    */
-  def streamingTws[E, K: Encoder, O: Encoder](
-      ds: Dataset[E],
-      key: E => K,
-      pattern: PatternDef[E],
-      tsOf: E => Long,
-      tieBreak: E => Long,
-      tsScale: Long = 1L,
-      neighborhood: Option[Neighborhood[E]] = None,
-      unmatchedWithin: Option[Long] = None,
-      numberMatches: Boolean = false,
-      nextFlushHorizon: Option[Long] = None,
-      restoreSalt: Long = 0L)(
-      build: (K, PatternMatch[E]) => IterableOnce[O]): Dataset[O] = {
-    // PREV/NEXT composes with absence elements: step() caps the
-    // watermark advance at the NEXT hold-back frontier (see streaming)
-
-    val layoutFp = storedFp(pattern.layoutFp, restoreSalt)
-    val strictG = restoreSalt != 0L
-
-    class CepProcessor extends StatefulProcessor[K, E, O] {
-      @transient private var st: ValueState[CepState[E]] = _
-
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        st = getHandle.getValueState[CepState[E]]("cep",
-          Encoders.kryo[CepState[E]], TTLConfig.NONE)
-
-      private def run(k: K, incoming: Seq[E],
-          timers: TimerValues): Iterator[O] = {
-        val wmMs = timers.getCurrentWatermarkInMs()
-        val prev = restored(layoutFp, strictG)(
-          if (st.exists()) Some(st.get()) else None)
-        val (next, matches, wake) = step(
-          prev, incoming, wmMs * tsScale, hasWatermark = wmMs > 0,
-          pattern, tsOf, tieBreak, neighborhood, unmatchedWithin,
-          numberMatches, nextFlushHorizon)
-        next match {
-          case None => st.clear()
-          case Some(ns) =>
-            st.update(ns.copy(layoutFp = layoutFp))
-            // one timer per distinct future instant; stale timers fire
-            // harmless no-op steps (step(Nil) is idempotent at a given
-            // watermark), so no delete bookkeeping is needed
-            wake.map(w => math.max(wmMs + 1, w / tsScale)).distinct
-              .foreach(getHandle.registerTimer)
-        }
-        matches.iterator.flatMap(build(k, _))
-      }
-
-      override def handleInputRows(k: K, rows: Iterator[E],
-          timers: TimerValues): Iterator[O] = run(k, rows.toVector, timers)
-
-      override def handleExpiredTimer(k: K, timers: TimerValues,
-          expired: ExpiredTimerInfo): Iterator[O] =
-        if (st.exists()) run(k, Nil, timers) else Iterator.empty
-    }
-
-    ds.groupByKey(key).transformWithState(
-      new CepProcessor, TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -828,6 +828,58 @@ object MatchRecognize {
         maxPartials, skipPastLastRow),
       df.columns.toIndexedSeq, slotNamesOf(pattern))
 
+  /** The DEFINE predicate of every variable occurrence in `pattern`, in
+    * the order the streaming builders lay out their flag slots. */
+  private def streamPredCols(pattern: Seq[Elem]): Seq[Column] =
+    pattern.flatMap {
+      case EStep(_, p, _, _, _) => Seq(p)
+      case EAnd(_, lp, _, rp)   => Seq(lp, rp)
+      case EOr(_, lp, _, rp)    => Seq(lp, rp)
+      case ENotFor(_, p, _)     => Seq(p)
+      case EGroup(ss, _, _)     => ss.map(_._2)
+      case EPermute(ss)         => ss.map(_._2)
+      case EPermuteQ(ss, _, _)  => ss.map(_._2)
+      case EOrQ(_, lp, _, rp, _, _) => Seq(lp, rp)
+      case EGroupN(items, _, _) => items.flatMap {
+        case EGStep(_, pc) => Seq(pc)
+        case EGAlt(_, lp, _, rp) => Seq(lp, rp)
+        case EGPerm(ss) => ss.map(_._2)
+      }
+      case ERx(root) => erxOccs(root).map(_._2)
+    }
+
+  /** The streaming NFA elements of `pattern`. `flagStep(name, min, max,
+    * strict)` builds one variable's step and is called once per
+    * occurrence in [[streamPredCols]] order, so a caller counting its
+    * calls consumes the matching flag slot. */
+  private def streamElems(pattern: Seq[Elem],
+      flagStep: (String, Int, Int, Boolean) => graft.cep.Step[Row])
+      : IndexedSeq[graft.cep.PatternElem[Row]] = {
+    import graft.cep.{Absence, AltSeq, GAlt, GPerm, GroupSeq, GVar, Logical, NestedGroup, PermSeq, Permute, RxElem}
+    def one(n: String) = flagStep(n, 1, 1, false)
+    pattern.map {
+      case EStep(n, _, mn, mx, st) => flagStep(n, mn, mx, st)
+      case EAnd(ln, _, rn, _) => Logical[Row](one(ln), one(rn), isAnd = true)
+      case EOr(ln, _, rn, _) => Logical[Row](one(ln), one(rn), isAnd = false)
+      case ENotFor(n, _, f) => Absence[Row](one(n), f)
+      case EGroup(ss, mn, mx) =>
+        GroupSeq[Row](ss.map(x => one(x._1)).toIndexedSeq, mn, mx)
+      case EPermute(ss) => Permute[Row](ss.map(x => one(x._1)).toIndexedSeq)
+      case EPermuteQ(ss, mn, mx) =>
+        PermSeq[Row](ss.map(x => one(x._1)).toIndexedSeq, mn, mx)
+      case EOrQ(ln, _, rn, _, mn, mx) => AltSeq[Row](one(ln), one(rn), mn, mx)
+      case EGroupN(items, mn, mx) =>
+        NestedGroup[Row](items.map {
+          case EGStep(n, _) => GVar[Row](one(n))
+          case EGAlt(l, _, r, _) => GAlt[Row](one(l), one(r))
+          case EGPerm(ss) => GPerm[Row](ss.map(x => one(x._1)).toIndexedSeq)
+        }.toIndexedSeq, mn, mx)
+      case ERx(root) =>
+        // occurrence order == streamPredCols order
+        RxElem[Row](rxFromSpec[Row](erxSpec(root), one))
+    }.toIndexedSeq
+  }
+
   /** Streaming MATCH_RECOGNIZE: the SAME [[Elem]] surface over an
     * unbounded stream, executed on [[graft.cep.Cep.streaming]]
     * (watermark-buffered ordered release + checkpointed NFA state).
@@ -844,41 +896,23 @@ object MatchRecognize {
     *                     through so the stateful op sees the watermark
     * @param tsScale      event-time units of `tsCol` per watermark
     *                     millisecond (µs ts → 1000)
-    * @param useTws       run on [[graft.cep.Cep.streamingTws]]
-    *                     (transformWithState + RocksDB state store)
-    *                     instead of flatMapGroupsWithState
     */
   def streaming(df: DataFrame, partitionKeys: Seq[String], tsCol: String,
       tieCol: String, pattern: Seq[Elem], eventTimeCol: String,
       withinTs: Option[Long] = None, every: Boolean = true,
       maxPartials: Int = 1024, tsScale: Long = 1L,
-      useTws: Boolean = false, skipPastLastRow: Boolean = false,
+      skipPastLastRow: Boolean = false,
       skipToVar: Option[(String, Boolean)] = None): DataFrame = {
     val everyMatch = every // functions._ would shadow the parameter
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
-    import graft.cep.{Absence, Cep, GroupSeq, Logical, PatternDef, PatternElem, Step}
+    import graft.cep.{Cep, PatternDef, Step}
     require(df.isStreaming, "streaming() needs a streaming DataFrame; " +
       "use MatchRecognize(...) for batch")
 
-    val predCols: Seq[Column] = pattern.flatMap {
-      case EStep(_, p, _, _, _) => Seq(p)
-      case EAnd(_, lp, _, rp)   => Seq(lp, rp)
-      case EOr(_, lp, _, rp)    => Seq(lp, rp)
-      case ENotFor(_, p, _)     => Seq(p)
-      case EGroup(ss, _, _)     => ss.map(_._2)
-      case EPermute(ss)         => ss.map(_._2)
-      case EPermuteQ(ss, _, _)  => ss.map(_._2)
-      case EOrQ(_, lp, _, rp, _, _) => Seq(lp, rp)
-      case EGroupN(items, _, _) => items.flatMap {
-        case EGStep(_, pc) => Seq(pc)
-        case EGAlt(_, lp, _, rp) => Seq(lp, rp)
-        case EGPerm(ss) => ss.map(_._2)
-      }
-      case ERx(root) => erxOccs(root).map(_._2)
-    }
+    val predCols = streamPredCols(pattern)
     requireNoCtxRefs(df.sparkSession, predCols, "streaming()")
     val flags = array(predCols.map(p => coalesce(p.cast("boolean"),
       lit(false))): _*)
@@ -897,45 +931,7 @@ object MatchRecognize {
       val i = idx()
       Step[Row](name, _.getSeq[Boolean](3)(i), min, max, strict)
     }
-    val pElems: IndexedSeq[PatternElem[Row]] = pattern.map {
-      case EStep(n, _, mn, mx, st) => flagStep(n, mn, mx, st)
-      case EAnd(ln, _, rn, _) =>
-        Logical[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), isAnd = true)
-      case EOr(ln, _, rn, _) =>
-        Logical[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), isAnd = false)
-      case ENotFor(n, _, f) =>
-        Absence[Row](flagStep(n, 1, 1, strict = false), f)
-      case EGroup(ss, mn, mx) =>
-        GroupSeq[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-      case EPermute(ss) =>
-        graft.cep.Permute[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq)
-      case EPermuteQ(ss, mn, mx) =>
-        graft.cep.PermSeq[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-      case EOrQ(ln, _, rn, _, mn, mx) =>
-        graft.cep.AltSeq[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), mn, mx)
-      case EGroupN(items, mn, mx) =>
-        graft.cep.NestedGroup[Row](items.map {
-          case EGStep(n, _) =>
-            graft.cep.GVar[Row](flagStep(n, 1, 1, strict = false))
-          case EGAlt(l, _, r, _) =>
-            graft.cep.GAlt[Row](flagStep(l, 1, 1, strict = false),
-              flagStep(r, 1, 1, strict = false))
-          case EGPerm(ss) =>
-            graft.cep.GPerm[Row](ss.map(x =>
-              flagStep(x._1, 1, 1, strict = false)).toIndexedSeq)
-        }.toIndexedSeq, mn, mx)
-      case ERx(root) =>
-        // occurrence order == predCols order, so each flagStep call
-        // consumes the matching flag slot
-        graft.cep.RxElem[Row](rxFromSpec[Row](erxSpec(root),
-          nm => flagStep(nm, 1, 1, strict = false)))
-    }.toIndexedSeq
+    val pElems = streamElems(pattern, flagStep)
     val pat = PatternDef[Row](pElems, withinTs, everyMatch, maxPartials,
       skipPastLastRow, skipToVar)
     // (binds-only streaming() keeps the plain-variable skip modes; the
@@ -955,14 +951,9 @@ object MatchRecognize {
         (k.toSeq ++ Seq(m.startTs, m.endTs, binds)).toArray,
         outSchema): Row)
     }
-    val out =
-      if (useTws) Cep.streamingTws[Row, Row, Row](
-        env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-        tsScale)(build)(kEnc, oEnc)
-      else Cep.streaming[Row, Row, Row](
-        env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-        tsScale)(build)(kEnc, oEnc)
-    out.toDF()
+    Cep.streaming[Row, Row, Row](
+      env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
+      tsScale)(build)(kEnc, oEnc).toDF()
   }
 
   /** Streaming MATCH_RECOGNIZE with the BATCH operator's output schema:
@@ -970,7 +961,8 @@ object MatchRecognize {
     * step name`, each array holding the FULL input rows bound to that
     * step — so SQL MEASURES (`var.col`, FIRST/LAST/SUM/AVG/COUNT)
     * compile identically over batch and streaming input. This is the
-    * dispatch target for streaming `MATCH_RECOGNIZE` SQL statements.
+    * dispatch target for streaming `MATCH_RECOGNIZE` SQL statements,
+    * executed like [[streaming]] on [[graft.cep.Cep.streaming]].
     *
     * Costs more state than [[streaming]] (whole rows ride in the keyed
     * buffer and in live partials instead of a (ts, tie) pair per bind) —
@@ -981,8 +973,8 @@ object MatchRecognize {
     *
     * Reference anchor: dynamic plans carry patterns over live streams
     * (router/AddRouteOperator.java:114-126).
-    */
-  /** @param lagSpecs SQL:2016 PREV/NEXT navigation used by the DEFINE
+    *
+    * @param lagSpecs SQL:2016 PREV/NEXT navigation used by the DEFINE
     *                  predicates: `(kind, column, n)` with kind
     *                  "prev"/"next" — each becomes the synthetic
     *                  predicate input `_mr_<kind>_<column>_<n>`, fed
@@ -991,15 +983,14 @@ object MatchRecognize {
     *                  PREV reads the retained `maxPrev` predecessors
     *                  (NULL at the key's start, matching batch lag);
     *                  NEXT withholds each event until its `n`
-    *                  successors are released. Both streaming
-    *                  executors (the decorator rides the shared step
-    *                  kernel).
+    *                  successors are released (the decorator rides
+    *                  the [[graft.cep.Cep.step]] kernel).
     */
   def streamingFull(df: DataFrame, partitionKeys: Seq[String], tsCol: String,
       tieCol: String, pattern: Seq[Elem], eventTimeCol: String,
       withinTs: Option[Long] = None, every: Boolean = true,
       maxPartials: Int = 1024, tsScale: Long = 1L,
-      useTws: Boolean = false, skipPastLastRow: Boolean = false,
+      skipPastLastRow: Boolean = false,
       lagSpecs: Seq[(String, String, Int)] = Nil,
       /** AFTER MATCH SKIP TO [FIRST|LAST] <var> — the streaming NFA
         * receives the (ts, tie) row identity, so the same greedy
@@ -1011,7 +1002,7 @@ object MatchRecognize {
         * (resume row = the members' merged (ts, tie) first/last). */
       skipToMembers: Option[Seq[String]] = None,
       /** SQL:2016 WITH UNMATCHED ROWS on a stream (needs `withinTs` —
-        * the decision horizon; both executors). Adds a nullable
+        * the decision horizon). Adds a nullable
         * `_mr_unmatched_ev` output column and makes the match bounds
         * nullable: an unmatched input row emits as `(keys, NULL,
         * NULL, empty slots…, ev)` once the watermark passes its
@@ -1030,8 +1021,7 @@ object MatchRecognize {
         * unmatched rows. */
       withMatchSeq: Boolean = false,
       /** ISO contiguous matching (MODE STRICT) — see
-        * [[graft.cep.PatternDef.strictAll]]; the same flag drives both
-        * executors through the shared step kernel. */
+        * [[graft.cep.PatternDef.strictAll]]. */
       strictAll: Boolean = false,
       /** MEASURES-side PREV/NEXT navigation: keep the decorator-filled
         * `_mr_<kind>_<col>_<k>` lag values in the emitted slot structs
@@ -1051,11 +1041,11 @@ object MatchRecognize {
         * restore — see [[graft.cep.Cep.storedFp]]). */
       restoreSalt: Long = 0L): DataFrame = {
     val everyMatch = every
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StructField, StructType}
-    import graft.cep.{Absence, Cep, GroupSeq, Logical, PatternDef, PatternElem, Step}
+    import graft.cep.{Cep, PatternDef, Step}
     require(df.isStreaming, "streamingFull() needs a streaming DataFrame; " +
       "use MatchRecognize(...) for batch")
     require(!withUnmatched || withinTs.isDefined,
@@ -1078,22 +1068,7 @@ object MatchRecognize {
         s"PREV/NEXT column '$c' not in [${df.columns.mkString(", ")}]")
     }
 
-    val predCols: Seq[Column] = pattern.flatMap {
-      case EStep(_, p, _, _, _) => Seq(p)
-      case EAnd(_, lp, _, rp)   => Seq(lp, rp)
-      case EOr(_, lp, _, rp)    => Seq(lp, rp)
-      case ENotFor(_, p, _)     => Seq(p)
-      case EGroup(ss, _, _)     => ss.map(_._2)
-      case EPermute(ss)         => ss.map(_._2)
-      case EPermuteQ(ss, _, _)  => ss.map(_._2)
-      case EOrQ(_, lp, _, rp, _, _) => Seq(lp, rp)
-      case EGroupN(items, _, _) => items.flatMap {
-        case EGStep(_, pc) => Seq(pc)
-        case EGAlt(_, lp, _, rp) => Seq(lp, rp)
-        case EGPerm(ss) => ss.map(_._2)
-      }
-      case ERx(root) => erxOccs(root).map(_._2)
-    }
+    val predCols = streamPredCols(pattern)
     val rowType = df.schema
     // cross-variable references (cvFirst/cvLast markers): resolved per
     // predicate; ref-bearing predicates evaluate INSIDE the NFA (the
@@ -1220,45 +1195,7 @@ object MatchRecognize {
           strict, ctxPred = Some(ev))
       }
     }
-    val pElems: IndexedSeq[PatternElem[Row]] = pattern.map {
-      case EStep(n, _, mn, mx, st) => flagStep(n, mn, mx, st)
-      case EAnd(ln, _, rn, _) =>
-        Logical[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), isAnd = true)
-      case EOr(ln, _, rn, _) =>
-        Logical[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), isAnd = false)
-      case ENotFor(n, _, f) =>
-        Absence[Row](flagStep(n, 1, 1, strict = false), f)
-      case EGroup(ss, mn, mx) =>
-        GroupSeq[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-      case EPermute(ss) =>
-        graft.cep.Permute[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq)
-      case EPermuteQ(ss, mn, mx) =>
-        graft.cep.PermSeq[Row](ss.map(x =>
-          flagStep(x._1, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-      case EOrQ(ln, _, rn, _, mn, mx) =>
-        graft.cep.AltSeq[Row](flagStep(ln, 1, 1, strict = false),
-          flagStep(rn, 1, 1, strict = false), mn, mx)
-      case EGroupN(items, mn, mx) =>
-        graft.cep.NestedGroup[Row](items.map {
-          case EGStep(n, _) =>
-            graft.cep.GVar[Row](flagStep(n, 1, 1, strict = false))
-          case EGAlt(l, _, r, _) =>
-            graft.cep.GAlt[Row](flagStep(l, 1, 1, strict = false),
-              flagStep(r, 1, 1, strict = false))
-          case EGPerm(ss) =>
-            graft.cep.GPerm[Row](ss.map(x =>
-              flagStep(x._1, 1, 1, strict = false)).toIndexedSeq)
-        }.toIndexedSeq, mn, mx)
-      case ERx(root) =>
-        // occurrence order == predCols order, so each flagStep call
-        // consumes the matching flag slot
-        graft.cep.RxElem[Row](rxFromSpec[Row](erxSpec(root),
-          nm => flagStep(nm, 1, 1, strict = false)))
-    }.toIndexedSeq
+    val pElems = streamElems(pattern, flagStep)
     // referenced variables must exist in the pattern (typo guard —
     // the batch builder enforces the same)
     val cvVars = resolvedPreds.flatMap(_._2.map(_.varName))
@@ -1344,16 +1281,10 @@ object MatchRecognize {
       Iterator.single(row)
     }
     val unWithin = if (withUnmatched) withinTs else None
-    val out =
-      if (useTws) Cep.streamingTws[Row, Row, Row](
-        env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-        tsScale, neighborhood, unWithin, withMatchSeq,
-        nextFlushWithin, restoreSalt)(build)(kEnc, oEnc)
-      else Cep.streaming[Row, Row, Row](
-        env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-        tsScale, neighborhood, unWithin, withMatchSeq,
-        nextFlushWithin, restoreSalt)(build)(kEnc, oEnc)
-    out.toDF()
+    Cep.streaming[Row, Row, Row](
+      env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
+      tsScale, neighborhood, unWithin, withMatchSeq,
+      nextFlushWithin, restoreSalt)(build)(kEnc, oEnc).toDF()
   }
 
   /** The streaming cross-variable predicate evaluator: per

@@ -78,14 +78,7 @@ object ThroughputBench {
           $"user_id".cast("string")))
         .as[TpEvt])
 
-    // CEP pattern: click -> purchase per user (watermarked event time);
-    // SPARK_GRAFT_TP_TWS=1 measures the transformWithState executor
-    // (requires the RocksDB state store) instead of fMGWS
-    val useTws = sys.env.get("SPARK_GRAFT_TP_TWS").contains("1")
-    if (useTws)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
+    // CEP pattern: click -> purchase per user (watermarked event time)
     val pat = PatternDef[TpEvt](IndexedSeq(
       Step[TpEvt]("a", _.event_type == "click"),
       Step[TpEvt]("b", _.event_type == "purchase")),
@@ -97,12 +90,8 @@ object ThroughputBench {
       .withColumn("etc", timestamp_micros($"ts_us"))
       .withWatermark("etc", "1 second").as[TpEvt]
     val cepEps = drive[TpOut](memSink("tp_cep"), in =>
-      if (useTws)
-        Cep.streamingTws[TpEvt, Long, TpOut](cepInput(in),
-          _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L)(build)
-      else
-        Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
-          _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L)(build))
+      Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
+        _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L)(build))
 
     // the round-11 quantified-group element on the same workload —
     // (click purchase){1,2} per user; per-event cost adds the group's
@@ -154,14 +143,9 @@ object ThroughputBench {
     val buildNum = (k: Long, m: graft.cep.PatternMatch[TpEvt]) =>
       Iterator.single(TpOut(k, m.seq, m.head("b").event_id))
     val mnEps = drive[TpOut](memSink("tp_cep_matchnum"), in =>
-      if (useTws)
-        Cep.streamingTws[TpEvt, Long, TpOut](cepInput(in),
-          _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
-          numberMatches = true)(buildNum)
-      else
-        Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
-          _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
-          numberMatches = true)(buildNum))
+      Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
+        _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
+        numberMatches = true)(buildNum))
 
     // streaming cross-variable DEFINE (the interpreted per-partial
     // evaluator on the full-row streamingFull envelope): purchase
@@ -182,41 +166,18 @@ object ThroughputBench {
           tsScale = 1000L)
       })
 
-    // round-13 TWS rows (measured under SPARK_GRAFT_TP_TWS=1, RocksDB
-    // provider set above): the transformWithState executor on the two
-    // late-lifted paths — WITH UNMATCHED ROWS tracking (every
-    // non-click/purchase event rides the undecided buffer and emits a
-    // pseudo-row at its horizon — the output-heaviest CEP shape) and
-    // the interpreted cross-variable evaluator on the full-row
-    // streamingFull envelope. Both ride the same Cep.step kernel.
+    // WITH UNMATCHED ROWS tracking: every non-click/purchase event
+    // rides the undecided buffer and emits a pseudo-row at its horizon
+    // — the output-heaviest CEP shape
     val buildUn = (k: Long, m: graft.cep.PatternMatch[TpEvt]) =>
       Iterator.single(
         if (m.groups.contains(Cep.UnmatchedSlot))
           TpOut(k, -1L, m.head(Cep.UnmatchedSlot).event_id)
         else TpOut(k, m.head("a").event_id, m.head("b").event_id))
-    val twsUnmatchedEps =
-      if (!useTws) 0.0
-      else drive[TpOut](memSink("tp_tws_unmatched"), in =>
-        Cep.streamingTws[TpEvt, Long, TpOut](cepInput(in),
-          _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
-          unmatchedWithin = Some(600000000L))(buildUn))
-    val twsCvEps =
-      if (!useTws) 0.0
-      else drive[org.apache.spark.sql.Row](
-        memSink("tp_tws_crossvar"), in => {
-          val df = in.toDS().toDF()
-            .withColumn("etc", timestamp_micros($"ts_us"))
-            .withWatermark("etc", "1 second")
-          graft.plans.MatchRecognize.streamingFull(df, Seq("user_id"),
-            "ts_us", "event_id",
-            Seq(graft.plans.MatchRecognize.EStep("a",
-                $"event_type" === "click"),
-              graft.plans.MatchRecognize.EStep("b",
-                ($"event_type" === "purchase") && ($"value" >
-                  graft.plans.MatchRecognize.cvLast("a", "value")))),
-            eventTimeCol = "etc", withinTs = Some(600000000L),
-            tsScale = 1000L, useTws = true)
-        })
+    val unmatchedEps = drive[TpOut](memSink("tp_cep_unmatched"), in =>
+      Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
+        _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
+        unmatchedWithin = Some(600000000L))(buildUn))
 
     // watermark-finalized anomaly scorer: keyed state per type is an
     // open-bucket map + 24 longs — measured as sustained events/s
@@ -311,10 +272,8 @@ object ThroughputBench {
       s""""cep_matchnum_per_core":${(mnEps / cpus).round},""" +
       s""""cep_crossvar":${cvEps.round},""" +
       s""""cep_crossvar_per_core":${(cvEps / cpus).round},""" +
-      s""""tws_unmatched":${twsUnmatchedEps.round},""" +
-      s""""tws_unmatched_per_core":${(twsUnmatchedEps / cpus).round},""" +
-      s""""tws_crossvar":${twsCvEps.round},""" +
-      s""""tws_crossvar_per_core":${(twsCvEps / cpus).round},""" +
+      s""""cep_unmatched":${unmatchedEps.round},""" +
+      s""""cep_unmatched_per_core":${(unmatchedEps / cpus).round},""" +
       s""""rate_anomaly":${anomEps.round},""" +
       s""""rate_anomaly_per_core":${(anomEps / cpus).round},""" +
       s""""n_docs":${docFeed.length},""" +

@@ -74,9 +74,10 @@ class CepSparkSpec extends SparkSpec {
       .start()
     try {
       // user 1: A then no B — alert at 1000+10000; user 2: A then B
-      // inside the window — suppressed
-      input.addData(TEvt(1, 1000, 1, "A"), TEvt(2, 2000, 2, "A"),
-        TEvt(3, 4000, 2, "B"))
+      // inside the window — suppressed. Intra-batch disorder: user 2's
+      // B arrives ahead of both A's
+      input.addData(TEvt(3, 4000, 2, "B"), TEvt(1, 1000, 1, "A"),
+        TEvt(2, 2000, 2, "A"))
       q.processAllAvailable()
       // watermark far past both deadlines; no further events on key 1 —
       // emission must come from the timer path
@@ -87,48 +88,6 @@ class CepSparkSpec extends SparkSpec {
       val got = spark.table("cep_abs").as[TOut].collect().toSet
       assert(got == Set(TOut(1, 1, 11000L)))
     } finally q.stop()
-  }
-
-  test("transformWithState executor: out-of-order release + absence " +
-      "timer parity with flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState needs column families => RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val absPat = PatternDef[TEvt](IndexedSeq(
-      Step[TEvt]("a", _.typ == "A"),
-      Absence(Step[TEvt]("nb", _.typ == "B"), forMs = 10000L)))
-    val input = MemoryStream[TEvt]
-    val withTs = input.toDS()
-      .withColumn("ts", timestamp_millis($"ts_ms"))
-      .withWatermark("ts", "2 seconds")
-      .as[TEvt]
-    val out = Cep.streamingTws[TEvt, Long, TOut](
-      withTs, _.user, absPat, _.ts_ms, _.id) {
-      (k, m) => Iterator.single(TOut(k, m.head("a").id, m.endTs))
-    }
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("cep_tws")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cep_tws_ck").toString)
-      .start()
-    try {
-      // intra-batch disorder: the A arrives after an unrelated later
-      // event; user 1's absence window must still fire via the TIMER
-      // path (no further events on that key), user 2's B suppresses
-      input.addData(TEvt(3, 4000, 2, "B"), TEvt(1, 1000, 1, "A"),
-        TEvt(2, 2000, 2, "A"))
-      q.processAllAvailable()
-      input.addData(TEvt(99, 100000L, 99, "X"))
-      q.processAllAvailable()
-      input.addData(TEvt(98, 200000L, 98, "X"))
-      q.processAllAvailable()
-      val got = spark.table("cep_tws").as[TOut].collect().toSet
-      assert(got == Set(TOut(1, 1, 11000L)))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 
   test("streaming executor in a microsecond event-time domain (tsScale)") {
@@ -234,7 +193,7 @@ class CepSparkSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("tws/RocksDB checkpoint restart MID-HOLD (NEXT hold-back + " +
+  test("checkpoint restart MID-HOLD (NEXT hold-back + " +
       "MATCH_NUMBER fence populated) replays the identical numbered " +
       "sequence") {
     // r17 VERDICT task 3 — the most state-shape-sensitive path after
@@ -242,7 +201,7 @@ class CepSparkSpec extends SparkSpec {
     // its lookahead successor) and `heldMatches` (a completed match
     // the MATCH_NUMBER fence is blocking on that very frontier) are
     // both CepState fields; kill the query while BOTH are populated,
-    // restart from the RocksDB checkpoint, and the restored run must
+    // restart from the checkpoint, and the restored run must
     // emit exactly what an uninterrupted run emits — numbers included.
     // Fixture = the NfaProps r16 regression shape: p completes first
     // but q's match (sorting FIRST in batch-key order) is still locked
@@ -250,9 +209,6 @@ class CepSparkSpec extends SparkSpec {
     // already be the bug.
     implicit val sqlCtx = spark.sqlContext
     import graft.cep.AltSeq
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val pat = PatternDef[TEvt](IndexedSeq(
       AltSeq[TEvt](Step[TEvt]("p", _.typ == "A"),
         Step[TEvt]("q", _.typ == "B"), 1, 1)),
@@ -280,7 +236,7 @@ class CepSparkSpec extends SparkSpec {
           .withColumn("ts", timestamp_millis($"ts_ms"))
           .withWatermark("ts", "2 seconds")
           .as[TEvt]
-        Cep.streamingTws[TEvt, Long, SeqOut](
+        Cep.streaming[TEvt, Long, SeqOut](
           withTs, _.user, pat, _.ts_ms, _.id,
           neighborhood = Some(nb), numberMatches = true)(build)
           .writeStream
@@ -301,7 +257,7 @@ class CepSparkSpec extends SparkSpec {
             emittedAtRestart = sink.values().iterator().asScala
               .map(_.size).sum
             q.stop()
-            q = startQuery() // resume from the RocksDB checkpoint
+            q = startQuery() // resume from the checkpoint
           }
         }
       } finally q.stop()
@@ -311,29 +267,25 @@ class CepSparkSpec extends SparkSpec {
             "before the restart point")
       sink.asScala.toSeq.sortBy(_._1).flatMap(_._2)
     }
-    try {
-      // uninterrupted control run
-      val control = runStages(Seq(feed1 -> false, feed2 -> false,
-        feed3 -> false, feed4 -> false))
-      // the control itself pins the fence semantics: q (held back
-      // longest) numbers FIRST, p second
-      assert(control.sortBy(_.seq) == Seq(SeqOut(1, 1, "q", 2),
-        SeqOut(1, 2, "p", 1)), s"control=$control")
-      // kill mid-hold: after feed2 the p-match sits in heldMatches and
-      // e2 sits in the NEXT hold-back — nothing may have been emitted
-      val restarted = runStages(Seq(feed1 -> false, feed2 -> true,
-        feed3 -> false, feed4 -> false))
-      assert(restarted.sortBy(_.seq) == control.sortBy(_.seq),
-        s"restart diverged: restarted=$restarted control=$control")
-      // and a second cut point: restart immediately after the
-      // successor feed (heldMatches carries BOTH matches)
-      val restarted2 = runStages(Seq(feed1 -> false, feed2 -> false,
-        feed3 -> true, feed4 -> false))
-      assert(restarted2.sortBy(_.seq) == control.sortBy(_.seq),
-        s"restart-2 diverged: restarted=$restarted2 control=$control")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    // uninterrupted control run
+    val control = runStages(Seq(feed1 -> false, feed2 -> false,
+      feed3 -> false, feed4 -> false))
+    // the control itself pins the fence semantics: q (held back
+    // longest) numbers FIRST, p second
+    assert(control.sortBy(_.seq) == Seq(SeqOut(1, 1, "q", 2),
+      SeqOut(1, 2, "p", 1)), s"control=$control")
+    // kill mid-hold: after feed2 the p-match sits in heldMatches and
+    // e2 sits in the NEXT hold-back — nothing may have been emitted
+    val restarted = runStages(Seq(feed1 -> false, feed2 -> true,
+      feed3 -> false, feed4 -> false))
+    assert(restarted.sortBy(_.seq) == control.sortBy(_.seq),
+      s"restart diverged: restarted=$restarted control=$control")
+    // and a second cut point: restart immediately after the
+    // successor feed (heldMatches carries BOTH matches)
+    val restarted2 = runStages(Seq(feed1 -> false, feed2 -> false,
+      feed3 -> true, feed4 -> false))
+    assert(restarted2.sortBy(_.seq) == control.sortBy(_.seq),
+      s"restart-2 diverged: restarted=$restarted2 control=$control")
   }
 
   test("a checkpoint restored under a different compiled-automaton " +
@@ -346,9 +298,6 @@ class CepSparkSpec extends SparkSpec {
     // rxCnt to initCnt). The stored PatternDef.layoutFp must fail the
     // restore loudly.
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     def pat(bMax: Int) = PatternDef[TEvt](IndexedSeq(
       Step[TEvt]("a", _.typ == "A"),
       Step[TEvt]("b", _.typ == "B", maxCount = bMax)),
@@ -364,7 +313,7 @@ class CepSparkSpec extends SparkSpec {
         .withColumn("ts", timestamp_millis($"ts_ms"))
         .withWatermark("ts", "2 seconds")
         .as[TEvt]
-      Cep.streamingTws[TEvt, Long, SeqOut](
+      Cep.streaming[TEvt, Long, SeqOut](
         withTs, _.user, p, _.ts_ms, _.id)(build)
         .writeStream
         .option("checkpointLocation", ck)
@@ -372,26 +321,47 @@ class CepSparkSpec extends SparkSpec {
             _: Long) => { b.collect(); () })
         .start()
     }
-    try {
-      // write state: the 'a' event leaves a live partial for key 1
-      val q1 = startQuery(pat(1))
-      input.addData(TEvt(1, 100000L, 1, "A"))
-      q1.processAllAvailable()
-      q1.stop()
-      // restart the SAME checkpoint with a structurally different
-      // pattern ({1,1} -> {1,2} changes the quantifier layout): the
-      // first touch of key 1's state must surface the layout error
-      val q2 = startQuery(pat(2))
-      input.addData(TEvt(2, 110000L, 1, "B"))
-      val ex = intercept[Exception] { q2.processAllAvailable() }
-      def chain(t: Throwable): List[Throwable] =
-        if (t == null) Nil else t :: chain(t.getCause)
-      assert(chain(ex).exists(t => t.getMessage != null &&
-          t.getMessage.contains("automaton layout")),
-        s"expected the layout-restore error, got:\n$ex")
-      q2.stop()
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // write state: the 'a' event leaves a live partial for key 1
+    val q1 = startQuery(pat(1))
+    input.addData(TEvt(1, 100000L, 1, "A"))
+    q1.processAllAvailable()
+    q1.stop()
+    // restart the SAME checkpoint with a structurally different
+    // pattern ({1,1} -> {1,2} changes the quantifier layout): the
+    // first touch of key 1's state must surface the layout error
+    val q2 = startQuery(pat(2))
+    input.addData(TEvt(2, 110000L, 1, "B"))
+    val ex = intercept[Exception] { q2.processAllAvailable() }
+    def chain(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: chain(t.getCause)
+    assert(chain(ex).exists(t => t.getMessage != null &&
+        t.getMessage.contains("automaton layout")),
+      s"expected the layout-restore error, got:\n$ex")
+    q2.stop()
+  }
+
+  test("state bytes that do not decode as a CepState fail the restore " +
+      "with the fresh-checkpoint error") {
+    // the executor's own restore path: stored bytes go through
+    // Cep.restoredBytes, whose kryo decode runs inside the guard
+    def incompat(bytes: Array[Byte]): Unit = {
+      val ex = intercept[IllegalStateException] {
+        Cep.restoredBytes[TEvt](0L)(Some(bytes))
+      }
+      assert(ex.getMessage.contains(
+          "incompatible (older) graft CepState schema") &&
+        ex.getMessage.contains("fresh checkpointLocation"), ex.getMessage)
     }
+    incompat(Array[Byte](1, 2, 3))   // truncated kryo stream
+    incompat(Array.fill[Byte](64)(-1))
+    // well-formed kryo of a foreign object
+    incompat(new org.apache.spark.serializer.KryoSerializer(
+      spark.sparkContext.getConf).newInstance()
+      .serialize[AnyRef]("not a CepState").array())
+    // and the codec round-trips real state through the same path
+    val st = Cep.CepState.empty[TEvt].copy(
+      buffer = Vector(TEvt(1, 1000, 1, "A")), layoutFp = 7L)
+    assert(Cep.restoredBytes[TEvt](7L)(Some(Cep.encodeState(st))) == st)
+    assert(Cep.restoredBytes[TEvt](7L)(None) == Cep.CepState.empty[TEvt])
   }
 }

@@ -472,12 +472,10 @@ class MatchRecognizeSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming MatchRecognize on the transformWithState executor " +
-      "(useTws) produces the same matches") {
+  test("streaming MatchRecognize without WITHIN: the watermark alone " +
+      "releases an intra-batch-disordered pair") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, Long, Long, String)]
     val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
       .withColumn("etc", timestamp_millis($"ts_ms"))
@@ -485,34 +483,29 @@ class MatchRecognizeSpec extends SparkSpec {
     val out = graft.plans.MatchRecognize.streaming(df, Seq("user"),
       "ts_ms", "event_id",
       Seq(EStep("a", $"typ" === "A"), EStep("b", $"typ" === "B")),
-      eventTimeCol = "etc", useTws = true)
+      eventTimeCol = "etc")
     val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("mr_tws").start()
+      .format("memory").queryName("mr_nowithin").start()
     try {
       input.addData((2L, 2000L, 1L, "B"), (1L, 1000L, 1L, "A"))
       q.processAllAvailable()
       input.addData((9L, 60000L, 9L, "X"))
       q.processAllAvailable()
-      val got = spark.table("mr_tws")
+      val got = spark.table("mr_nowithin")
         .select($"user", element_at($"binds", "a"), element_at($"binds", "b"))
         .as[(Long, Long, Long)].collect().toSet
       assert(got == Set((1L, 1L, 2L)))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally q.stop()
   }
 
-  test("round-12 elements on the transformWithState executor: nested " +
-      "group and skip-to-var match the fMGWS executor") {
+  test("round-12 elements on a stream: nested group and skip-to-var; " +
+      "cross-variable DEFINE with WITH UNMATCHED ROWS") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val rows = Seq(
       (1L, 1000L, 1L, "A"), (2L, 2000L, 1L, "B"),
       (3L, 3000L, 1L, "A"), (4L, 4000L, 1L, "C"), (5L, 5000L, 1L, "D"))
-    def run(useTws: Boolean): Set[(Long, Int, Long)] = {
+    def run(): Set[(Long, Int, Long)] = {
       val input = MemoryStream[(Long, Long, Long, String)]
       val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
         .withColumn("etc", timestamp_millis($"ts_ms"))
@@ -524,9 +517,9 @@ class MatchRecognizeSpec extends SparkSpec {
             MatchRecognize.EGAlt("b", $"typ" === "B",
               "c", $"typ" === "C")), 2, 2),
           EStep("d", $"typ" === "D")),
-        eventTimeCol = "etc", withinTs = Some(100000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(100000L),
         skipToVar = Some(("d", false)))
-      val name = s"mr_tws12_$useTws"
+      val name = "mr_r12_group"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -540,21 +533,20 @@ class MatchRecognizeSpec extends SparkSpec {
           .as[(Long, Int, Long)].collect().toSet
       } finally q.stop()
     }
-    def runUn(useTws: Boolean): Set[(Long, Option[Long], Long)] = {
+    def runUn(): Set[(Long, Option[Long], Long)] = {
       val input = MemoryStream[(Long, Long, Long, String)]
       val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
         .withColumn("etc", timestamp_millis($"ts_ms"))
         .withWatermark("etc", "10 seconds")
-      // cross-variable predicate + WITH UNMATCHED ROWS, both lifted
-      // onto the transformWithState executor this round
+      // cross-variable predicate + WITH UNMATCHED ROWS
       val out = graft.plans.MatchRecognize.streamingFull(df, Seq("user"),
         "ts_ms", "event_id",
         Seq(EStep("a", $"typ" === "A"),
           EStep("b", ($"typ" === "B") &&
             ($"event_id" > MatchRecognize.cvFirst("a", "event_id")))),
-        eventTimeCol = "etc", withinTs = Some(10000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(10000L),
         withUnmatched = true)
-      val name = s"mr_twsun_$useTws"
+      val name = "mr_r12_unmatched"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -570,18 +562,9 @@ class MatchRecognizeSpec extends SparkSpec {
           .as[(Long, Option[Long], Long)].collect().toSet
       } finally q.stop()
     }
-    try {
-      val tws = run(useTws = true)
-      val fm = run(useTws = false)
-      assert(tws == fm)
-      assert(tws == Set((1L, 2, 5L)))
-      val twsU = runUn(useTws = true)
-      val fmU = runUn(useTws = false)
-      assert(twsU == fmU)
-      // matched pair (a=1, b=2) plus the never-bound X row
-      assert(twsU == Set((1L, Some(1000L), 2L), (1L, None, 3L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert(run() == Set((1L, 2, 5L)))
+    // matched pair (a=1, b=2) plus the never-bound X row
+    assert(runUn() == Set((1L, Some(1000L), 2L), (1L, None, 3L)))
   }
 
   test("pattern anchors ^ and $: partition-boundary predicates on the " +
@@ -939,48 +922,37 @@ class MatchRecognizeSpec extends SparkSpec {
       "predicate agrees across both stateful executors") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val rows = Seq(
-        (1L, 1000L, 1L, "A"), (2L, 2000L, 1L, "B"),
-        (3L, 3000L, 1L, "A"), (4L, 4000L, 1L, "B"),
-        (5L, 1000L, 2L, "B"), (6L, 2000L, 2L, "A"), (7L, 3000L, 2L, "B"))
-      def run(useTws: Boolean): Set[(Long, Long, Long)] = {
-        val input = MemoryStream[(Long, Long, Long, String)]
-        val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
-          .withColumn("etc", timestamp_millis($"ts_ms"))
-          .withWatermark("etc", "10 seconds")
-        val out = MatchRecognize.streamingFull(df, Seq("user"),
-          "ts_ms", "event_id",
-          Seq(EStep("a", ($"typ" === "A") &&
-              col("_mr_prev_ts_ms_1").isNull),
-            EStep("b", $"typ" === "B")),
-          eventTimeCol = "etc", withinTs = Some(10000L),
-          useTws = useTws, lagSpecs = Seq(("prev", "ts_ms", 1)))
-        val name = s"mr_anchor_tws_$useTws"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try {
-          input.addData(rows: _*)
-          q.processAllAvailable()
-          input.addData((9L, 300000L, 9L, "X"))
-          q.processAllAvailable()
-          spark.table(name)
-            .select($"user",
-              element_at($"a", 1).getField("event_id").as("a_id"),
-              element_at($"b", 1).getField("event_id").as("b_id"))
-            .as[(Long, Long, Long)].collect().toSet
-        } finally q.stop()
-      }
-      val base = run(useTws = false)
-      // user 1 starts with A → anchored match; user 2 starts with B →
-      // none even though an A-B pair follows
-      assert(base == Set((1L, 1L, 2L)))
-      assert(run(useTws = true) == base)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val rows = Seq(
+      (1L, 1000L, 1L, "A"), (2L, 2000L, 1L, "B"),
+      (3L, 3000L, 1L, "A"), (4L, 4000L, 1L, "B"),
+      (5L, 1000L, 2L, "B"), (6L, 2000L, 2L, "A"), (7L, 3000L, 2L, "B"))
+    val input = MemoryStream[(Long, Long, Long, String)]
+    val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
+      .withColumn("etc", timestamp_millis($"ts_ms"))
+      .withWatermark("etc", "10 seconds")
+    val out = MatchRecognize.streamingFull(df, Seq("user"),
+      "ts_ms", "event_id",
+      Seq(EStep("a", ($"typ" === "A") &&
+          col("_mr_prev_ts_ms_1").isNull),
+        EStep("b", $"typ" === "B")),
+      eventTimeCol = "etc", withinTs = Some(10000L),
+      lagSpecs = Seq(("prev", "ts_ms", 1)))
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("mr_anchor_stream").start()
+    val got = try {
+      input.addData(rows: _*)
+      q.processAllAvailable()
+      input.addData((9L, 300000L, 9L, "X"))
+      q.processAllAvailable()
+      spark.table("mr_anchor_stream")
+        .select($"user",
+          element_at($"a", 1).getField("event_id").as("a_id"),
+          element_at($"b", 1).getField("event_id").as("b_id"))
+        .as[(Long, Long, Long)].collect().toSet
+    } finally q.stop()
+    // user 1 starts with A → anchored match; user 2 starts with B →
+    // none even though an A-B pair follows
+    assert(got == Set((1L, 1L, 2L)))
   }
 
   test("streaming cross-variable DEFINE offset: FIRST(a.v, 1) through " +
@@ -1291,9 +1263,7 @@ class MatchRecognizeSpec extends SparkSpec {
       "AVG over another variable's binding") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def runAgg(useTws: Boolean): Set[(Long, Long)] = {
+    def runAgg(): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, Long, Long, Double, String)]
       val df = input.toDF()
         .toDF("event_id", "ts_ms", "user", "v", "typ")
@@ -1304,8 +1274,8 @@ class MatchRecognizeSpec extends SparkSpec {
         Seq(EStep("a", $"typ" === "A", 2, 2, strict = false),
           EStep("b", ($"typ" === "B") &&
             ($"v" > graft.plans.MatchRecognize.cvAgg("avg", "a", "v")))),
-        eventTimeCol = "etc", withinTs = Some(100000L), useTws = useTws)
-      val name = s"mr_cvagg_st_$useTws"
+        eventTimeCol = "etc", withinTs = Some(100000L))
+      val name = "mr_cvagg_st"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -1324,23 +1294,20 @@ class MatchRecognizeSpec extends SparkSpec {
           .as[(Long, Long)].collect().toSet
       } finally q.stop()
     }
-    assert(runAgg(false) == Set((1L, 4L)))
-    assert(runAgg(true) == Set((1L, 4L)))
+    assert(runAgg() == Set((1L, 4L)))
   }
 
   test("absence composes with NEXT on a stream: a held violator blocks " +
       "window resolution until it feeds (both executors)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // PATTERN: a (typ=A, NEXT(v) > 0) then NOT typ=B FOR 5000 ms.
     // window1 [1000, 6000] has a HELD violator (B at 5000): the
     // watermark passes the deadline while the B is withheld for its
     // NEXT successor — the frontier cap must keep the window armed so
     // the B still violates it when it finally feeds. window2
     // [7000, 12000] resolves legitimately once the frontier passes it.
-    def runAbs(useTws: Boolean): Seq[Long] = {
+    def runAbs(): Seq[Long] = {
       val input = MemoryStream[(Long, Long, Long, Double, String)]
       val df = input.toDF()
         .toDF("event_id", "ts_ms", "user", "v", "typ")
@@ -1351,9 +1318,9 @@ class MatchRecognizeSpec extends SparkSpec {
         Seq(EStep("a", ($"typ" === "A") &&
             (graft.plans.MatchRecognize.lagCol("next", "v", 1) > 0)),
           ENotFor("nb", $"typ" === "B", 5000L)),
-        eventTimeCol = "etc", withinTs = Some(100000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(100000L),
         lagSpecs = Seq(("next", "v", 1)))
-      val name = s"mr_absnext_$useTws"
+      val name = "mr_absnext"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       def user1 = spark.table(name).filter($"user" === 1L)
@@ -1383,19 +1350,16 @@ class MatchRecognizeSpec extends SparkSpec {
         user1.collect().toSeq
       } finally q.stop()
     }
-    assert(runAbs(false) == Seq(4L)) // e1's window violated, e4's resolves
-    assert(runAbs(true) == Seq(4L))
+    assert(runAbs() == Seq(4L)) // e1's window violated, e4's resolves
   }
 
-  test("round-13 compositions on the transformWithState executor: " +
-      "cv+PREV/NEXT and unmatched+NEXT match the fMGWS executor") {
+  test("round-13 compositions on a stream: cv+PREV/NEXT and " +
+      "unmatched+NEXT") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // cv ref + PREV in one predicate: b must beat both its immediate
     // predecessor AND the seed's value — (1,4) wins, (1,2) fails cv
-    def runCvLag(useTws: Boolean): Set[(Long, Long)] = {
+    def runCvLag(): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, Long, Long, Double, String)]
       val df = input.toDF()
         .toDF("event_id", "ts_ms", "user", "v", "typ")
@@ -1407,9 +1371,9 @@ class MatchRecognizeSpec extends SparkSpec {
           EStep("b", ($"typ" === "B") &&
             ($"v" > graft.plans.MatchRecognize.lagCol("prev", "v", 1)) &&
             ($"v" > graft.plans.MatchRecognize.cvFirst("a", "v")))),
-        eventTimeCol = "etc", withinTs = Some(100000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(100000L),
         lagSpecs = Seq(("prev", "v", 1)))
-      val name = s"mr_tws13cv_$useTws"
+      val name = "mr_r13_cv"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -1427,10 +1391,9 @@ class MatchRecognizeSpec extends SparkSpec {
           .as[(Long, Long)].collect().toSet
       } finally q.stop()
     }
-    // unmatched + NEXT hold-back on TWS: same hazard as the fMGWS
-    // parity spec — the b row is withheld while the watermark passes
-    // the a row's horizon
-    def runUnLag(useTws: Boolean): Set[(Long, Option[Long], Long)] = {
+    // unmatched + NEXT hold-back: the b row is withheld while the
+    // watermark passes the a row's horizon
+    def runUnLag(): Set[(Long, Option[Long], Long)] = {
       val input = MemoryStream[(Long, Long, Long, Double, String)]
       val df = input.toDF()
         .toDF("event_id", "ts_ms", "user", "v", "typ")
@@ -1441,9 +1404,9 @@ class MatchRecognizeSpec extends SparkSpec {
         Seq(EStep("a", $"typ" === "A"),
           EStep("b", ($"typ" === "B") &&
             (graft.plans.MatchRecognize.lagCol("next", "v", 1) > 0))),
-        eventTimeCol = "etc", withinTs = Some(10000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(10000L),
         lagSpecs = Seq(("next", "v", 1)), withUnmatched = true)
-      val name = s"mr_tws13un_$useTws"
+      val name = "mr_r13_unmatched"
       val q = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -1461,20 +1424,11 @@ class MatchRecognizeSpec extends SparkSpec {
           .as[(Long, Option[Long], Long)].collect().toSet
       } finally q.stop()
     }
-    try {
-      val twsCv = runCvLag(useTws = true)
-      val fmCv = runCvLag(useTws = false)
-      assert(twsCv == fmCv)
-      assert(twsCv == Set((1L, 4L)))
-      val twsU = runUnLag(useTws = true)
-      val fmU = runUnLag(useTws = false)
-      assert(twsU == fmU)
-      // the (1,2) match emits despite the watermark passing row 1's
-      // horizon while row 2 was withheld; row 3 decides unmatched
-      // (row 4 stays withheld forever — no successor)
-      assert(twsU == Set((1L, Some(1000L), 2L), (1L, None, 3L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert(runCvLag() == Set((1L, 4L)))
+    // the (1,2) match emits despite the watermark passing row 1's
+    // horizon while row 2 was withheld; row 3 decides unmatched
+    // (row 4 stays withheld forever — no successor)
+    assert(runUnLag() == Set((1L, Some(1000L), 2L), (1L, None, 3L)))
   }
 
   test("AFTER MATCH SKIP PAST LAST ROW: non-overlapping greedy matches") {
@@ -2397,14 +2351,9 @@ class MatchRecognizeSpec extends SparkSpec {
          |  DEFINE a AS event_type = 'A',
          |         b AS event_type = 'B' AND value > $cut
          |)""".stripMargin
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     def chain(t: Throwable): List[Throwable] =
       if (t == null) Nil else t :: chain(t.getCause)
-    def runLeg(strict: Boolean, useTws: Boolean = true): Unit = {
-      spark.conf.set("spark.graft.matchRecognize.useTws",
-        useTws.toString)
+    def runLeg(strict: Boolean): Unit = {
       spark.conf.set("spark.graft.matchRecognize.strictRestore",
         strict.toString)
       val ck = java.nio.file.Files
@@ -2464,17 +2413,9 @@ class MatchRecognizeSpec extends SparkSpec {
     }
     try {
       runLeg(strict = true)
-      // the guard lives in the shared restored() — the strict arm
-      // also fires on the flatMapGroupsWithState executor (eager kryo
-      // decode succeeds here: same CepState schema, only the
-      // fingerprint differs)
-      runLeg(strict = true, useTws = false)
       runLeg(strict = false)
-    } finally {
+    } finally
       spark.conf.unset("spark.graft.matchRecognize.strictRestore")
-      spark.conf.unset("spark.graft.matchRecognize.useTws")
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 
   test("step names colliding with keys or match bounds fail fast") {

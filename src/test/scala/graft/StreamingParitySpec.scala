@@ -1126,12 +1126,9 @@ class StreamingParitySpec extends SparkSpec {
         (2L, 1L, 5L, 6L)))  // numbering is per key
     } finally q.stop()
 
-    // the transformWithState executor drives the same step kernel —
-    // same held-match numbering through RocksDB state
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    def runTws(useTws: Boolean): Set[(Long, Long, Long)] = {
+    // the programmatic streamingFull surface with a cross-variable
+    // DEFINE: same held-match numbering
+    def runCv(): Set[(Long, Long, Long)] = {
       val in2 = MemoryStream[(Long, Long, Long, String, Double)]
       val df = in2.toDF().toDF("event_id", "ts_ms", "user", "typ", "v")
         .withColumn("etc", timestamp_millis($"ts_ms"))
@@ -1141,9 +1138,9 @@ class StreamingParitySpec extends SparkSpec {
         Seq(graft.plans.MatchRecognize.EStep("a", $"typ" === "A"),
           graft.plans.MatchRecognize.EStep("c", ($"typ" === "X") &&
             ($"v" > graft.plans.MatchRecognize.cvFirst("a", "v")))),
-        eventTimeCol = "etc", withinTs = Some(10000L), useTws = useTws,
+        eventTimeCol = "etc", withinTs = Some(10000L),
         withMatchSeq = true)
-      val name = s"mr_mn_tws_$useTws"
+      val name = "mr_mn_cv"
       val q2 = out.writeStream.outputMode("append")
         .format("memory").queryName(name).start()
       try {
@@ -1157,13 +1154,7 @@ class StreamingParitySpec extends SparkSpec {
           .as[(Long, Long, Long)].collect().toSet
       } finally q2.stop()
     }
-    try {
-      val tws = runTws(useTws = true)
-      val fm = runTws(useTws = false)
-      assert(tws == fm)
-      assert(tws == Set((1L, 1L, 4L), (1L, 2L, 3L), (2L, 1L, 6L)))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert(runCv() == Set((1L, 1L, 4L), (1L, 2L, 3L), (2L, 1L, 6L)))
   }
 
   test("streaming PREV/NEXT in MEASURES == batch (lag values ride the " +
@@ -1653,16 +1644,15 @@ class StreamingParitySpec extends SparkSpec {
   }
 
   /** The per-feature draw-counter keys asserted ≥1 on the default seed
-    * (the fixture-strength floor shared by the fMGWS and tws fuzz legs).
+    * (the statement fuzz's fixture-strength floor).
     */
   private val fuzzDrawKeys = Seq("exprAgg", "subsetSkip", "varNav",
     "nestedNav", "navExpr", "subsetOffset", "subsetExprAgg", "subsetNav",
     "nestedNavExpr", "anchorEnd", "univNav", "litNav", "mixedNav")
 
   /** One random MATCH_RECOGNIZE statement for the streaming parity
-    * fuzzes — shared by the flatMapGroupsWithState leg and the
-    * conf-routed tws/RocksDB leg below so both executors face the SAME
-    * dialect surface (and, on the default seed, the SAME statements).
+    * fuzz and the kill-restart soak — both face the SAME dialect
+    * surface (and, on the default seed, the SAME statements).
     * Returns the statement builder plus this trial's per-feature draw
     * counts; rnd consumption order is part of the contract (the callers
     * replay identical seeds).
@@ -1879,94 +1869,6 @@ class StreamingParitySpec extends SparkSpec {
     else println(s"[fuzz] seed=${fuzzSeed.get} draws=$totals")
   }
 
-  test("seeded tws statement fuzz: the same random statements routed " +
-      "through transformWithState/RocksDB via the session conf match " +
-      "batch") {
-    // r17 VERDICT task 4 (carried from r16): the fuzz above exercises
-    // the default flatMapGroupsWithState executor; this leg replays the
-    // SAME seeded statement stream end-to-end through SQL with
-    // spark.graft.matchRecognize.useTws=true — the session conf at
-    // GraftSqlParser's executor dispatch, previously untested at the
-    // conf level — under the RocksDB state store, and asserts from the
-    // query progress that every trial actually ran on
-    // transformWithStateExec (a silently ignored conf fails here).
-    implicit val sqlCtx = spark.sqlContext
-    val fuzzSeed = sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong)
-    val rnd = new scala.util.Random(fuzzSeed.getOrElse(424242L))
-    val types = Vector("A", "B", "X")
-    val rows = (1L to 36L).map { i =>
-      (i, i * 1000L, 1L + (i % 2), types(rnd.nextInt(3)))
-    }
-    val ticks = Seq((91L, 300000L, 9L, "T"), (92L, 600000L, 9L, "T"))
-    (rows ++ ticks).toDF("event_id", "ts_ms", "user_id", "event_type")
-      .createOrReplaceTempView("mr_twsfuzz_batch")
-    val parser = new graft.plans.GraftSqlParser(
-      spark.sessionState.sqlParser, spark)
-    var checked = 0
-    var totals = Map.empty[String, Int].withDefaultValue(0)
-    // in-suite default 12; GRAFT_SOAK=1 raises to 24
-    val nTrials = Soak.knob("GRAFT_FUZZ_TRIALS", 12, 24)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    spark.conf.set("spark.graft.matchRecognize.useTws", "true")
-    try {
-      for (trial <- 1 to nTrials) {
-        val (stmt, draws) = drawFuzzStatement(rnd, trial)
-        draws.foreach { case (k, v) =>
-          totals = totals.updated(k, totals(k) + v) }
-        val input = MemoryStream[(Long, Long, Long, String)]
-        input.toDF().toDF("event_id", "ts_ms", "user_id", "event_type")
-          .withColumn("etc", timestamp_millis($"ts_ms"))
-          .withWatermark("etc", "10 seconds")
-          .createOrReplaceTempView("mr_twsfuzz_stream")
-        val out = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-          parser.parsePlan(stmt("mr_twsfuzz_stream", "EVENTTIME etc")))
-        val name = s"mr_twsfuzz_sink_$trial"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        try {
-          val cut = 10 + rnd.nextInt(20)
-          input.addData(rows.take(cut): _*)
-          q.processAllAvailable()
-          input.addData(rows.drop(cut) :+ ticks(0): _*)
-          q.processAllAvailable()
-          input.addData(ticks(1))
-          q.processAllAvailable()
-          // the conf-routing assertion: the stateful operator in the
-          // executed streaming plan must be tws, not fMGWS
-          val ops = q.recentProgress.toSeq
-            .flatMap(_.stateOperators.map(_.operatorName)).distinct
-          assert(ops == Seq("transformWithStateExec"),
-            s"trial $trial not conf-routed to tws: $ops")
-          def canon(df: org.apache.spark.sql.DataFrame) =
-            df.filter($"user_id" <= 2L)
-              .select($"event_id", $"classifier", $"match_start",
-                $"match_end", $"f_id")
-              .as[(Long, String, Long, Long, Long)]
-              .collect().sortBy(r => (r._1, r._3, r._4, r._2)).toSeq
-          val streamed = canon(spark.table(name))
-          // the batch dispatch never reads the conf, so parsing the
-          // comparison side with it still set is the production shape
-          val batch = canon(org.apache.spark.sql.GraftSqlBridge.ofRows(
-            spark, parser.parsePlan(stmt("mr_twsfuzz_batch", ""))))
-          assert(streamed == batch,
-            s"trial $trial diverged for ${stmt("mr_twsfuzz_batch", "")}: " +
-              s"stream=${streamed.size} batch=${batch.size}")
-          checked += 1
-        } finally q.stop()
-      }
-    } finally {
-      spark.conf.unset("spark.graft.matchRecognize.useTws")
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-    assert(checked == nTrials,
-      s"only $checked of $nTrials tws fuzz statements ran")
-    if (fuzzSeed.isEmpty)
-      assert(fuzzDrawKeys.forall(totals(_) >= 1), s"fixture weak: $totals")
-    else println(s"[tws-fuzz] seed=${fuzzSeed.get} draws=$totals")
-  }
-
   test("randomized kill-restart soak: random statements killed after a " +
       "random micro-batch replay the uninterrupted output from the " +
       "RocksDB checkpoint") {
@@ -1992,10 +1894,12 @@ class StreamingParitySpec extends SparkSpec {
     // in-suite default 3 statements (each runs 1 control + 2 kill-restart
     // passes, 5 query starts); GRAFT_SOAK=1 raises to the off-suite 8
     val nTrials = Soak.knob("GRAFT_FUZZ_TRIALS", 3, 8)
+    // the default SQL dispatch (the flatMapGroupsWithState executor) on
+    // the RocksDB state store: restore through the provider that keeps
+    // state off the executor heap
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    spark.conf.set("spark.graft.matchRecognize.useTws", "true")
     try {
       for (trial <- 1 to nTrials) {
         val (stmt, _) = drawFuzzStatement(rnd, trial)
@@ -2068,9 +1972,7 @@ class StreamingParitySpec extends SparkSpec {
               s"restarted=${restarted.size} control=${control.size}")
         }
       }
-    } finally {
-      spark.conf.unset("spark.graft.matchRecognize.useTws")
+    } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 }
