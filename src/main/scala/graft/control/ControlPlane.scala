@@ -97,6 +97,17 @@ object ControlEvent {
   * paused (stronger than the reference, whose runtime-state restore is
   * TODO at AbstractSiddhiOperator.java:341).
   *
+  * The constructor turns `spark.sql.artifact.isolation.enabled` off on
+  * the session it is given, so that enable, add and update reuse the
+  * generated classes of the plan's earlier starts instead of compiling
+  * them again. The cost: artifacts added with `SparkSession.addArtifact`
+  * become visible to every session without isolation. graft adds none.
+  *
+  * A plan counts as enabled only once its start has returned: a failed
+  * enable leaves it disabled, and a failed update, whose old query is
+  * already stopped, leaves it disabled under its old plan text. Either
+  * way a retried enable starts it.
+  *
   * Update caveat (same as the reference's runtime swap): if the sink
   * reuses one checkpointLocation across an update, the NEW plan must be
   * state-compatible with the old one or Spark refuses the restart —
@@ -115,10 +126,18 @@ class ControlPlane(
     compile: String => DataFrame,
     sink: (String, DataFrame) => Option[StreamingQuery]) {
 
-  private case class Entry(plan: String, var running: Option[StreamingQuery],
-      var enabled: Boolean)
+  private case class Entry(var plan: String,
+      var running: Option[StreamingQuery], var enabled: Boolean)
 
   private val plans = mutable.LinkedHashMap[String, Entry]()
+
+  // Spark keys its codegen cache by (context class loader, code). Each
+  // writeStream.start() clones the session under a new session UUID,
+  // and with artifact isolation on (the default) the executor gives
+  // each UUID its own ExecutorClassLoader, so every plan start would
+  // miss the cache and recompile all its generated classes, however
+  // identical their code. Without isolation all starts share one loader.
+  spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
 
   def this(spark: SparkSession,
       sink: (String, DataFrame) => Option[StreamingQuery]) =
@@ -143,8 +162,13 @@ class ControlPlane(
         // validated-compile-then-swap is the idiomatic equivalent.)
         val compiled = compile(plan)
         entry.running.foreach(_.stop())
-        entry.running = if (entry.enabled) sink(id, compiled) else None
-        plans(id) = entry.copy(plan = plan)
+        entry.running = None
+        if (entry.enabled) {
+          entry.enabled = false // stays so if the new plan fails to start
+          entry.running = sink(id, compiled)
+          entry.enabled = true
+        }
+        entry.plan = plan
       case RemovePlan(id) =>
         plans.remove(id).foreach(_.running.foreach(_.stop()))
       case DisablePlan(id) =>
@@ -155,8 +179,8 @@ class ControlPlane(
         }
       case EnablePlan(id) =>
         plans.get(id).filterNot(_.enabled).foreach { entry =>
-          entry.enabled = true
           entry.running = start(id, entry.plan)
+          entry.enabled = true
         }
     }
   }

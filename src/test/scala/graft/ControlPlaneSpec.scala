@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -301,6 +302,88 @@ class ControlPlaneSpec extends SparkSpec {
         .selectExpr("key", "binds['a'] AS a_id", "binds['b'] AS b_id")
         .as[(String, Long, Long)].collect().toSet
       assert(got == Set(("1", 1L, 2L)))
+    } finally cp.shutdown()
+  }
+
+  test("re-enabling a streaming pattern plan compiles no new class") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[TEvt]
+    input.toDS()
+      .withColumn("tsc", timestamp_millis($"ts_ms"))
+      .withWatermark("tsc", "5 seconds")
+      .createOrReplaceTempView("cpc_stream")
+    val ck = java.nio.file.Files.createTempDirectory("cpc_ck").toString
+    // a memory sink cannot resume from a checkpoint: keep each batch's
+    // match count by batch id instead
+    val matched = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val cp = new ControlPlane(spark,
+      (_: String, df: DataFrame) => Some(
+        df.writeStream.outputMode("append")
+          .option("checkpointLocation", ck)
+          .foreachBatch { (b: DataFrame, batchId: Long) =>
+            matched.put(batchId, b.count()); ()
+          }.start()))
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      cp.handle(AddPlan("rc1",
+        "pattern:\nfrom cpc_stream\nkey user ; ts ts_ms ; tie id\n" +
+          "eventtime tsc\nstep a where typ = 'A'\nstep b where typ = 'B'"))
+      input.addData(TEvt(1, 1000, 1, "A"), TEvt(2, 2000, 1, "B"))
+      cp.runningQuery("rc1").get.processAllAvailable()
+      input.addData(TEvt(9, 100000L, 9, "X")) // advance the watermark
+      cp.runningQuery("rc1").get.processAllAvailable()
+      // on-time events that leave the watermark where it is: a batch
+      // before the disable and one after the enable run the same code
+      // (Spark inlines the watermark into its late-row predicate)
+      input.addData(TEvt(10, 99000L, 2, "A"))
+      cp.runningQuery("rc1").get.processAllAvailable()
+      cp.handle(DisablePlan("rc1"))
+      val before = compiles
+      cp.handle(EnablePlan("rc1"))
+      input.addData(TEvt(11, 99500L, 3, "A"))
+      cp.runningQuery("rc1").get.processAllAvailable()
+      // the restart shares the first start's class loader, so every
+      // generated class comes from the codegen cache
+      assert(compiles - before == 0,
+        s"re-enable compiled ${compiles - before} classes")
+      assert(matched.values.stream.mapToLong(_.longValue).sum == 1L)
+    } finally cp.shutdown()
+  }
+
+  test("a plan whose start throws is left disabled; a retried enable " +
+      "starts it") {
+    spark.readStream.format("rate").option("rowsPerSecond", "5").load()
+      .createOrReplaceTempView("rate_fail")
+    var failNext = false
+    val cp = new ControlPlane(spark, (id: String, df: DataFrame) => {
+      if (failNext) {
+        failNext = false
+        throw new IllegalStateException("sink refused the start")
+      }
+      Some[StreamingQuery](df.writeStream.format("memory")
+        .queryName(s"cpf_$id").outputMode("append").start())
+    })
+    try {
+      cp.handle(AddPlan("f1", "SELECT value FROM rate_fail"))
+      cp.handle(DisablePlan("f1"))
+      failNext = true
+      assert(!cp.handleAcked(EnablePlan("f1")).ok)
+      assert(!cp.isEnabled("f1") && cp.runningQuery("f1").isEmpty)
+      assert(cp.handleAcked(EnablePlan("f1")).ok)
+      assert(cp.isEnabled("f1") && cp.runningQuery("f1").exists(_.isActive))
+
+      // a failed update has already stopped the old query: the plan must
+      // not report it as running, and enable must start the plan again
+      val old = cp.runningQuery("f1").get
+      failNext = true
+      assert(!cp.handleAcked(
+        UpdatePlan("f1", "SELECT value * 2 AS value FROM rate_fail")).ok)
+      assert(!old.isActive)
+      assert(!cp.isEnabled("f1") && cp.runningQuery("f1").isEmpty)
+      assert(cp.handleAcked(EnablePlan("f1")).ok)
+      assert(cp.runningQuery("f1").exists(q =>
+        q.isActive && q.runId != old.runId))
     } finally cp.shutdown()
   }
 
