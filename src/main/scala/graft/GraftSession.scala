@@ -8,8 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `local[cpus]` with `cpus` shuffle partitions; `cpus` is
   *    `SPARK_GRAFT_CPUS` (default 4), read here and nowhere else;
-  *  - UTC session time zone and `parquet.nanosAsLong` (events.parquet
-  *    carries TIMESTAMP(NANOS), which Spark otherwise refuses to read);
+  *  - UTC session time zone and `parquet.nanosAsLong` (every
+  *    events.parquet stores `ts` as TIMESTAMP(MICROS), read as
+  *    `TimestampNTZ`; the flag only makes a TIMESTAMP(NANOS) file read
+  *    as a long instead of failing);
   *  - UI off;
   *  - constraint propagation off: it is O(n²) in constraint×expression
   *    count, this suite's plans are deep (unrolled Lloyd rounds, MR

@@ -44,10 +44,9 @@ object SparkEntry {
     * representation (reference keeps long millis; we keep µs to preserve
     * the parquet timestamps' full precision).
     *
-    * The events table stores TIMESTAMP(NANOS) which Spark's parquet
-    * reader rejects; read nanos as long (legacy conf), then derive both
-    * a µs epoch and a proper TimestampType column. Integer `div` avoids
-    * double-precision loss on epoch-nano magnitudes.
+    * The events table stores `ts` as TIMESTAMP(MICROS), which Spark
+    * reads as `TimestampNTZ`; [[Tables.eventsTsUs]] derives both a µs
+    * epoch and a proper TimestampType column from it.
     */
   private def evts(s: SparkSession, dir: String): DataFrame =
     Tables.eventsTsUs(s, dir)

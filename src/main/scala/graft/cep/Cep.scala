@@ -13,8 +13,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    key's events by the given columns INSIDE the shuffle (sort-based
   *    aggregation), so the group streams through the NFA one event at a
   *    time. A hot key with 10⁸ events never materializes in memory:
-  *    state is O(live partials), not O(group). Used by the DuckDB
-  *    correctness oracle.
+  *    state is O(live partials), not O(group). It is the only typed
+  *    batch executor; the oracle-checked `.cql` queries run on it.
   *  - [[streaming]]: `groupByKey.flatMapGroupsWithState` with event-time
   *    timeout — the Spark-native replacement for the reference's
   *    watermark-ordered PriorityQueue buffer
@@ -51,25 +51,6 @@ object Cep {
     ds.groupByKey(key).flatMapSortedGroups(sortCols: _*) { (k: K, it: Iterator[E]) =>
       val nfa = new Nfa(pattern, tsOf, tieOf)
       it.flatMap(e => nfa.onEvent(e).iterator.flatMap(build(k, _))) ++
-        nfa.flush().iterator.flatMap(build(k, _))
-    }
-  }
-
-  /** In-memory-sort fallback for sources without sortable columns (tests,
-    * tiny keyed collections). Collects each group — do NOT use on skewed
-    * production keys; prefer [[batch]] with sort columns.
-    */
-  def batchCollected[E, K: Encoder, O: Encoder](
-      ds: Dataset[E],
-      key: E => K,
-      pattern: PatternDef[E],
-      tsOf: E => Long,
-      tieBreak: E => Long)(
-      build: (K, PatternMatch[E]) => IterableOnce[O]): Dataset[O] = {
-    ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[E]) =>
-      val evs = it.toVector.sortBy(e => (tsOf(e), tieBreak(e)))
-      val nfa = new Nfa(pattern, tsOf, tieBreak)
-      evs.iterator.flatMap(e => nfa.onEvent(e).iterator.flatMap(build(k, _))) ++
         nfa.flush().iterator.flatMap(build(k, _))
     }
   }

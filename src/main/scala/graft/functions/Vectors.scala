@@ -22,8 +22,6 @@ object Vectors {
     */
   def dot(a: Column, b: Column): Column = ArrayDotProduct.column(a, b)
 
-  def norm2(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity; 0.0 for a zero vector (avoids NaN propagation). */
   def cosine(a: Column, b: Column): Column =
     cosineFromParts(dot(a, b), dot(a, a), dot(b, b))
@@ -36,15 +34,6 @@ object Vectors {
   def cosineFromParts(dotAB: Column, normSqA: Column, normSqB: Column): Column =
     when(normSqA === 0.0 || normSqB === 0.0, lit(0.0))
       .otherwise(dotAB / (sqrt(normSqA) * sqrt(normSqB)))
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0),
-      (acc, x) => acc + x))
 
   /** Coarse LSH bucket id for cosine similarity: the sign-bit pattern of
     * the vector's projections onto `nPlanes` deterministic pseudo-random

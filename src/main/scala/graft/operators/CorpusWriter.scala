@@ -232,12 +232,6 @@ object CorpusWriter {
     publish(df.sparkSession, outDir)(
       writePacked(df, textCol, idCol, stratumCol, budget, _, shards))
 
-  /** [[writeJsonlSplits]] under [[publish]]. */
-  def publishJsonlSplits(df: DataFrame, idCol: String, outDir: String,
-      splits: Seq[(String, Int)], nFiles: Int = 1): Unit =
-    publish(df.sparkSession, outDir)(
-      writeJsonlSplits(df, idCol, _, splits, nFiles))
-
   /** [[writeDataCard]] under [[publish]] — a torn data card is as
     * misleading as a torn corpus.
     */

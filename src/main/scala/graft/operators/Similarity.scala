@@ -42,36 +42,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Hard-negative mining for contrastive/embedding training: for each
-    * query, the top-k MOST similar corpus vectors that are still BELOW
-    * the near-duplicate band (`cosine < maxCos`) — close enough to be
-    * informative negatives, far enough to not be unlabeled positives.
-    * The exact shape mirrors [[bruteForceTopK]] (broadcast queries,
-    * shuffle-free scan, one top-k); at index scale the same band
-    * filter composes unchanged onto [[lshTopK]]/[[ivfTopK]] candidate
-    * generation, because it is a per-pair predicate applied before the
-    * rank window. Self-pairs are always excluded.
-    * Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
-    */
-  def hardNegatives(
-      corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, k: Int, maxCos: Double): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-      .withColumn("_cn", Vectors.dot(col("_cv"), col("_cv")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", Vectors.dot(col("_qv"), col("_qv")))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.cosineFromParts(Vectors.dot(col("_qv"), col("_cv")),
-          col("_qn"), col("_cn")).as("cosine"))
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        col("cosine") < maxCos)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** IVF-style approximate top-k: an inverted-file index with a coarse
     * quantizer. Centroids are the `nCells` lowest-id corpus vectors
     * (deterministic seeds standing in for a trained k-means codebook —

@@ -389,7 +389,7 @@ object MatchRecognize {
     // FRESH NFA — patterns straddling batches would silently never match
     require(!df.isStreaming,
       "MatchRecognize(...) is the batch operator; use " +
-        "MatchRecognize.streaming(...) for streaming DataFrames")
+        "MatchRecognize.streamingFull(...) for streaming DataFrames")
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(MatchRecognizeStrategy))
       spark.experimental.extraStrategies =
@@ -672,24 +672,6 @@ object MatchRecognize {
     org.apache.spark.sql.functions.col(s"_mr_${kind}_${column}_$k")
   }
 
-  import org.apache.spark.sql.SparkSession
-  /** Fail fast when a pattern's predicates carry [[cvFirst]]/[[cvLast]]
-    * markers in a context that cannot evaluate them (streaming flag
-    * precompute). */
-  private def requireNoCtxRefs(spark: SparkSession, preds: Seq[Column],
-      where: String): Unit =
-    preds.foreach { p =>
-      val has = GraftSqlBridge.sessionExpression(spark, p).exists {
-        case u: UnresolvedAttribute =>
-          u.nameParts.headOption.contains(CvMarker)
-        case _ => false
-      }
-      require(!has,
-        s"cross-variable DEFINE predicates (cvFirst/cvLast, " +
-          s"FIRST/LAST(var.col)) are only supported on the batch " +
-          s"operator — $where precomputes predicates as per-event flags")
-    }
-
   /** Pattern-element step names in declaration order (the output slot
     * order of the batch operator and [[streamingFull]]).
     */
@@ -829,7 +811,7 @@ object MatchRecognize {
       df.columns.toIndexedSeq, slotNamesOf(pattern))
 
   /** The DEFINE predicate of every variable occurrence in `pattern`, in
-    * the order the streaming builders lay out their flag slots. */
+    * the order [[streamingFull]] lays out its flag slots. */
   private def streamPredCols(pattern: Seq[Elem]): Seq[Column] =
     pattern.flatMap {
       case EStep(_, p, _, _, _) => Seq(p)
@@ -880,94 +862,16 @@ object MatchRecognize {
     }.toIndexedSeq
   }
 
-  /** Streaming MATCH_RECOGNIZE: the SAME [[Elem]] surface over an
-    * unbounded stream, executed on [[graft.cep.Cep.streaming]]
-    * (watermark-buffered ordered release + checkpointed NFA state).
-    *
-    * Predicates are evaluated ONCE per event as a codegen'd boolean
-    * flag array before entering keyed state — the NFA never interprets
-    * Catalyst expressions per partial match. Output schema:
-    * `keys ++ (match_start long, match_end long, binds map<string,long>)`
-    * (step name → `tie` of its first bound event; streaming state cannot
-    * afford the batch operator's full per-slot event arrays).
-    *
-    * @param eventTimeCol the stream's WATERMARKED timestamp column
-    *                     (apply `withWatermark` upstream); carried
-    *                     through so the stateful op sees the watermark
-    * @param tsScale      event-time units of `tsCol` per watermark
-    *                     millisecond (µs ts → 1000)
-    */
-  def streaming(df: DataFrame, partitionKeys: Seq[String], tsCol: String,
-      tieCol: String, pattern: Seq[Elem], eventTimeCol: String,
-      withinTs: Option[Long] = None, every: Boolean = true,
-      maxPartials: Int = 1024, tsScale: Long = 1L,
-      skipPastLastRow: Boolean = false,
-      skipToVar: Option[(String, Boolean)] = None): DataFrame = {
-    val everyMatch = every // functions._ would shadow the parameter
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, MapType, StructField, StructType}
-    import graft.cep.{Cep, PatternDef, Step}
-    require(df.isStreaming, "streaming() needs a streaming DataFrame; " +
-      "use MatchRecognize(...) for batch")
-
-    val predCols = streamPredCols(pattern)
-    requireNoCtxRefs(df.sparkSession, predCols, "streaming()")
-    val flags = array(predCols.map(p => coalesce(p.cast("boolean"),
-      lit(false))): _*)
-    // plain alias keeps the watermark metadata on the event-time column
-    val env = df.select(
-      struct(partitionKeys.map(col): _*).as("k"),
-      col(tsCol).cast("long").as("ts"),
-      col(tieCol).cast("long").as("tie"),
-      flags.as("flags"),
-      col(eventTimeCol).as("wmc"))
-
-    var ci = -1
-    def idx(): Int = { ci += 1; ci }
-    def flagStep(name: String, min: Int, max: Int,
-        strict: Boolean): Step[Row] = {
-      val i = idx()
-      Step[Row](name, _.getSeq[Boolean](3)(i), min, max, strict)
-    }
-    val pElems = streamElems(pattern, flagStep)
-    val pat = PatternDef[Row](pElems, withinTs, everyMatch, maxPartials,
-      skipPastLastRow, skipToVar)
-    // (binds-only streaming() keeps the plain-variable skip modes; the
-    // SUBSET-target form rides streamingFull, which the SQL dialect uses)
-
-    val keySchema = env.schema("k").dataType.asInstanceOf[StructType]
-    val outSchema = StructType(keySchema.fields ++ Array(
-      StructField("match_start", LongType, nullable = false),
-      StructField("match_end", LongType, nullable = false),
-      StructField("binds", MapType(
-        org.apache.spark.sql.types.StringType, LongType), nullable = false)))
-    val kEnc = Encoders.row(keySchema)
-    val oEnc = Encoders.row(outSchema)
-    val build = (k: Row, m: graft.cep.PatternMatch[Row]) => {
-      val binds = m.groups.map { case (n, es) => n -> es.head.getLong(2) }
-      Iterator.single(new GenericRowWithSchema(
-        (k.toSeq ++ Seq(m.startTs, m.endTs, binds)).toArray,
-        outSchema): Row)
-    }
-    Cep.streaming[Row, Row, Row](
-      env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-      tsScale)(build)(kEnc, oEnc).toDF()
-  }
-
   /** Streaming MATCH_RECOGNIZE with the BATCH operator's output schema:
     * `keys ++ (match_start, match_end) ++ one array<struct> column per
     * step name`, each array holding the FULL input rows bound to that
     * step — so SQL MEASURES (`var.col`, FIRST/LAST/SUM/AVG/COUNT)
     * compile identically over batch and streaming input. This is the
     * dispatch target for streaming `MATCH_RECOGNIZE` SQL statements,
-    * executed like [[streaming]] on [[graft.cep.Cep.streaming]].
+    * executed on [[graft.cep.Cep.streaming]].
     *
-    * Costs more state than [[streaming]] (whole rows ride in the keyed
-    * buffer and in live partials instead of a (ts, tie) pair per bind) —
-    * the price of arbitrary-column measures, same trade Flink's CEP
-    * makes. State stays O(watermark-delay buffer + live partials ×
+    * Whole rows ride in the keyed buffer and in live partials — the
+    * price of arbitrary-column measures, same trade Flink's CEP makes. State stays O(watermark-delay buffer + live partials ×
     * pattern length) per key; project the input to the columns the
     * measures read before matching to shrink it.
     *

@@ -3,45 +3,14 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Stream/table source helpers. The reference takes user-supplied Flink
-  * `DataStream`s and ships no scans of its own (SURVEY §2.D; tests use
-  * inline collections, the experimental module Kafka) — on Spark every
-  * source is a one-liner, so this module just names the idiomatic
-  * constructions and applies the engine's conventions (explicit schema,
-  * event-time column, watermark at the edge).
+/** Readers for outside text input. The reference takes user-supplied
+  * Flink `DataStream`s and ships no scans of its own (SURVEY §2.D); on
+  * Spark a parquet, file-stream, rate or Kafka source is a one-liner
+  * over `spark.read`/`readStream`, so only the readers that add a
+  * contract live here: an explicit schema and malformed input captured
+  * into `_corrupt_record` as an auditable reject relation.
   */
 object Sources {
-
-  /** Batch parquet table (the driver test corpus shape). */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** File stream: newly-arriving files under `path` tailed as a stream —
-    * schema must be explicit (streaming scans don't infer).
-    */
-  def fileStream(spark: SparkSession, path: String, schema: StructType,
-      format: String = "parquet"): DataFrame =
-    spark.readStream.schema(schema).format(format).load(path)
-
-  /** Rate source: synthetic `(timestamp, value)` ticks (tests, triggers,
-    * throughput probes).
-    */
-  def rate(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString).load()
-
-  /** Kafka topic as a stream — the reference's production transport
-    * (experimental/CEPPipeline.scala:50-58). Config-only here: this
-    * environment has no broker, but the construction is the standard
-    * one; `value` arrives as binary, pair with `from_json` + a schema.
-    */
-  def kafka(spark: SparkSession, bootstrap: String, topic: String,
-      startingOffsets: String = "latest"): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
 
   /** JSONL corpus — the crawl-dump interchange format real curation
     * pipelines ingest. Schema is explicit (inference is a full extra
@@ -103,11 +72,4 @@ object Sources {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
   }
-
-  /** Watermarked event-time edge: timestamp column + allowed lateness,
-    * applied once at the source boundary (every downstream stateful op
-    * inherits it).
-    */
-  def withEventTime(df: DataFrame, tsCol: String, delay: String): DataFrame =
-    df.withWatermark(tsCol, delay)
 }

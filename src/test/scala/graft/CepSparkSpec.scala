@@ -26,8 +26,8 @@ class CepSparkSpec extends SparkSpec {
   private val expected = Set(TOut(1, 1, 3), TOut(2, 6, 7))
 
   test("batch executor matches hand-computed result") {
-    val got = Cep.batchCollected[TEvt, Long, TOut](
-      events.toDS(), _.user, pat, _.ts_ms, _.id) {
+    val got = Cep.batch[TEvt, Long, TOut](events.toDS(), _.user, pat,
+      _.ts_ms, Seq(col("ts_ms"), col("id")), _.id) {
       (k, m) => Iterator.single(TOut(k, m.head("a").id, m.head("b").id))
     }.collect().toSet
     assert(got == expected)
@@ -132,8 +132,8 @@ class CepSparkSpec extends SparkSpec {
       TEvt(4, 1000, 2, "A"), TEvt(5, 2500, 2, "B"))
     def outOf(m: graft.cep.PatternMatch[TEvt], k: Long) = TOut(k,
       m.head("s").id, m.get("b").headOption.orElse(m.get("c").headOption).get.id)
-    val expectedOr = Cep.batchCollected[TEvt, Long, TOut](
-      orEvents.toDS(), _.user, orPat, _.ts_ms, _.id) {
+    val expectedOr = Cep.batch[TEvt, Long, TOut](orEvents.toDS(), _.user,
+      orPat, _.ts_ms, Seq(col("ts_ms"), col("id")), _.id) {
       (k, m) => Iterator.single(outOf(m, k))
     }.collect().toSet
     assert(expectedOr == Set(TOut(1, 1, 3), TOut(2, 4, 5)))

@@ -305,6 +305,66 @@ class ControlPlaneSpec extends SparkSpec {
     } finally cp.shutdown()
   }
 
+  test("pattern: plans give the same matches over a batch view and a " +
+      "watermarked stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val early = Seq( // ts <= 4000, fed in arrival (not ts) order
+      TEvt(3, 3000, 1, "B"), TEvt(1, 1000, 1, "A"), TEvt(2, 2000, 1, "A"),
+      TEvt(4, 4000, 1, "A"), TEvt(22, 3000, 2, "V"), TEvt(20, 1000, 2, "V"),
+      TEvt(21, 2000, 2, "E"), TEvt(23, 3500, 2, "Q"), TEvt(24, 4000, 2, "P"),
+      TEvt(30, 1000, 3, "C"), TEvt(41, 2000, 4, "Y"), TEvt(40, 1000, 4, "S"),
+      TEvt(42, 3000, 4, "Z"), TEvt(43, 4000, 4, "Y"))
+    val late = Seq(
+      TEvt(6, 5000, 1, "B"), TEvt(5, 4500, 1, "X"), TEvt(7, 6000, 1, "A"),
+      TEvt(8, 6500, 1, "A"), TEvt(9, 7000, 1, "A"), TEvt(10, 7500, 1, "A"),
+      TEvt(11, 8000, 1, "B"), TEvt(31, 5000, 3, "P"), TEvt(32, 20000, 3, "C"),
+      TEvt(44, 5000, 4, "S"), TEvt(45, 6000, 4, "Z"))
+    // far-future ticks on a key no pattern matches: the first moves the
+    // watermark past every deadline, the second fires the timers
+    val ticks = Seq(TEvt(98, 100000L, 9, "T"), TEvt(99, 200000L, 9, "T"))
+    (early ++ late ++ ticks).toDS().createOrReplaceTempView("cpm_batch")
+    val input = MemoryStream[TEvt]
+    input.toDS()
+      .withColumn("tsc", timestamp_millis($"ts_ms"))
+      .withWatermark("tsc", "5 seconds")
+      .createOrReplaceTempView("cpm_stream")
+    val bodies = Seq(
+      "either" -> ("step v where typ = 'V'\n" +
+        "either b where typ = 'P'\nor c where typ = 'E'"),
+      "both" -> ("step s where typ = 'S'\n" +
+        "both y where typ = 'Y'\nand z where typ = 'Z'"),
+      "notfor" -> "step a where typ = 'C'\nnotfor nb 10000 where typ = 'P'",
+      "strict" -> "step a where typ = 'A'\nstep b strict where typ = 'B'",
+      "minmax" -> "step a min 2 max 3 where typ = 'A'\nstep b where typ = 'B'",
+      "skip" -> ("skippastlast true\n" +
+        "step a where typ = 'A'\nstep b where typ = 'B'"))
+    def text(view: String, body: String) =
+      s"pattern:\nfrom $view\nkey user ; ts ts_ms ; tie id\n" +
+        (if (view == "cpm_stream") "eventtime tsc\n" else "") + body
+    def rows(df: DataFrame) = df.select("key", "start_ts", "end_ts", "binds")
+      .as[(String, Long, Long, Map[String, Long])].collect().toSet
+    val queries = bodies.map { case (name, body) =>
+      name -> PlanCompiler.compile(spark, text("cpm_stream", body))
+        .writeStream.format("memory").queryName(s"cpm_$name")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("cpm_ck").toString)
+        .start()
+    }
+    try {
+      Seq(early, late, ticks.take(1), ticks.drop(1)).foreach { feed =>
+        input.addData(feed)
+        queries.foreach(_._2.processAllAvailable())
+      }
+      bodies.foreach { case (name, body) =>
+        val batch = rows(PlanCompiler.compile(spark, text("cpm_batch", body)))
+        assert(batch.nonEmpty, s"$name: no batch matches")
+        assert(rows(spark.table(s"cpm_$name")) == batch, name)
+      }
+    } finally queries.foreach(_._2.stop())
+  }
+
   test("re-enabling a streaming pattern plan compiles no new class") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

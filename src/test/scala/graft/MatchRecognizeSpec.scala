@@ -441,7 +441,7 @@ class MatchRecognizeSpec extends SparkSpec {
       .toDF("event_id", "ts_ms", "region", "user", "typ")
       .withColumn("etc", timestamp_millis($"ts_ms"))
       .withWatermark("etc", "10 seconds")
-    val out = graft.plans.MatchRecognize.streaming(df,
+    val out = graft.plans.MatchRecognize.streamingFull(df,
       Seq("region", "user"), "ts_ms", "event_id",
       Seq(EStep("a", $"typ" === "A"), EStep("b", $"typ" === "B")),
       eventTimeCol = "etc", withinTs = Some(10000L))
@@ -463,8 +463,8 @@ class MatchRecognizeSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("mr_stream")
         .select($"region", $"user", $"match_start", $"match_end",
-          element_at($"binds", "a").as("a_tie"),
-          element_at($"binds", "b").as("b_tie"))
+          element_at($"a", 1).getField("event_id").as("a_id"),
+          element_at($"b", 1).getField("event_id").as("b_id"))
         .as[(String, Long, Long, Long, Long, Long)].collect().toSet
       assert(got == Set(
         ("east", 1L, 1000L, 2000L, 1L, 2L),
@@ -480,7 +480,7 @@ class MatchRecognizeSpec extends SparkSpec {
     val df = input.toDF().toDF("event_id", "ts_ms", "user", "typ")
       .withColumn("etc", timestamp_millis($"ts_ms"))
       .withWatermark("etc", "10 seconds")
-    val out = graft.plans.MatchRecognize.streaming(df, Seq("user"),
+    val out = graft.plans.MatchRecognize.streamingFull(df, Seq("user"),
       "ts_ms", "event_id",
       Seq(EStep("a", $"typ" === "A"), EStep("b", $"typ" === "B")),
       eventTimeCol = "etc")
@@ -492,7 +492,8 @@ class MatchRecognizeSpec extends SparkSpec {
       input.addData((9L, 60000L, 9L, "X"))
       q.processAllAvailable()
       val got = spark.table("mr_nowithin")
-        .select($"user", element_at($"binds", "a"), element_at($"binds", "b"))
+        .select($"user", element_at($"a", 1).getField("event_id"),
+          element_at($"b", 1).getField("event_id"))
         .as[(Long, Long, Long)].collect().toSet
       assert(got == Set((1L, 1L, 2L)))
     } finally q.stop()
@@ -4128,17 +4129,6 @@ class MatchRecognizeSpec extends SparkSpec {
       assert(streamed == batch)
       assert(streamed == Set((1L, 1L, 2L, 3L)))
     } finally q.stop()
-    // the binds-only streaming() surface cannot evaluate markers
-    val sdf2 = input.toDF()
-      .toDF("event_id", "ts_us", "user_id", "price")
-      .withColumn("ets", timestamp_micros($"ts_us"))
-    val e2 = intercept[IllegalArgumentException] {
-      MatchRecognize.streaming(sdf2, Seq("user_id"), "ts_us", "event_id",
-        Seq(EStep("a", $"price" > 0),
-          EStep("b", $"price" > MatchRecognize.cvFirst("a", "price"))),
-        "ets")
-    }
-    assert(e2.getMessage.contains("batch operator"))
   }
 
   test("SQL:2016 brace quantifier forms: {n} exact, {n,} unbounded, " +

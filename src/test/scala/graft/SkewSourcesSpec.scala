@@ -2,67 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Skew
-import graft.sources.Sources
 
 class SkewSourcesSpec extends SparkSpec {
   import spark.implicits._
-
-  test("saltedJoin equals plain join on a skewed key distribution") {
-    // 900 rows of one hot key + 100 spread rows
-    val left = ((1 to 900).map(i => (1L, i.toLong)) ++
-      (1 to 100).map(i => (i.toLong % 7 + 2, i.toLong))).toDF("k", "lv")
-    val right = (1L to 10L).map(k => (k, s"dim$k")).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).select("k", "lv", "rv")
-      .collect().toSet
-    val salted = Skew.saltedJoin(left, right, "k", saltFactor = 8)
-      .select("k", "lv", "rv").collect().toSet
-    assert(salted == plain)
-  }
-
-  test("saltedJoin spreads a hot key over multiple salt buckets") {
-    val left = (1 to 1000).map(i => (1L, i.toLong)).toDF("k", "lv")
-    val salted = left.withColumn("_salt",
-      (rand(seed = 42) * 8).cast("int"))
-    val buckets = salted.select("_salt").distinct().count()
-    assert(buckets >= 6, s"salt only hit $buckets buckets")
-  }
-
-  test("saltedJoin rejects right-preserving join types (replication " +
-      "would duplicate unmatched right rows)") {
-    val left = Seq((1L, 1L)).toDF("k", "lv")
-    val right = Seq((1L, "a"), (2L, "b")).toDF("k", "rv")
-    for (jt <- Seq("right_outer", "full_outer", "full", "outer"))
-      assertThrows[IllegalArgumentException](
-        Skew.saltedJoin(left, right, "k", 4, jt))
-    // left-preserving types stay allowed
-    assert(Skew.saltedJoin(left, right, "k", 4, "left_outer").count() == 1)
-    assert(Skew.saltedJoin(left, right, "k", 4, "left_anti").count() == 0)
-  }
-
-  test("keyHistogram surfaces the hottest keys first") {
-    val df = ((1 to 50).map(_ => 1L) ++ (1 to 5).map(_ => 2L) ++ Seq(3L))
-      .toDF("k")
-    val h = Skew.keyHistogram(df, col("k"), topN = 2)
-      .as[(Long, Long)].collect().toSeq
-    assert(h == Seq((1L, 50L), (2L, 5L)))
-  }
-
-  test("file stream source tails new files with an explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("src_files").toString
-    val schema = StructType(Seq(StructField("id", LongType)))
-    val stream = Sources.withEventTime(
-      Sources.fileStream(spark, dir, schema)
-        .withColumn("ts", current_timestamp()), "ts", "1 second")
-    assert(stream.isStreaming)
-    val q = stream.writeStream.format("memory").queryName("src_out")
-      .outputMode("append").start()
-    try {
-      spark.range(5).toDF("id").write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      assert(spark.table("src_out").count() == 5)
-    } finally q.stop()
-  }
 
   test("jsonl source captures malformed lines instead of dropping them") {
     import java.nio.file.Files
