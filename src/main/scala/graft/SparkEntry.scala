@@ -748,7 +748,7 @@ object SparkEntry {
     }),
 
     // B20 alternation through the SQL statement — PATTERN (a (b|c))
-    // maps onto the operator's EOr element; the unchosen side binds
+    // maps onto a one-iteration alternation group; the unchosen side binds
     // zero events and its measure is NULL (try_element_at, never an
     // ANSI INVALID_ARRAY_INDEX). Same semantics as q31's API path.
     "q57_mr_alternation" -> ((s, dir) => {
@@ -2929,8 +2929,8 @@ object SparkEntry {
     }),
 
     // SQL:2016 PERMUTE(a, b) — `(a b | b a)` — through the statement
-    // surface, compiled onto the both-in-either-order logical element:
-    // same match set as q33's programmatic AND pattern (shared oracle).
+    // surface, compiled onto the one-iteration PERMUTE group that
+    // q33's programmatic `Logical.and` builds too (shared oracle).
     "q166_mr_permute" -> ((s, dir) => {
       evts(s, dir).select(col("event_id"), col("ts_us"), col("user_id"),
         col("event_type")).createOrReplaceTempView("mr_permute_q166")
@@ -2949,8 +2949,8 @@ object SparkEntry {
     }),
 
     // N-ary PERMUTE(a, b, c) — one event per variable in ANY arrival
-    // order (the graft.cep.Permute element; binary PERMUTE rides the
-    // logical element instead). Oracle: the seed is the earliest
+    // order (a one-iteration PERMUTE group, the element q166's binary
+    // PERMUTE compiles to as well). Oracle: the seed is the earliest
     // member, so each match = seed + first later event of each other
     // type inside the window, replayed per seed type.
     "q168_mr_permute3" -> ((s, dir) => {
@@ -3529,8 +3529,8 @@ object SparkEntry {
     */
   /** The q33/q166 AND-pattern replay: each event of either type pairs
     * with the first later event of the other type within 10 min — the
-    * Logical both-in-either-order element, whether reached through the
-    * programmatic API (q33) or SQL `PERMUTE(a, b)` (q166).
+    * both-in-either-order PERMUTE group, whether reached through the
+    * programmatic `Logical.and` (q33) or SQL `PERMUTE(a, b)` (q166).
     */
   private lazy val q33Oracle: String =
     """WITH er AS (SELECT user_id, event_id AS e_id, epoch_us(ts) AS e_us

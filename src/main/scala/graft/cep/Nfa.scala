@@ -20,12 +20,14 @@ import scala.collection.mutable.ArrayBuffer
   * external siddhi-core dependency — rebuilt here, not copied).
   *
   * Group layout: each element owns a contiguous range of "slots" in
-  * `Partial.groups` — a Step one slot, a Logical two (left, right), a
-  * GroupSeq or Permute one per inner step, an Absence one (never
+  * `Partial.groups` — a Step one slot, a NestedGroup one per variable
+  * of its items (an alternation two, a PERMUTE one per member), an
+  * RxElem one per distinct variable name, an Absence one (never
   * filled).
   * Slot→name mapping is static, so match output construction is a flat
-  * scan. A GroupSeq partial encodes its progress in `curCount` as
-  * `iterationsDone * innerLen + innerPos`.
+  * scan. A NestedGroup partial counts its bound events in `curCount`
+  * (`iterationsDone * arity + positionInIteration`); an RxElem partial
+  * holds its automaton state id there and its counters in `rxCnt`.
   *
   * Scale: partial matches are bounded by `maxPartialMatches`; expired
   * partials are pruned on every event using `withinMs`, so per-key state
@@ -64,17 +66,10 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
   elems.head match {
     case s: Step[E] =>
       require(s.minCount >= 1, "first step must be non-optional")
-    case g: GroupSeq[E] =>
-      require(g.minRepeat >= 1, "first group must be non-optional")
-    case ps: PermSeq[E] =>
-      require(ps.minRepeat >= 1, "first permute must be non-optional")
-    case al: AltSeq[E] =>
-      require(al.minRepeat >= 1, "first alternation must be non-optional")
     case ng: NestedGroup[E] =>
       require(ng.minRepeat >= 1, "first group must be non-optional")
     case rx: RxElem[E] =>
       require(!rx.matchesEmpty, "first element must be non-optional")
-    case _: Logical[E] | _: Permute[E] => ()
     case _: Absence[E] =>
       throw new IllegalArgumentException(
         "pattern cannot start with an absence element")
@@ -134,11 +129,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
     def sc(s: Step[E]): Boolean = s.ctxPred.isDefined
     elems.exists {
       case s: Step[E] => sc(s)
-      case l: Logical[E] => sc(l.left) || sc(l.right)
-      case g: GroupSeq[E] => g.steps.exists(sc)
-      case pm: Permute[E] => pm.steps.exists(sc)
-      case ps: PermSeq[E] => ps.steps.exists(sc)
-      case al: AltSeq[E] => sc(al.left) || sc(al.right)
       case ng: NestedGroup[E] => ng.items.exists {
         case GVar(s) => sc(s)
         case GAlt(l, r) => sc(l) || sc(r)
@@ -190,9 +180,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
     val g = grown(p.groups, slot)
     g.updated(slot, g(slot) :+ mat(e))
   }
-
-  private def slotFilled(p: Partial[E], slot: Int): Boolean =
-    slot < p.groups.length && p.groups(slot).nonEmpty
 
   // --- cross-variable predicate support (Step.ctxPred) ---
   private val nameToSlot: Map[String, Int] = slotNames.zipWithIndex.toMap
@@ -296,25 +283,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
   /** Is the partial's current element satisfied (eligible to advance)? */
   private def complete(p: Partial[E]): Boolean = elems(p.stepIdx) match {
     case s: Step[E] => p.curCount >= s.minCount
-    case g: GroupSeq[E] =>
-      // curCount encodes (iterations, inner position) as
-      // repeats * len + pos — complete at an ITERATION BOUNDARY with
-      // at least minRepeat full iterations
-      p.curCount % g.steps.length == 0 &&
-        p.curCount / g.steps.length >= g.minRepeat
-    case l: Logical[E] =>
-      val b = slotBase(p.stepIdx)
-      if (l.isAnd) slotFilled(p, b) && slotFilled(p, b + 1)
-      else slotFilled(p, b) || slotFilled(p, b + 1)
-    case pm: Permute[E] =>
-      val b = slotBase(p.stepIdx)
-      pm.steps.indices.forall(i => slotFilled(p, b + i))
-    case ps: PermSeq[E] =>
-      // slot counts differ by <= 1 (bind rule), so curCount % k == 0
-      // IS the iteration boundary — the GroupSeq completion shape
-      p.curCount % ps.steps.length == 0 &&
-        p.curCount / ps.steps.length >= ps.minRepeat
-    case al: AltSeq[E] => p.curCount >= al.minRepeat
     case ng: NestedGroup[E] =>
       // an iteration binds exactly `arity` events (the per-item bind
       // rules enforce it), so curCount % arity == 0 IS the boundary
@@ -415,13 +383,8 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
       next += np.copy(stepIdx = np.stepIdx + 1, curCount = 0, elemTs = t)
       val canGrow = elems(np.stepIdx) match {
         case s: Step[E] => np.curCount < s.maxCount
-        case g: GroupSeq[E] =>
-          // Long arithmetic: maxRepeat may be Int.MaxValue (`+`/`*`)
-          np.curCount.toLong < g.maxRepeat.toLong * g.steps.length
-        case ps: PermSeq[E] =>
-          np.curCount.toLong < ps.maxRepeat.toLong * ps.steps.length
-        case al: AltSeq[E] => np.curCount < al.maxRepeat
         case ng: NestedGroup[E] =>
+          // Long arithmetic: maxRepeat may be Int.MaxValue (`+`/`*`)
           np.curCount.toLong < ng.maxRepeat.toLong * ng.arity
         case rx: RxElem[E] => rx.canConsume(np.curCount, np.rxCnt)
         case _ => false
@@ -559,11 +522,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
 
   private def headCanSeed(e: E): Boolean = elems.head match {
     case s: Step[E] => evalSeed(s, e)
-    case g: GroupSeq[E] => evalSeed(g.steps(0), e)
-    case l: Logical[E] => evalSeed(l.left, e) || evalSeed(l.right, e)
-    case pm: Permute[E] => pm.steps.exists(evalSeed(_, e))
-    case ps: PermSeq[E] => ps.steps.exists(evalSeed(_, e))
-    case al: AltSeq[E] => evalSeed(al.left, e) || evalSeed(al.right, e)
     case ng: NestedGroup[E] =>
       ngBindSlot(ng, 0, 0, 0, null, e, seed = true) >= 0
     case rx: RxElem[E] =>
@@ -610,94 +568,13 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
               moved = true
               if (p.curCount >= s.minCount) keepOriginal = true
             }
-          case g: GroupSeq[E] =>
-            // the group cycles its inner position: bind the event to
-            // the CURRENT inner step; extension from a complete state
-            // (iteration boundary, >= minRepeat) is a branch — the
-            // un-extended partial stays live to advance with fewer
-            // iterations (the Step at/after-minCount convention)
-            val len = g.steps.length
-            val pos = p.curCount % len
-            // Long arithmetic: maxRepeat may be Int.MaxValue (`+`/`*`)
-            if (p.curCount.toLong < g.maxRepeat.toLong * len &&
-                evalPred(g.steps(pos), e, p)) {
-              val np = p.copy(curCount = p.curCount + 1,
-                groups = bound(p, slotBase(p.stepIdx) + pos, e))
-              if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-              moved = true
-              if (complete(p)) keepOriginal = true
-            }
-          case l: Logical[E] =>
-            val b = slotBase(p.stepIdx)
-            val leftOpen = !slotFilled(p, b)
-            val rightOpen = !slotFilled(p, b + 1)
-            // or: stop binding once one side matched (it is complete);
-            // and: fill whichever side is open, left priority
-            val bindLeft = leftOpen && evalPred(l.left, e, p) &&
-              (l.isAnd || rightOpen)
-            val bindRight = !bindLeft && rightOpen && evalPred(l.right, e, p) &&
-              (l.isAnd || leftOpen)
-            val slot = if (bindLeft) b else if (bindRight) b + 1 else -1
-            if (slot >= 0) {
-              val np = p.copy(curCount = 1, groups = bound(p, slot, e))
-              if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-              moved = true
-            }
-          case pm: Permute[E] =>
-            // bind the FIRST declaration-order unbound step the event
-            // satisfies (the Logical left-priority rule, k sides)
-            val b = slotBase(p.stepIdx)
-            val i = pm.steps.indices.find(i =>
-              !slotFilled(p, b + i) && evalPred(pm.steps(i), e, p))
-            i.foreach { slot =>
-              val np = p.copy(curCount = p.curCount + 1,
-                groups = bound(p, b + slot, e))
-              if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-              moved = true
-            }
-          case ps: PermSeq[E] =>
-            // bind the first declaration-order step NOT yet bound in
-            // the CURRENT iteration (slot count == completed
-            // iterations) whose predicate the event satisfies;
-            // extension from a complete boundary is a branch
-            val k = ps.steps.length
-            val b = slotBase(p.stepIdx)
-            if (p.curCount.toLong < ps.maxRepeat.toLong * k) {
-              val iterDone = p.curCount / k
-              val i = ps.steps.indices.find { i =>
-                val cnt = if (b + i < p.groups.length) p.groups(b + i).length
-                  else 0
-                cnt == iterDone && evalPred(ps.steps(i), e, p)
-              }
-              i.foreach { slot =>
-                val np = p.copy(curCount = p.curCount + 1,
-                  groups = bound(p, b + slot, e))
-                if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-                moved = true
-                if (complete(p)) keepOriginal = true
-              }
-            }
-          case al: AltSeq[E] =>
-            // one event per iteration, left priority; extension from a
-            // complete count is a branch (the Step convention)
-            if (p.curCount < al.maxRepeat) {
-              val b = slotBase(p.stepIdx)
-              val slot =
-                if (evalPred(al.left, e, p)) b
-                else if (evalPred(al.right, e, p)) b + 1
-                else -1
-              if (slot >= 0) {
-                val np = p.copy(curCount = p.curCount + 1,
-                  groups = bound(p, slot, e))
-                if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-                moved = true
-                if (p.curCount >= al.minRepeat) keepOriginal = true
-              }
-            }
           case ng: NestedGroup[E] =>
             // walk the iteration's item sequence; extension from a
-            // complete boundary is a branch (the GroupSeq convention)
+            // complete boundary is a branch — the un-extended partial
+            // stays live to advance with fewer iterations (the Step
+            // at/after-minCount convention)
             val L = ng.arity
+            // Long arithmetic: maxRepeat may be Int.MaxValue (`+`/`*`)
             if (p.curCount.toLong < ng.maxRepeat.toLong * L) {
               val slot = ngBindSlot(ng, p.curCount % L, p.curCount / L,
                 slotBase(p.stepIdx), p, e, seed = false)
@@ -713,7 +590,7 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
             // one branch per distinct automaton transition the event
             // fires from the configuration's ε-closure; the original
             // stays live only when the element is already complete
-            // (the GroupSeq boundary convention)
+            // (the NestedGroup boundary convention)
             val branches = rx.eventBranches(p.curCount, p.rxCnt, e,
               s => evalPred(s, e, p))
             if (branches.nonEmpty) {
@@ -746,69 +623,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
                   moved = true
                 }
                 if (sj.minCount == 0) j += 1 else scan = false
-              case gj: GroupSeq[E] =>
-                if (gj.maxRepeat >= 1 && evalPred(gj.steps(0), e, p)) {
-                  val np = Partial(j, 1, p.startTs,
-                    bound(p, slotBase(j), e), elemTs = t, startTie = p.startTie)
-                  if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-                  moved = true
-                }
-                if (gj.minRepeat == 0) j += 1 else scan = false
-              case lj: Logical[E] =>
-                val bj = slotBase(j)
-                val slot =
-                  if (evalPred(lj.left, e, p)) bj
-                  else if (evalPred(lj.right, e, p)) bj + 1
-                  else -1
-                if (slot >= 0) {
-                  val np = Partial(j, 1, p.startTs,
-                    bound(p, slot, e), elemTs = t, startTie = p.startTie)
-                  if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-                  moved = true
-                }
-                scan = false
-              case pj: Permute[E] =>
-                val bj = slotBase(j)
-                pj.steps.indices.find(i => evalPred(pj.steps(i), e, p))
-                  .foreach { i =>
-                    val np = Partial(j, 1, p.startTs,
-                      bound(p, bj + i, e), elemTs = t, startTie = p.startTie)
-                    if (!emitIfComplete(np, evOut, t))
-                      addPartial(np, t, next)
-                    moved = true
-                  }
-                scan = false
-              case psj: PermSeq[E] =>
-                if (psj.maxRepeat >= 1) {
-                  val bj = slotBase(j)
-                  psj.steps.indices.find(i => evalPred(psj.steps(i), e, p))
-                    .foreach { i =>
-                      val np = Partial(j, 1, p.startTs,
-                        bound(p, bj + i, e), elemTs = t,
-                        startTie = p.startTie)
-                      if (!emitIfComplete(np, evOut, t))
-                        addPartial(np, t, next)
-                      moved = true
-                    }
-                }
-                if (psj.minRepeat == 0) j += 1 else scan = false
-              case alj: AltSeq[E] =>
-                if (alj.maxRepeat >= 1) {
-                  val bj = slotBase(j)
-                  val slot =
-                    if (evalPred(alj.left, e, p)) bj
-                    else if (evalPred(alj.right, e, p)) bj + 1
-                    else -1
-                  if (slot >= 0) {
-                    val np = Partial(j, 1, p.startTs,
-                      bound(p, slot, e), elemTs = t,
-                      startTie = p.startTie)
-                    if (!emitIfComplete(np, evOut, t))
-                      addPartial(np, t, next)
-                    moved = true
-                  }
-                }
-                if (alj.minRepeat == 0) j += 1 else scan = false
               case ngj: NestedGroup[E] =>
                 if (ngj.maxRepeat >= 1) {
                   val bj = slotBase(j)
@@ -848,17 +662,10 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
           // did not consume this event dies — no element type may
           // wait out an intervening row
           val mustDie = pattern.strictAll || (elems(p.stepIdx) match {
-            case s: Step[E] =>
-              // strict contiguity: the immediately-next event had to qualify
-              (p.curCount < s.minCount && s.strict) ||
-              (complete(p) && p.stepIdx < last && strictNext(p)) ||
-              (complete(p) && p.stepIdx == last)
-            case _: Logical[E] | _: GroupSeq[E] | _: Permute[E] |
-                 _: PermSeq[E] | _: AltSeq[E] | _: NestedGroup[E] |
-                 _: RxElem[E] =>
-              (complete(p) && p.stepIdx < last && strictNext(p)) ||
-              (complete(p) && p.stepIdx == last)
             case _: Absence[E] => false
+            // strict contiguity: the immediately-next event had to qualify
+            case s: Step[E] if p.curCount < s.minCount && s.strict => true
+            case _ => complete(p) && (p.stepIdx == last || strictNext(p))
           })
           if (!mustDie) next += p
         } else if (keepOriginal && !pattern.strictAll) {
@@ -881,52 +688,6 @@ final class Nfa[E](val pattern: PatternDef[E], val tsOf: E => Long,
         case s: Step[E] =>
           if (evalSeed(s, e)) {
             val np = Partial(0, 1, t, Vector(Vector(mat(e))), elemTs = t,
-              startTie = if (tieOf == null) 0L else tieOf(e))
-            if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-          }
-        case g: GroupSeq[E] =>
-          if (evalSeed(g.steps(0), e)) {
-            val np = Partial(0, 1, t, Vector(Vector(mat(e))), elemTs = t,
-              startTie = if (tieOf == null) 0L else tieOf(e))
-            if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-          }
-        case l: Logical[E] =>
-          val slot =
-            if (evalSeed(l.left, e)) 0
-            else if (evalSeed(l.right, e)) 1
-            else -1
-          if (slot >= 0) {
-            val g = if (slot == 0) Vector(Vector(mat(e)))
-              else Vector(Vector.empty[E], Vector(mat(e)))
-            val np = Partial(0, 1, t, g, elemTs = t,
-              startTie = if (tieOf == null) 0L else tieOf(e))
-            if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-          }
-        case pm: Permute[E] =>
-          pm.steps.indices.find(i => evalSeed(pm.steps(i), e))
-            .foreach { i =>
-              val g = Vector.fill(i)(Vector.empty[E]) :+ Vector(mat(e))
-              val np = Partial(0, 1, t, g, elemTs = t,
-                startTie = if (tieOf == null) 0L else tieOf(e))
-              if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-            }
-        case ps: PermSeq[E] =>
-          ps.steps.indices.find(i => evalSeed(ps.steps(i), e))
-            .foreach { i =>
-              val g = Vector.fill(i)(Vector.empty[E]) :+ Vector(mat(e))
-              val np = Partial(0, 1, t, g, elemTs = t,
-                startTie = if (tieOf == null) 0L else tieOf(e))
-              if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
-            }
-        case al: AltSeq[E] =>
-          val slot =
-            if (evalSeed(al.left, e)) 0
-            else if (evalSeed(al.right, e)) 1
-            else -1
-          if (slot >= 0) {
-            val g = if (slot == 0) Vector(Vector(mat(e)))
-              else Vector(Vector.empty[E], Vector(mat(e)))
-            val np = Partial(0, 1, t, g, elemTs = t,
               startTie = if (tieOf == null) 0L else tieOf(e))
             if (!emitIfComplete(np, evOut, t)) addPartial(np, t, next)
           }

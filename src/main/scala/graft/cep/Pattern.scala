@@ -51,59 +51,17 @@ final case class Step[E](
   def names: IndexedSeq[String] = IndexedSeq(name)
 }
 
-/** `left and right` / `left or right` logical state element. Each side
-  * binds at most one event; sides bind in arrival order (left gets
-  * priority when one event satisfies both).
+/** `left and right` / `left or right` logical state elements, built
+  * as one-iteration [[NestedGroup]]s: `and` is a two-member
+  * [[GPerm]] (each side binds one event, either arrival order, left
+  * priority when one event satisfies both), `or` a [[GAlt]] (the first
+  * event matching either side completes it, left priority).
   */
-final case class Logical[E](
-    left: Step[E], right: Step[E], isAnd: Boolean) extends PatternElem[E] {
-  def names: IndexedSeq[String] = IndexedSeq(left.name, right.name)
-}
-
 object Logical {
-  def and[E](left: Step[E], right: Step[E]): Logical[E] =
-    Logical(left, right, isAnd = true)
-  def or[E](left: Step[E], right: Step[E]): Logical[E] =
-    Logical(left, right, isAnd = false)
-}
-
-/** Quantified concatenation group `(s1 s2 … sk){min,max}` — SQL:2016
-  * MATCH_RECOGNIZE's quantified group, under the engine's relaxed
-  * (skip-till-next-match) semantics: each iteration binds ONE event per
-  * inner step, in inner order; iteration r's events append to the same
-  * per-step slots, so `a` in `(a b)+` exposes every iteration's `a`
-  * events in bind order (the [[Step]] count-quantifier convention,
-  * generalized to a sequence). Completion follows the engine-wide
-  * greedy-min rule: the group is satisfied at `minRepeat` full
-  * iterations (emitting there when it is the last element) and may keep
-  * growing toward `maxRepeat` while the pattern continues.
-  *
-  * Inner steps are plain variables (no nested quantifier/strictness) —
-  * the SQL dialect fails fast on anything deeper, matching the subset
-  * the engines this mirrors (Flink CEP, Trino) support natively.
-  */
-final case class GroupSeq[E](steps: IndexedSeq[Step[E]], minRepeat: Int,
-    maxRepeat: Int) extends PatternElem[E] {
-  require(steps.nonEmpty, "group needs at least one inner step")
-  require(steps.forall(s => s.minCount == 1 && s.maxCount == 1 && !s.strict),
-    "group inner steps must be plain variables (no quantifier/strict)")
-  require(minRepeat >= 0 && maxRepeat >= math.max(minRepeat, 1),
-    s"bad group quantifier {$minRepeat,$maxRepeat}")
-  def names: IndexedSeq[String] = steps.map(_.name)
-}
-
-/** N-ary permutation element `PERMUTE(s1, …, sk)` — SQL:2016's
-  * all-orderings group under relaxed matching: binds EXACTLY ONE event
-  * per inner step, in ANY arrival order, completing when every step is
-  * bound. An event binds the FIRST (declaration-order) unbound step
-  * whose predicate it satisfies — the [[Logical]] left-priority rule
-  * generalized to k sides; [[Logical]]`.and` is the k = 2 case.
-  */
-final case class Permute[E](steps: IndexedSeq[Step[E]]) extends PatternElem[E] {
-  require(steps.length >= 2, "permute needs at least 2 inner steps")
-  require(steps.forall(s => s.minCount == 1 && s.maxCount == 1 && !s.strict),
-    "permute inner steps must be plain variables (no quantifier/strict)")
-  def names: IndexedSeq[String] = steps.map(_.name)
+  def and[E](left: Step[E], right: Step[E]): NestedGroup[E] =
+    NestedGroup(IndexedSeq(GPerm(IndexedSeq(left, right))), 1, 1)
+  def or[E](left: Step[E], right: Step[E]): NestedGroup[E] =
+    NestedGroup(IndexedSeq(GAlt(left, right)), 1, 1)
 }
 
 /** One item of a [[NestedGroup]] iteration. */
@@ -144,9 +102,18 @@ final case class GPerm[E](steps: IndexedSeq[Step[E]])
   * SQL:2016 `(a (b|c) PERMUTE(d,e)){m,n}`: each iteration walks the
   * items in order (an alternation consumes one routed event, a
   * PERMUTE its members in any arrival order), all iterations append
-  * to the same per-variable slots, completion is greedy-min at an
-  * iteration boundary with at least `minRepeat` full iterations.
-  * [[GroupSeq]] is the all-plain-variables special case.
+  * to the same per-variable slots, so `a` in `(a b)+` exposes every
+  * iteration's `a` events in bind order. Completion is greedy-min at
+  * an iteration boundary with at least `minRepeat` full iterations
+  * (emitting there when the group is the last element); growth
+  * toward `maxRepeat` from a complete boundary is a branch.
+  *
+  * Every structured group shape is one of these: `(a b){m,n}` is
+  * all-[[GVar]] items, `(a|b){m,n}` one [[GAlt]], `PERMUTE(a, …){m,n}`
+  * one [[GPerm]], and [[Logical]]`.and`/`.or` the {1,1} [[GPerm]] /
+  * [[GAlt]] groups. An event binds by priority — left side, first
+  * unbound member in declaration order — and never forks; [[RxElem]]
+  * is the forking form.
   *
   * State encoding: `curCount` = total events bound; an iteration
   * binds exactly `arity = Σ item.arity` events, so `curCount % arity`
@@ -170,46 +137,6 @@ final case class NestedGroup[E](items: IndexedSeq[GroupItem[E]],
   /** First slot of each item (within this element's slot range). */
   val itemSlotBase: IndexedSeq[Int] =
     items.scanLeft(0)(_ + _.names.length).init
-}
-
-/** Quantified n-ary permutation `PERMUTE(s1, …, sk){min,max}` —
-  * SQL:2016's quantified all-orderings group: each ITERATION binds one
-  * event per inner step in ANY arrival order (declaration-order
-  * priority among this iteration's unbound steps — the [[Permute]]
-  * rule); iterations run sequentially and append to the same
-  * per-variable slots (the [[GroupSeq]] slot convention). Completion
-  * is greedy-min at an iteration boundary with at least `minRepeat`
-  * full iterations. [[Permute]] is the {1,1} case.
-  *
-  * Invariant: within a partial, slot counts differ by at most one
-  * (an event may only bind a step not yet bound in the CURRENT
-  * iteration), so `curCount % k == 0` ⟺ iteration boundary.
-  */
-final case class PermSeq[E](steps: IndexedSeq[Step[E]], minRepeat: Int,
-    maxRepeat: Int) extends PatternElem[E] {
-  require(steps.length >= 2, "permute needs at least 2 inner steps")
-  require(steps.forall(s => s.minCount == 1 && s.maxCount == 1 && !s.strict),
-    "permute inner steps must be plain variables (no quantifier/strict)")
-  require(minRepeat >= 0 && maxRepeat >= math.max(minRepeat, 1),
-    s"bad permute quantifier {$minRepeat,$maxRepeat}")
-  def names: IndexedSeq[String] = steps.map(_.name)
-}
-
-/** Quantified binary alternation `(left | right){min,max}` — SQL:2016's
-  * quantified alternation: each iteration binds ONE event to whichever
-  * side's predicate it satisfies (left priority when both), appending
-  * to that side's slot; iterations accumulate toward `maxRepeat` with
-  * greedy-min completion at `minRepeat`. The un-quantified
-  * [[Logical]]`.or` is the {1,1} case.
-  */
-final case class AltSeq[E](left: Step[E], right: Step[E], minRepeat: Int,
-    maxRepeat: Int) extends PatternElem[E] {
-  require(Seq(left, right).forall(s =>
-      s.minCount == 1 && s.maxCount == 1 && !s.strict),
-    "alternation sides must be plain variables (no quantifier/strict)")
-  require(minRepeat >= 0 && maxRepeat >= math.max(minRepeat, 1),
-    s"bad alternation quantifier {$minRepeat,$maxRepeat}")
-  def names: IndexedSeq[String] = IndexedSeq(left.name, right.name)
 }
 
 /** Regex AST for [[RxElem]] — the fully recursive pattern element that
@@ -285,11 +212,14 @@ final case class RxPermute[E](members: IndexedSeq[RxNode[E]])
   * their relevant bound, so the configuration space (and with it
   * ε-closure computation) is finite even for unbounded `+`/`*`.
   *
-  * This subsumes [[GroupSeq]]/[[AltSeq]]/[[PermSeq]]/[[NestedGroup]]
-  * shapes; those stay as cheaper special cases — the SQL compiler
-  * routes a pattern item here only when its shape needs recursion
-  * (nesting depth > 1, quantified inner items, alternation of
-  * sequences).
+  * It can express every [[NestedGroup]] shape, but it does not bind
+  * the same way: an event that satisfies two alternatives here forks
+  * one branch per transition, while a [[NestedGroup]] binds it to the
+  * priority side only (left alternative, first unbound PERMUTE member
+  * in declaration order). The SQL compiler therefore routes a pattern
+  * item here only when its shape needs recursion (nesting depth > 1,
+  * quantified inner items, alternation of sequences, PERMUTE of
+  * composite items).
   */
 final case class RxElem[E](root: RxNode[E]) extends PatternElem[E] {
 
@@ -605,13 +535,6 @@ final case class PatternDef[E](
     }
     steps.foreach {
       case s: Step[E] => sb.append("S:"); stp(s)
-      case l: Logical[E] =>
-        sb.append(if (l.isAnd) "L&:" else "L|:"); stp(l.left); stp(l.right)
-      case g: GroupSeq[E] =>
-        sb.append("G:"); g.steps.foreach(stp)
-        sb.append('{').append(g.minRepeat).append(',')
-          .append(g.maxRepeat).append('}')
-      case p: Permute[E] => sb.append("P:"); p.steps.foreach(stp)
       case n: NestedGroup[E] =>
         sb.append("N:")
         n.items.foreach {
@@ -621,14 +544,6 @@ final case class PatternDef[E](
         }
         sb.append('{').append(n.minRepeat).append(',')
           .append(n.maxRepeat).append('}')
-      case p: PermSeq[E] =>
-        sb.append("PS:"); p.steps.foreach(stp)
-        sb.append('{').append(p.minRepeat).append(',')
-          .append(p.maxRepeat).append('}')
-      case a: AltSeq[E] =>
-        sb.append("A:"); stp(a.left); stp(a.right)
-        sb.append('{').append(a.minRepeat).append(',')
-          .append(a.maxRepeat).append('}')
       case r: RxElem[E] => sb.append(r.layoutSig)
       case a: Absence[E] => sb.append("!:"); stp(a.step)
     }

@@ -234,8 +234,9 @@ object PlanCompiler {
       case StepSpec(name, strict, mn, mx, ci) =>
         Step[DynEvt](name, _.flags(ci), mn, mx, strict)
       case LogicalSpec(lName, li, rName, ri, isAnd) =>
-        Logical[DynEvt](Step[DynEvt](lName, _.flags(li)),
-          Step[DynEvt](rName, _.flags(ri)), isAnd)
+        val (l, r) = (Step[DynEvt](lName, _.flags(li)),
+          Step[DynEvt](rName, _.flags(ri)))
+        if (isAnd) Logical.and(l, r) else Logical.or(l, r)
       case AbsenceSpec(name, forMs, ci) =>
         Absence[DynEvt](Step[DynEvt](name, _.flags(ci)), forMs)
     }

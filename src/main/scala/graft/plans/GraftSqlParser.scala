@@ -79,8 +79,8 @@ class GraftSqlParser(delegate: ParserInterface, session: SparkSession)
   *   AFTER MATCH SKIP PAST LAST ROW    -- or SKIP TO NEXT ROW
   *                                     -- (= the overlap default)
   *   PATTERN (a b+ (c|d))              -- quantifiers: + * ? {m,n};
-  *                                     -- binary alternation (x|y);
-  *                                     -- binary PERMUTE(x,y);
+  *                                     -- alternation (x|y);
+  *                                     -- PERMUTE(x, y, …);
   *                                     -- quantified groups (x y)+
   *   WITHIN 600000000                  -- optional: ORDER BY units, or
   *                                     -- INTERVAL '10' MINUTE (needs
@@ -155,21 +155,18 @@ class GraftSqlParser(delegate: ParserInterface, session: SparkSession)
   * required) emitted by the stateful operator itself once the
   * watermark passes each row's ts + within decision horizon.
   *
-  * `PERMUTE(x, y)` (SQL:2016 `(x y | y x)`) compiles to the operator's
-  * both-in-either-order logical element, and `PERMUTE(x, y, z, …)` to
-  * the n-ary [[graft.cep.Permute]] element (one event per variable,
-  * any arrival order, declaration-order priority). Quantified forms:
-  * `PERMUTE(x, …){m,n}`/`+`/`*`/`?` compiles to [[graft.cep.PermSeq]]
-  * (each iteration one event per variable in any order, iterations
-  * share the slots) and a quantified alternation `(x|y){m,n}` to
-  * [[graft.cep.AltSeq]] (one event per iteration to whichever side
-  * matches, left priority); quantified
-  * concatenation
-  * groups `(x y)+` / `(x y)*` / `(x y)?` / `(x y){m,n}` to the
-  * [[graft.cep.GroupSeq]] NFA element — each iteration binds one event
-  * per inner variable in order, iterations share the per-variable
-  * slots, and completion is greedy-min (the group is satisfied — and
-  * emits, when last — at `m` full iterations).
+  * Groups of plain variables compile to one NFA element,
+  * [[graft.cep.NestedGroup]]: `PERMUTE(x, y, …)` (SQL:2016's
+  * `(x y | y x)` for two) binds one event per variable in any arrival
+  * order, an alternation `(x|y)` one event to whichever side matches,
+  * and a concatenation group `(x y)` one event per variable in order;
+  * a concatenation group may also hold such alternations and
+  * PERMUTEs, `(a (b|c) PERMUTE(d,e))`. Each takes the quantifiers
+  * `{m,n}`/`+`/`*`/`?`: iterations share the per-variable slots, and
+  * completion is greedy-min (the group is satisfied — and emits, when
+  * last — at `m` full iterations). An event that satisfies two of the
+  * group's variables binds by priority (the left side, the first
+  * unbound PERMUTE member in declaration order) and does not fork.
   *
   * A STREAMING table dispatches to [[MatchRecognize.streamingFull]]
   * (same output schema, watermark-buffered NFA) and requires the
@@ -177,22 +174,25 @@ class GraftSqlParser(delegate: ParserInterface, session: SparkSession)
   * PREV/NEXT in one STREAMING statement (the release decorator embeds
   * the lag values into the event payload so the per-partial ctxPred
   * evaluator can read both). Not supported (fail fast): PERMUTE of
-  * more than 4 composite (non-variable) items (k! ordering
-  * expansion).
+  * more than 16 composite (non-variable) items (the members-seen
+  * bitmask automaton explores up to C(k, k/2) interleaving classes
+  * per seed).
   *
   * PATTERN is parsed by a recursive-descent grammar: arbitrary
   * nesting depth, quantified items inside groups, alternation of
   * sequences (`(a b | c d)`), top-level alternation, a variable
   * occurring at several places (`(a b a)` — occurrences share the
   * binding slot), and reluctant (lazy) quantifiers `+?` `*?` `??`
-  * `{m,n}?`. Shapes the dedicated structured NFA elements cover
-  * compile to them unchanged (quantified variables, binary
-  * alternations, PERMUTEs, depth-1 groups); anything deeper compiles
-  * to the recursive counter-automaton element
-  * ([[graft.cep.RxElem]]). Inside that element a fireable event
-  * commits (the GroupSeq inner-item convention): alternatives come
-  * from genuinely distinct automaton transitions, not from the
-  * per-step skip-after-min branching of top-level quantifiers.
+  * `{m,n}?`. A quantified variable compiles to a step and the
+  * depth-1 group shapes above to a NestedGroup; anything deeper
+  * (groups inside groups, quantified items inside groups,
+  * alternation of sequences, PERMUTE of composite items) compiles to
+  * the recursive counter-automaton element ([[graft.cep.RxElem]]).
+  * Inside that element a fireable event commits (the NestedGroup
+  * convention), and an event that fires several transitions forks
+  * one branch per transition: alternatives come from genuinely
+  * distinct automaton transitions, not from the per-step
+  * skip-after-min branching of top-level quantifiers.
   * Reluctant quantifiers bind exactly `min` events (optional growth
   * is never forced under relaxed row matching, where the tail can
   * always bind a later row) and prefer the shortest same-start
@@ -1033,15 +1033,11 @@ private[graft] object MatchRecognizeSql {
       "ORDER BY takes (event-time[, tie-break])")
     val (tsCol, tieCol) = (order.head, order.lift(1).getOrElse(order.head))
 
-    // PATTERN (a b+ c{2,3} (d|e) PERMUTE(f,g) (h i)+) — linear
-    // concatenation of quantified variables, binary alternation groups,
-    // binary PERMUTE groups and quantified concatenation groups. An
-    // alternation maps onto the operator's EOr element (first event
-    // matching either side completes it); PERMUTE(x,y) — SQL:2016's
-    // (x y | y x) — onto EAnd (both bind, either arrival order) and
-    // PERMUTE of 3+ onto the n-ary EPermute; (v1 v2 …){m,n}/+/*/? onto
-    // EGroup (per-iteration sequence, shared slots across iterations).
-    // Quantified alternations and deeper nesting fail fast.
+    // PATTERN (a b+ c{2,3} (d|e) PERMUTE(f,g) (h i)+) — a
+    // concatenation of top-level items: quantified variables map onto
+    // EStep, groups of plain variables (alternation, PERMUTE,
+    // concatenation, quantified or not) onto EGroupN, anything deeper
+    // onto the recursive ERx element (see `classify` below).
     val patBody = need("pattern").trim
     require(patBody.startsWith("(") && patBody.endsWith(")"),
       "PATTERN needs parentheses")
@@ -1187,14 +1183,6 @@ private[graft] object MatchRecognizeSql {
 
     sealed trait PatElem
     case class Single(name: String, min: Int, max: Int) extends PatElem
-    case class Alt(leftName: String, rightName: String) extends PatElem
-    case class AltQ(leftName: String, rightName: String, min: Int,
-      max: Int) extends PatElem
-    case class Perm(leftName: String, rightName: String) extends PatElem
-    case class PermN(names: Seq[String]) extends PatElem
-    case class PermQ(names: Seq[String], min: Int, max: Int)
-      extends PatElem
-    case class Grp(names: Seq[String], min: Int, max: Int) extends PatElem
     sealed trait NItem
     case class NVar(name: String) extends NItem
     case class NAlt(l: String, r: String) extends NItem
@@ -1205,11 +1193,12 @@ private[graft] object MatchRecognizeSql {
       * recursive [[MatchRecognize.ERx]] element. */
     case class RxP(node: PNode) extends PatElem
 
-    // classification: the proven structured elements for the shapes
-    // they cover (identical behavior to prior rounds), the recursive
-    // Rx element for everything else (deeper nesting, quantified
-    // items inside groups, alternation of sequences, reluctant inner
-    // quantifiers)
+    // classification: a step for a quantified variable, one group
+    // element for every group of plain variables (alternation,
+    // PERMUTE, concatenation — binding by priority), the recursive Rx
+    // element for everything else (deeper nesting, quantified items
+    // inside groups, alternation of sequences, PERMUTE of composite
+    // items)
     def asPlainVar(n: PNode): Option[String] = n match {
       case PVar(v) => Some(v)
       case _ => None
@@ -1255,28 +1244,17 @@ private[graft] object MatchRecognizeSql {
       case PVar(n) => Single(n, 1, 1)
       case PQuant(PVar(n), mn, mx, rel) =>
         Single(n, mn, lazyMax(mn, mx, rel))
-      case PPermute(is) => allPlain(is) match {
-        case Some(vs) if vs.length == 2 => Perm(vs(0), vs(1))
-        case Some(vs) => PermN(vs)
-        case None => RxP(item)
-      }
-      case PQuant(p @ PPermute(is), mn, mx, rel) => allPlain(is) match {
-        case Some(vs) => PermQ(vs, mn, lazyMax(mn, mx, rel))
-        case None => RxP(item)
-      }
-      case PAltN(Seq(PVar(l), PVar(r))) => Alt(l, r)
-      case PQuant(PAltN(Seq(PVar(l), PVar(r))), mn, mx, rel) =>
-        AltQ(l, r, mn, lazyMax(mn, mx, rel))
+      case PPermute(_) | PAltN(_) =>
+        asNItem(item).fold[PatElem](RxP(item))(it => GrpN(Seq(it), 1, 1))
+      case PQuant(b @ (PPermute(_) | PAltN(_)), mn, mx, rel) =>
+        asNItem(b).fold[PatElem](RxP(item))(
+          it => GrpN(Seq(it), mn, lazyMax(mn, mx, rel)))
       case PSeqN(is) => classify(PQuant(PSeqN(is), 1, 1, false))
       case PQuant(PSeqN(is), mn, mx, rel) =>
-        allPlain(is) match {
-          case Some(vs) => Grp(vs, mn, lazyMax(mn, mx, rel))
-          case None =>
-            val nitems = is.map(asNItem)
-            if (nitems.forall(_.isDefined))
-              GrpN(nitems.flatten, mn, lazyMax(mn, mx, rel))
-            else RxP(item)
-        }
+        val nitems = is.map(asNItem)
+        if (nitems.forall(_.isDefined))
+          GrpN(nitems.flatten, mn, lazyMax(mn, mx, rel))
+        else RxP(item)
       case _ => RxP(item)
     }
     // SQL:2016 pattern anchors: '^' (match starts at the partition's
@@ -1328,12 +1306,6 @@ private[graft] object MatchRecognizeSql {
     val patElems0: Seq[PatElem] = topItems.map(classify)
     def elemNames(e: PatElem): Seq[String] = e match {
       case Single(n, _, _) => Seq(n)
-      case Alt(l, r) => Seq(l, r)
-      case AltQ(l, r, _, _) => Seq(l, r)
-      case Perm(l, r) => Seq(l, r)
-      case PermN(ns) => ns
-      case PermQ(ns, _, _) => ns
-      case Grp(ns, _, _) => ns
       case GrpN(items, _, _) => items.flatMap {
         case NVar(n) => Seq(n)
         case NAlt(l, r) => Seq(l, r)
@@ -2289,16 +2261,6 @@ private[graft] object MatchRecognizeSql {
     val elems: Seq[MatchRecognize.Elem] = patElems.map {
       case Single(n, mn, mx) =>
         MatchRecognize.EStep(n, pred(n), mn, mx)
-      case Alt(l, r) => MatchRecognize.EOr(l, pred(l), r, pred(r))
-      case Perm(l, r) => MatchRecognize.EAnd(l, pred(l), r, pred(r))
-      case PermN(ns) =>
-        MatchRecognize.EPermute(ns.map(n => n -> pred(n)))
-      case PermQ(ns, mn, mx) =>
-        MatchRecognize.EPermuteQ(ns.map(n => n -> pred(n)), mn, mx)
-      case AltQ(l, r, mn, mx) =>
-        MatchRecognize.EOrQ(l, pred(l), r, pred(r), mn, mx)
-      case Grp(ns, mn, mx) =>
-        MatchRecognize.EGroup(ns.map(n => n -> pred(n)), mn, mx)
       case GrpN(items, mn, mx) =>
         MatchRecognize.EGroupN(items.map {
           case NVar(n) => MatchRecognize.EGStep(n, pred(n))

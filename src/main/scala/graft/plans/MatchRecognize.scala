@@ -20,42 +20,9 @@ final case class StepSpec(name: String, min: Int = 1, max: Int = 1,
     strict: Boolean = false) extends MatchElemSpec {
   def names: Seq[String] = Seq(name); def arity = 1
 }
-final case class LogicalSpec(leftName: String, rightName: String,
-    isAnd: Boolean) extends MatchElemSpec {
-  def names: Seq[String] = Seq(leftName, rightName); def arity = 2
-}
 final case class AbsenceSpec(name: String, forTs: Long) extends MatchElemSpec {
   def names: Seq[String] = Seq(name); def arity = 1
 }
-/** Quantified concatenation group `(v1 v2 …){min,max}` — one predicate
-  * per inner variable, in order ([[graft.cep.GroupSeq]] semantics).
-  */
-final case class GroupSpec(groupNames: Seq[String], minRepeat: Int,
-    maxRepeat: Int) extends MatchElemSpec {
-  def names: Seq[String] = groupNames; def arity: Int = groupNames.length
-}
-/** N-ary `PERMUTE(v1, …, vk)` — one predicate per inner variable, in
-  * declaration order ([[graft.cep.Permute]] semantics).
-  */
-final case class PermuteSpec(permNames: Seq[String]) extends MatchElemSpec {
-  def names: Seq[String] = permNames; def arity: Int = permNames.length
-}
-
-/** Quantified n-ary `PERMUTE(v1, …, vk){m,n}` — one predicate per
-  * inner variable ([[graft.cep.PermSeq]] semantics).
-  */
-final case class PermSeqSpec(permNames: Seq[String], minRepeat: Int,
-    maxRepeat: Int) extends MatchElemSpec {
-  def names: Seq[String] = permNames; def arity: Int = permNames.length
-}
-/** Quantified binary alternation `(l | r){m,n}` — two predicates
-  * ([[graft.cep.AltSeq]] semantics).
-  */
-final case class AltSeqSpec(leftName: String, rightName: String,
-    minRepeat: Int, maxRepeat: Int) extends MatchElemSpec {
-  def names: Seq[String] = Seq(leftName, rightName); def arity = 2
-}
-
 /** Pure-data item shapes for [[NestedGroupSpec]]. Each consumes one
   * predicate per NAME, in order. */
 sealed trait NgItemSpec extends Serializable { def names: Seq[String] }
@@ -69,8 +36,9 @@ final case class NgAltSpec(leftName: String, rightName: String)
 final case class NgPermSpec(permNames: Seq[String]) extends NgItemSpec {
   def names: Seq[String] = permNames
 }
-/** Quantified group of heterogeneous items `(a (b|c) PERMUTE(d,e))
-  * {m,n}` — [[graft.cep.NestedGroup]] semantics. */
+/** Quantified group of items `(a (b|c) PERMUTE(d,e)){m,n}` —
+  * [[graft.cep.NestedGroup]] semantics; also every plain-variable
+  * group, alternation and PERMUTE, quantified or not. */
 final case class NestedGroupSpec(items: Seq[NgItemSpec], minRepeat: Int,
     maxRepeat: Int) extends MatchElemSpec {
   def names: Seq[String] = items.flatMap(_.names)
@@ -281,53 +249,38 @@ object MatchRecognize {
     */
   final case class EStep(name: String, pred: Column, min: Int = 1,
       max: Int = 1, strict: Boolean = false) extends Elem
-  /** `left and right`: both sides must bind, either arrival order. */
-  final case class EAnd(leftName: String, leftPred: Column,
-      rightName: String, rightPred: Column) extends Elem
-  /** `left or right`: first event matching either side completes. */
-  final case class EOr(leftName: String, leftPred: Column,
-      rightName: String, rightPred: Column) extends Elem
   /** `not pred for forTs`: absence window in `ts` units. */
   final case class ENotFor(name: String, pred: Column, forTs: Long)
       extends Elem
-  /** Quantified concatenation group `(v1 v2 …){min,max}` (SQL:2016
-    * `(a b)+` family): each iteration binds one event per inner
-    * variable in order; iterations append to the same per-variable
-    * slots ([[graft.cep.GroupSeq]] semantics — greedy-min completion).
-    */
-  final case class EGroup(steps: Seq[(String, Column)], minRepeat: Int,
-      maxRepeat: Int) extends Elem
-  /** N-ary `PERMUTE(v1, …, vk)`: one event per variable, any arrival
-    * order, declaration-order priority ([[graft.cep.Permute]]);
-    * [[EAnd]] is the binary case.
-    */
-  final case class EPermute(steps: Seq[(String, Column)]) extends Elem
-  /** Quantified `PERMUTE(v1, …, vk){m,n}`: each iteration binds one
-    * event per variable in any order; iterations share the slots
-    * ([[graft.cep.PermSeq]] — greedy-min completion).
-    */
-  final case class EPermuteQ(steps: Seq[(String, Column)],
-      minRepeat: Int, maxRepeat: Int) extends Elem
-  /** Quantified alternation `(l | r){m,n}`: each iteration binds one
-    * event to whichever side matches (left priority), accumulating in
-    * that side's slot ([[graft.cep.AltSeq]]).
-    */
-  final case class EOrQ(leftName: String, leftPred: Column,
-      rightName: String, rightPred: Column, minRepeat: Int,
-      maxRepeat: Int) extends Elem
   /** One item of an [[EGroupN]] iteration. */
   sealed trait EGItem
   final case class EGStep(name: String, pred: Column) extends EGItem
   final case class EGAlt(leftName: String, leftPred: Column,
       rightName: String, rightPred: Column) extends EGItem
   final case class EGPerm(steps: Seq[(String, Column)]) extends EGItem
-  /** Quantified group of heterogeneous items — SQL:2016 groups nested
-    * in groups, `(a (b|c) PERMUTE(d,e)){m,n}`: each iteration walks
-    * the items in order, iterations share the per-variable slots
+  /** Quantified group of items — SQL:2016 `(a b){m,n}`, `(a|b){m,n}`,
+    * `PERMUTE(a, b, …){m,n}` and groups nested in groups,
+    * `(a (b|c) PERMUTE(d,e)){m,n}`: each iteration walks the items in
+    * order, iterations share the per-variable slots
     * ([[graft.cep.NestedGroup]] — greedy-min completion).
     */
   final case class EGroupN(items: Seq[EGItem], minRepeat: Int,
       maxRepeat: Int) extends Elem
+  /** `left and right`: both sides bind, either arrival order (a
+    * one-iteration two-member PERMUTE group). */
+  object EAnd {
+    def apply(leftName: String, leftPred: Column, rightName: String,
+        rightPred: Column): EGroupN =
+      EGroupN(Seq(EGPerm(Seq(leftName -> leftPred, rightName -> rightPred))),
+        1, 1)
+  }
+  /** `left or right`: the first event matching either side completes
+    * it (a one-iteration alternation group). */
+  object EOr {
+    def apply(leftName: String, leftPred: Column, rightName: String,
+        rightPred: Column): EGroupN =
+      EGroupN(Seq(EGAlt(leftName, leftPred, rightName, rightPred)), 1, 1)
+  }
   /** Recursive regex element leaves/combinators — arbitrary nesting
     * depth, quantified inner items, alternation of sequences
     * ([[graft.cep.RxElem]] semantics). A variable may occur at several
@@ -412,20 +365,8 @@ object MatchRecognize {
     val (specs, predRefs) = pattern.map {
       case EStep(n, p, mn, mx, st) =>
         (StepSpec(n, mn, mx, st), Seq(resolve(p)))
-      case EAnd(ln, lp, rn, rp) =>
-        (LogicalSpec(ln, rn, isAnd = true), Seq(resolve(lp), resolve(rp)))
-      case EOr(ln, lp, rn, rp) =>
-        (LogicalSpec(ln, rn, isAnd = false), Seq(resolve(lp), resolve(rp)))
       case ENotFor(n, p, f) =>
         (AbsenceSpec(n, f), Seq(resolve(p)))
-      case EGroup(ss, mn, mx) =>
-        (GroupSpec(ss.map(_._1), mn, mx), ss.map(s => resolve(s._2)))
-      case EPermute(ss) =>
-        (PermuteSpec(ss.map(_._1)), ss.map(s => resolve(s._2)))
-      case EPermuteQ(ss, mn, mx) =>
-        (PermSeqSpec(ss.map(_._1), mn, mx), ss.map(s => resolve(s._2)))
-      case EOrQ(ln, lp, rn, rp, mn, mx) =>
-        (AltSeqSpec(ln, rn, mn, mx), Seq(resolve(lp), resolve(rp)))
       case EGroupN(items, mn, mx) =>
         (NestedGroupSpec(items.map {
           case EGStep(n, _) => NgVarSpec(n)
@@ -678,13 +619,7 @@ object MatchRecognize {
   private[graft] def slotNamesOf(pattern: Seq[Elem]): Seq[String] =
     pattern.flatMap {
       case EStep(n, _, _, _, _) => Seq(n)
-      case EAnd(l, _, r, _)     => Seq(l, r)
-      case EOr(l, _, r, _)      => Seq(l, r)
       case ENotFor(n, _, _)     => Seq(n)
-      case EGroup(ss, _, _)     => ss.map(_._1)
-      case EPermute(ss)         => ss.map(_._1)
-      case EPermuteQ(ss, _, _)  => ss.map(_._1)
-      case EOrQ(l, _, r, _, _, _) => Seq(l, r)
       case EGroupN(items, _, _) => items.flatMap {
         case EGStep(n, _) => Seq(n)
         case EGAlt(l, _, r, _) => Seq(l, r)
@@ -815,13 +750,7 @@ object MatchRecognize {
   private def streamPredCols(pattern: Seq[Elem]): Seq[Column] =
     pattern.flatMap {
       case EStep(_, p, _, _, _) => Seq(p)
-      case EAnd(_, lp, _, rp)   => Seq(lp, rp)
-      case EOr(_, lp, _, rp)    => Seq(lp, rp)
       case ENotFor(_, p, _)     => Seq(p)
-      case EGroup(ss, _, _)     => ss.map(_._2)
-      case EPermute(ss)         => ss.map(_._2)
-      case EPermuteQ(ss, _, _)  => ss.map(_._2)
-      case EOrQ(_, lp, _, rp, _, _) => Seq(lp, rp)
       case EGroupN(items, _, _) => items.flatMap {
         case EGStep(_, pc) => Seq(pc)
         case EGAlt(_, lp, _, rp) => Seq(lp, rp)
@@ -837,19 +766,11 @@ object MatchRecognize {
   private def streamElems(pattern: Seq[Elem],
       flagStep: (String, Int, Int, Boolean) => graft.cep.Step[Row])
       : IndexedSeq[graft.cep.PatternElem[Row]] = {
-    import graft.cep.{Absence, AltSeq, GAlt, GPerm, GroupSeq, GVar, Logical, NestedGroup, PermSeq, Permute, RxElem}
+    import graft.cep.{Absence, GAlt, GPerm, GVar, NestedGroup, RxElem}
     def one(n: String) = flagStep(n, 1, 1, false)
     pattern.map {
       case EStep(n, _, mn, mx, st) => flagStep(n, mn, mx, st)
-      case EAnd(ln, _, rn, _) => Logical[Row](one(ln), one(rn), isAnd = true)
-      case EOr(ln, _, rn, _) => Logical[Row](one(ln), one(rn), isAnd = false)
       case ENotFor(n, _, f) => Absence[Row](one(n), f)
-      case EGroup(ss, mn, mx) =>
-        GroupSeq[Row](ss.map(x => one(x._1)).toIndexedSeq, mn, mx)
-      case EPermute(ss) => Permute[Row](ss.map(x => one(x._1)).toIndexedSeq)
-      case EPermuteQ(ss, mn, mx) =>
-        PermSeq[Row](ss.map(x => one(x._1)).toIndexedSeq, mn, mx)
-      case EOrQ(ln, _, rn, _, mn, mx) => AltSeq[Row](one(ln), one(rn), mn, mx)
       case EGroupN(items, mn, mx) =>
         NestedGroup[Row](items.map {
           case EGStep(n, _) => GVar[Row](one(n))

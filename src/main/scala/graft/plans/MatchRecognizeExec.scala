@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistrib
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import graft.cep.{Absence, AltSeq, GroupSeq, Logical, Nfa, PatternDef, PatternMatch, PermSeq, Step}
+import graft.cep.{Absence, Nfa, PatternDef, PatternMatch, Step}
 
 /** Planner strategy for [[MatchRecognizeNode]] — registered either via
   * `SparkSessionExtensions.injectPlannerStrategy` ([[GraftExtensions]])
@@ -142,23 +142,8 @@ case class MatchRecognizeExec(
       }
       val pelems = specs.map {
         case StepSpec(n, mn, mx, st) => mkStep(n, mn, mx, st)
-        case LogicalSpec(ln, rn, isAnd) =>
-          Logical(mkStep(ln, 1, 1, strict = false),
-            mkStep(rn, 1, 1, strict = false), isAnd)
         case AbsenceSpec(n, f) =>
           Absence(mkStep(n, 1, 1, strict = false), f)
-        case GroupSpec(ns, mn, mx) =>
-          GroupSeq(ns.map(n =>
-            mkStep(n, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-        case PermuteSpec(ns) =>
-          graft.cep.Permute(ns.map(n =>
-            mkStep(n, 1, 1, strict = false)).toIndexedSeq)
-        case PermSeqSpec(ns, mn, mx) =>
-          graft.cep.PermSeq(ns.map(n =>
-            mkStep(n, 1, 1, strict = false)).toIndexedSeq, mn, mx)
-        case AltSeqSpec(ln, rn, mn, mx) =>
-          graft.cep.AltSeq(mkStep(ln, 1, 1, strict = false),
-            mkStep(rn, 1, 1, strict = false), mn, mx)
         case NestedGroupSpec(items, mn, mx) =>
           graft.cep.NestedGroup(items.map {
             case NgVarSpec(n) =>

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.cep.{Cep, PatternDef, Step}
+import graft.cep.{Cep, GAlt, GPerm, GVar, NestedGroup, PatternDef, Step}
 
 /** Streaming micro-batch throughput measurement against BASELINE.md's
   * working targets (events table replayed as a stream): stateless
@@ -99,35 +99,35 @@ object ThroughputBench {
 
     val cepEps = cepLeg("tp_cep")
 
-    // the round-11 quantified-group element on the same workload —
+    // the quantified-group element on the same workload —
     // (click purchase){1,2} per user; per-event cost adds the group's
     // inner-position bookkeeping to the Step baseline
-    val gpat = PatternDef[TpEvt](IndexedSeq(graft.cep.GroupSeq[TpEvt](
-      IndexedSeq(Step[TpEvt]("a", _.event_type == "click"),
-        Step[TpEvt]("b", _.event_type == "purchase")), 1, 2)),
+    val gpat = PatternDef[TpEvt](IndexedSeq(NestedGroup[TpEvt](
+      IndexedSeq(GVar(Step[TpEvt]("a", _.event_type == "click")),
+        GVar(Step[TpEvt]("b", _.event_type == "purchase"))), 1, 2)),
       withinMs = Some(600000000L))
     val groupEps = drive[TpOut](memSink("tp_cep_group"), in =>
       Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
         _.user_id, gpat, _.ts_us, _.event_id, tsScale = 1000L)(build))
 
-    // round-12 elements on the same workload, null-safe output (an
-    // alternation iteration may leave one side's slot empty)
+    // PERMUTE and alternation groups on the same workload, null-safe
+    // output (an alternation iteration may leave one side's slot empty)
     val buildSafe = (k: Long, m: graft.cep.PatternMatch[TpEvt]) =>
       Iterator.single(TpOut(k,
         m.get("a").headOption.map(_.event_id).getOrElse(-1L),
         m.get("b").headOption.map(_.event_id).getOrElse(-1L)))
     // quantified PERMUTE(click, purchase){1,2}: any-order iterations
-    val ppat = PatternDef[TpEvt](IndexedSeq(graft.cep.PermSeq[TpEvt](
-      IndexedSeq(Step[TpEvt]("a", _.event_type == "click"),
-        Step[TpEvt]("b", _.event_type == "purchase")), 1, 2)),
+    val ppat = PatternDef[TpEvt](IndexedSeq(NestedGroup[TpEvt](
+      IndexedSeq(GPerm(IndexedSeq(Step[TpEvt]("a", _.event_type == "click"),
+        Step[TpEvt]("b", _.event_type == "purchase")))), 1, 2)),
       withinMs = Some(600000000L))
     val permSeqEps = drive[TpOut](memSink("tp_cep_permseq"), in =>
       Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
         _.user_id, ppat, _.ts_us, _.event_id, tsScale = 1000L)(buildSafe))
     // quantified alternation (click|purchase){2,2}: routed iterations
-    val apat = PatternDef[TpEvt](IndexedSeq(graft.cep.AltSeq[TpEvt](
-      Step[TpEvt]("a", _.event_type == "click"),
-      Step[TpEvt]("b", _.event_type == "purchase"), 2, 2)),
+    val apat = PatternDef[TpEvt](IndexedSeq(NestedGroup[TpEvt](
+      IndexedSeq(GAlt(Step[TpEvt]("a", _.event_type == "click"),
+        Step[TpEvt]("b", _.event_type == "purchase"))), 2, 2)),
       withinMs = Some(600000000L))
     val altSeqEps = drive[TpOut](memSink("tp_cep_altseq"), in =>
       Cep.streaming[TpEvt, Long, TpOut](cepInput(in),

@@ -208,10 +208,10 @@ class CepSparkSpec extends SparkSpec {
     // inside the hold-back, so releasing anything pre-restart would
     // already be the bug.
     implicit val sqlCtx = spark.sqlContext
-    import graft.cep.AltSeq
+    import graft.cep.{GAlt, NestedGroup}
     val pat = PatternDef[TEvt](IndexedSeq(
-      AltSeq[TEvt](Step[TEvt]("p", _.typ == "A"),
-        Step[TEvt]("q", _.typ == "B"), 1, 1)),
+      NestedGroup[TEvt](IndexedSeq(GAlt(Step[TEvt]("p", _.typ == "A"),
+        Step[TEvt]("q", _.typ == "B"))), 1, 1)),
       withinMs = Some(50000L), every = true)
     val nb = Cep.Neighborhood[TEvt](0, 1, (e, _, _) => e)
     def build(k: Long, m: graft.cep.PatternMatch[TEvt]) =

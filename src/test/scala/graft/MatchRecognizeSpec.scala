@@ -151,7 +151,7 @@ class MatchRecognizeSpec extends SparkSpec {
   }
 
   test("randomized patterns: custom plan == in-memory NFA replay (8 seeds)") {
-    import graft.cep.{Absence, AltSeq, GAlt, GPerm, GroupSeq, GVar, Logical, NestedGroup, Nfa, PatternDef, Permute, PermSeq, Step}
+    import graft.cep.{Absence, GAlt, GPerm, GVar, Logical, NestedGroup, Nfa, PatternDef, Step}
     import graft.cep.PatternElem
     import graft.plans.MatchRecognize.Elem
 
@@ -161,10 +161,9 @@ class MatchRecognizeSpec extends SparkSpec {
       // parallel user-facing elems + kernel elems from one random spec
       val n = 1 + r.nextInt(3)
       val specs: IndexedSeq[(Elem, PatternElem[REv])] = (0 until n).map { i =>
-        // the head may not be a logical/absence element (original
-        // constraint) — remap head draws 4..8 onto the round-11/12
-        // group/permute/alternation elements, which ARE valid heads
-        // (their generators keep minRepeat >= 1)
+        // the head draw skips 4 (and/or) and 5 (absence, which may
+        // not head a pattern): head draws 4..9 remap onto the quantified
+        // group shapes, whose generators keep minRepeat >= 1
         val draw0 = r.nextInt(if (i == 0) 10 else 12)
         val draw = if (i == 0 && draw0 >= 4) draw0 + 2 else draw0
         draw match {
@@ -185,29 +184,31 @@ class MatchRecognizeSpec extends SparkSpec {
                 RxVar(Step[REv](s"s${i}rb", _.event_type == t2)))),
                 gm, gx)): PatternElem[REv])
           case 8 =>
-            // quantified PERMUTE — round-12 element
+            // quantified PERMUTE
             val (t1, t2) = (typ(), typ())
             val mn = 1 + r.nextInt(2)
             val mx = mn + r.nextInt(2)
-            (MatchRecognize.EPermuteQ(Seq(
+            (MatchRecognize.EGroupN(Seq(MatchRecognize.EGPerm(Seq(
                 s"s${i}p" -> ($"event_type" === t1),
-                s"s${i}q" -> ($"event_type" === t2)), mn, mx): Elem,
-              PermSeq[REv](IndexedSeq(
+                s"s${i}q" -> ($"event_type" === t2)))), mn, mx): Elem,
+              NestedGroup[REv](IndexedSeq(GPerm(IndexedSeq(
                 Step[REv](s"s${i}p", _.event_type == t1),
-                Step[REv](s"s${i}q", _.event_type == t2)), mn, mx):
+                Step[REv](s"s${i}q", _.event_type == t2)))), mn, mx):
                 PatternElem[REv])
           case 9 =>
-            // quantified alternation — round-12 element
+            // quantified alternation
             val (t1, t2) = (typ(), typ())
             val mn = 1 + r.nextInt(2)
             val mx = mn + r.nextInt(3)
-            (MatchRecognize.EOrQ(s"s${i}l", $"event_type" === t1,
-                s"s${i}r", $"event_type" === t2, mn, mx): Elem,
-              AltSeq[REv](Step[REv](s"s${i}l", _.event_type == t1),
-                Step[REv](s"s${i}r", _.event_type == t2), mn, mx):
+            (MatchRecognize.EGroupN(Seq(MatchRecognize.EGAlt(
+                s"s${i}l", $"event_type" === t1,
+                s"s${i}r", $"event_type" === t2)), mn, mx): Elem,
+              NestedGroup[REv](IndexedSeq(GAlt(
+                Step[REv](s"s${i}l", _.event_type == t1),
+                Step[REv](s"s${i}r", _.event_type == t2))), mn, mx):
                 PatternElem[REv])
           case 10 =>
-            // nested group (v (x|y)){mn,mx} — round-12 element
+            // nested group (v (x|y)){mn,mx}
             val (tv, t1, t2) = (typ(), typ(), typ())
             val mn = 1 + r.nextInt(2)
             val mx = mn + r.nextInt(2)
@@ -221,28 +222,29 @@ class MatchRecognizeSpec extends SparkSpec {
                   Step[REv](s"s${i}y", _.event_type == t2))), mn, mx):
                 PatternElem[REv])
           case 6 =>
-            // quantified group (x y){mn,mx} — round-11 element
+            // quantified group (x y){mn,mx}
             val (t1, t2) = (typ(), typ())
             val mn = 1 + r.nextInt(2)
             val mx = mn + r.nextInt(2)
-            (MatchRecognize.EGroup(Seq(
-                s"s${i}x" -> ($"event_type" === t1),
-                s"s${i}y" -> ($"event_type" === t2)), mn, mx): Elem,
-              GroupSeq[REv](IndexedSeq(
-                Step[REv](s"s${i}x", _.event_type == t1),
-                Step[REv](s"s${i}y", _.event_type == t2)), mn, mx):
+            (MatchRecognize.EGroupN(Seq(
+                MatchRecognize.EGStep(s"s${i}x", $"event_type" === t1),
+                MatchRecognize.EGStep(s"s${i}y", $"event_type" === t2)),
+                mn, mx): Elem,
+              NestedGroup[REv](IndexedSeq(
+                GVar(Step[REv](s"s${i}x", _.event_type == t1)),
+                GVar(Step[REv](s"s${i}y", _.event_type == t2))), mn, mx):
                 PatternElem[REv])
           case 7 =>
-            // n-ary permute — round-11 element
+            // n-ary permute
             val (t1, t2, t3) = (typ(), typ(), typ())
-            (MatchRecognize.EPermute(Seq(
+            (MatchRecognize.EGroupN(Seq(MatchRecognize.EGPerm(Seq(
                 s"s${i}p" -> ($"event_type" === t1),
                 s"s${i}q" -> ($"event_type" === t2),
-                s"s${i}r" -> ($"event_type" === t3))): Elem,
-              Permute[REv](IndexedSeq(
+                s"s${i}r" -> ($"event_type" === t3)))), 1, 1): Elem,
+              NestedGroup[REv](IndexedSeq(GPerm(IndexedSeq(
                 Step[REv](s"s${i}p", _.event_type == t1),
                 Step[REv](s"s${i}q", _.event_type == t2),
-                Step[REv](s"s${i}r", _.event_type == t3))):
+                Step[REv](s"s${i}r", _.event_type == t3)))), 1, 1):
                 PatternElem[REv])
           case 4 =>
             val (t1, t2, and) = (typ(), typ(), r.nextBoolean())
@@ -251,9 +253,10 @@ class MatchRecognizeSpec extends SparkSpec {
                 s"s${i}r", $"event_type" === t2)
               else EOr(s"s${i}l", $"event_type" === t1,
                 s"s${i}r", $"event_type" === t2)
+            val (l, rt) = (Step[REv](s"s${i}l", _.event_type == t1),
+              Step[REv](s"s${i}r", _.event_type == t2))
             val k: PatternElem[REv] =
-              Logical[REv](Step[REv](s"s${i}l", _.event_type == t1),
-                Step[REv](s"s${i}r", _.event_type == t2), and)
+              if (and) Logical.and(l, rt) else Logical.or(l, rt)
             (e, k)
           case 5 =>
             val (t, d) = (typ(), 5L + r.nextInt(46))
@@ -2607,11 +2610,11 @@ class MatchRecognizeSpec extends SparkSpec {
           |)""".stripMargin))
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 3L, 2L, 1L), (2L, 4L, 7L, 6L)))
-    // programmatic parity through EPermute
+    // programmatic parity through a one-iteration PERMUTE group
     val viaApi = MatchRecognize(df, Seq("user_id"), "ts_us", "event_id",
-        Seq(MatchRecognize.EPermute(Seq(
+        Seq(MatchRecognize.EGroupN(Seq(MatchRecognize.EGPerm(Seq(
           "a" -> ($"event_type" === "A"), "b" -> ($"event_type" === "B"),
-          "c" -> ($"event_type" === "C")))))
+          "c" -> ($"event_type" === "C")))), 1, 1)))
       .select($"user_id",
         element_at($"a", 1).getField("event_id").as("a_id"),
         element_at($"b", 1).getField("event_id").as("b_id"),
@@ -2645,9 +2648,9 @@ class MatchRecognizeSpec extends SparkSpec {
     // only user 1 reaches two full iterations; a_first/a_last span them
     assert(viaSql == Set((1L, 1L, 3L, 2)))
     val viaApi = MatchRecognize(df, Seq("user_id"), "ts_us", "event_id",
-        Seq(MatchRecognize.EGroup(Seq(
-          "a" -> ($"event_type" === "A"),
-          "b" -> ($"event_type" === "B")), 2, 2)))
+        Seq(MatchRecognize.EGroupN(Seq(
+          MatchRecognize.EGStep("a", $"event_type" === "A"),
+          MatchRecognize.EGStep("b", $"event_type" === "B")), 2, 2)))
       .select($"user_id",
         element_at($"a", 1).getField("event_id").as("a_first"),
         element_at($"a", -1).getField("event_id").as("a_last"),
@@ -2738,8 +2741,8 @@ class MatchRecognizeSpec extends SparkSpec {
     assert(out == Set((2L, 3L, 1L, 4L, 5L)))
     // programmatic surface builds the same match set
     val prog = MatchRecognize(df, Seq("user_id"), "ts_us", "event_id",
-      Seq(MatchRecognize.EPermuteQ(Seq(
-          "a" -> ($"event_type" === "A"), "b" -> ($"event_type" === "B")),
+      Seq(MatchRecognize.EGroupN(Seq(MatchRecognize.EGPerm(Seq(
+          "a" -> ($"event_type" === "A"), "b" -> ($"event_type" === "B")))),
           2, 2),
         EStep("c", $"event_type" === "C")),
       skipPastLastRow = true)
@@ -2751,6 +2754,39 @@ class MatchRecognizeSpec extends SparkSpec {
         element_at($"c", 1).getField("event_id").as("c_id"))
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(prog == out)
+  }
+
+  test("SQL quantified groups bind an event that fits both variables by " +
+      "priority: (a|b){2} left side, PERMUTE(a,b){2} declaration order, " +
+      "(a b){2} position") {
+    // X satisfies both DEFINEs; every start is kept (the default
+    // overlap mode), so a fork on X would add matches
+    val parser = new graft.plans.GraftSqlParser(
+      spark.sessionState.sqlParser, spark)
+    def run(pat: String, types: String*): Set[String] = {
+      types.zipWithIndex.map { case (t, i) =>
+        (i + 1L, (i + 1L) * 10, 1L, t) }
+        .toDF("event_id", "ts_us", "user_id", "event_type")
+        .createOrReplaceTempView("mr_overlap_view")
+      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, parser.parsePlan(
+        s"""SELECT * FROM mr_overlap_view MATCH_RECOGNIZE (
+           |  PARTITION BY user_id
+           |  ORDER BY ts_us, event_id
+           |  MEASURES FIRST(a.event_id) AS a1, LAST(a.event_id) AS a2,
+           |           FIRST(b.event_id) AS b1, LAST(b.event_id) AS b2
+           |  PATTERN ($pat)
+           |  DEFINE a AS event_type IN ('A', 'X'),
+           |         b AS event_type IN ('B', 'X')
+           |)""".stripMargin))
+        .select($"a1", $"a2", $"b1", $"b2")
+        .collect().map(_.mkString(",")).toSet
+    }
+    // start 1: X -> a, B -> b; start 2: B -> b, A -> a
+    assert(run("(a|b){2}", "X", "B", "A") == Set("1,1,2,2", "3,3,2,2"))
+    // iteration 1: X -> a, X -> b; iteration 2: A -> a, B -> b
+    assert(run("PERMUTE(a, b){2}", "X", "X", "A", "B") == Set("1,3,2,4"))
+    // each X binds the variable its position in the iteration names
+    assert(run("(a b){2}", "X", "X", "X", "B") == Set("1,3,2,4"))
   }
 
   test("ALL ROWS PER MATCH WITH UNMATCHED ROWS appends NULL-tagged " +
@@ -4909,7 +4945,7 @@ class MatchRecognizeSpec extends SparkSpec {
       def newVar(): String = { vi += 1; s"v$vi" }
       // member shapes: plain var / two-var sequence / optional tail /
       // two-var alternation — at least one member composite so the
-      // PERMUTE routes to the Rx path (plain sets ride EPermute)
+      // PERMUTE routes to the Rx path (plain sets ride EGroupN)
       val members = (0 until k).map { i =>
         rnd.nextInt(4) match {
           case 0 if i > 0 => newVar()

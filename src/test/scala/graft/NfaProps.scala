@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.cep.{Absence, AltSeq, GAlt, GPerm, GroupSeq, GVar, Logical, NestedGroup, Nfa, PatternDef, PatternElem, PatternMatch, PermSeq, Permute, Step}
+import graft.cep.{Absence, GAlt, GPerm, GVar, Logical, NestedGroup, Nfa, PatternDef, PatternElem, PatternMatch, Step}
 
 /** Property-based NFA invariants over random event streams and random
   * quantified patterns (scalacheck; SURVEY §5 item 4).
@@ -129,23 +129,25 @@ object NfaProps extends Properties("Nfa") {
       case (SSpec(t, mn, mx, st), i) =>
         Step[E](s"s$i", _.typ == t, mn, mx, strict = st && i > 0)
       case (LSpec(t1, t2, and), i) =>
-        Logical[E](Step[E](s"s${i}l", _.typ == t1),
-          Step[E](s"s${i}r", _.typ == t2), and)
+        val (l, r) = (Step[E](s"s${i}l", _.typ == t1),
+          Step[E](s"s${i}r", _.typ == t2))
+        if (and) Logical.and(l, r) else Logical.or(l, r)
       case (ASpec(t, d), i) =>
         Absence[E](Step[E](s"s$i", _.typ == t), d)
       case (GSpec(t1, t2, mn, mx), i) =>
-        GroupSeq[E](IndexedSeq(Step[E](s"s${i}x", _.typ == t1),
-          Step[E](s"s${i}y", _.typ == t2)), mn, mx)
+        NestedGroup[E](IndexedSeq(GVar(Step[E](s"s${i}x", _.typ == t1)),
+          GVar(Step[E](s"s${i}y", _.typ == t2))), mn, mx)
       case (PSpec(t1, t2, t3), i) =>
-        Permute[E](IndexedSeq(Step[E](s"s${i}p", _.typ == t1),
-          Step[E](s"s${i}q", _.typ == t2),
-          Step[E](s"s${i}r2", _.typ == t3)))
+        NestedGroup[E](IndexedSeq(GPerm(IndexedSeq(
+          Step[E](s"s${i}p", _.typ == t1), Step[E](s"s${i}q", _.typ == t2),
+          Step[E](s"s${i}r2", _.typ == t3)))), 1, 1)
       case (PQSpec(t1, t2, mn, mx), i) =>
-        PermSeq[E](IndexedSeq(Step[E](s"s${i}pq1", _.typ == t1),
-          Step[E](s"s${i}pq2", _.typ == t2)), mn, mx)
+        NestedGroup[E](IndexedSeq(GPerm(IndexedSeq(
+          Step[E](s"s${i}pq1", _.typ == t1),
+          Step[E](s"s${i}pq2", _.typ == t2)))), mn, mx)
       case (AQSpec(t1, t2, mn, mx), i) =>
-        AltSeq[E](Step[E](s"s${i}aq1", _.typ == t1),
-          Step[E](s"s${i}aq2", _.typ == t2), mn, mx)
+        NestedGroup[E](IndexedSeq(GAlt(Step[E](s"s${i}aq1", _.typ == t1),
+          Step[E](s"s${i}aq2", _.typ == t2))), mn, mx)
       case (NGSpec(tv, t1, t2, mn, mx, withPerm, tp1, tp2), i) =>
         NestedGroup[E](IndexedSeq[graft.cep.GroupItem[E]](
           GVar(Step[E](s"s${i}nv", _.typ == tv)),
@@ -186,34 +188,21 @@ object NfaProps extends Properties("Nfa") {
           case s: Step[E] =>
             val g = m.get(s.name)
             g.isEmpty || (g.size >= math.min(s.minCount, 1) && g.size <= s.maxCount)
-          case l: Logical[E] =>
-            m.get(l.left.name).size <= 1 && m.get(l.right.name).size <= 1
-          case g: GroupSeq[E] =>
-            // a participating group completes at an iteration boundary:
-            // every inner slot holds the same count, within the bounds
-            val sizes = g.steps.map(st => m.get(st.name).size)
-            sizes.forall(_ == 0) ||
-              (sizes.distinct.size == 1 && sizes.head >= g.minRepeat &&
-                sizes.head <= g.maxRepeat)
-          case p: Permute[E] =>
-            val sizes = p.steps.map(st => m.get(st.name).size)
-            sizes.forall(_ == 0) || sizes.forall(_ == 1)
-          case ps: PermSeq[E] =>
-            // every member binds once per iteration
-            val sizes = ps.steps.map(st => m.get(st.name).size)
-            sizes.forall(_ == 0) ||
-              (sizes.distinct.size == 1 && sizes.head >= ps.minRepeat &&
-                sizes.head <= ps.maxRepeat)
-          case al: AltSeq[E] =>
-            // one routed event per iteration, split across the sides
-            val tot = m.get(al.left.name).size + m.get(al.right.name).size
-            tot == 0 || (tot >= al.minRepeat && tot <= al.maxRepeat)
           case ng: NestedGroup[E] =>
-            // each iteration binds `arity` events across the items
-            val tot = ng.names.map(n => m.get(n).size).sum
-            tot == 0 || (tot % ng.arity == 0 &&
-              tot / ng.arity >= ng.minRepeat &&
-              tot / ng.arity <= ng.maxRepeat)
+            // a participating group completes at an iteration boundary,
+            // and each iteration binds one event per plain variable and
+            // PERMUTE member and one per alternation (split across its
+            // sides): every such unit holds the iteration count, within
+            // the bounds
+            def n(st: Step[E]) = m.get(st.name).size
+            val units = ng.items.flatMap {
+              case GVar(st) => Seq(n(st))
+              case GAlt(l, r) => Seq(n(l) + n(r))
+              case GPerm(ss) => ss.map(n)
+            }
+            units.forall(_ == 0) ||
+              (units.distinct.size == 1 && units.head >= ng.minRepeat &&
+                units.head <= ng.maxRepeat)
           case rx: graft.cep.RxElem[E] =>
             // the generated shape is (v1{im,ix} v2){gm,gx}: per full
             // iteration v2 binds once and v1 im..ix times — detailed
@@ -408,9 +397,9 @@ object NfaProps extends Properties("Nfa") {
   property("group (a b){m,m} == unrolled renamed steps") =
     forAll(genEvents, Gen.choose(1, 3), Gen.oneOf("A", "B", "C"),
       Gen.oneOf("A", "B", "C")) { (evs, m, t1, t2) =>
-      import graft.cep.GroupSeq
-      val grouped = PatternDef[E](IndexedSeq(GroupSeq[E](IndexedSeq(
-        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2)), m, m)))
+      val grouped = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(
+        GVar(Step[E]("a", _.typ == t1)), GVar(Step[E]("b", _.typ == t2))),
+        m, m)))
       val unrolled = PatternDef[E]((1 to m).flatMap(i => Seq(
         Step[E](s"a$i", (e: E) => e.typ == t1),
         Step[E](s"b$i", (e: E) => e.typ == t2))).toIndexedSeq)
@@ -424,35 +413,26 @@ object NfaProps extends Properties("Nfa") {
       Prop(got == exp) :| s"group=$got unrolled=$exp"
     }
 
-  /** Binary Permute must equal Logical.and modulo slot names — the
-    * n-ary element's k = 2 case collapses to the proven AND element.
-    */
-  property("permute of 2 == logical and") =
-    forAll(genEvents, Gen.oneOf("A", "B", "C"), Gen.oneOf("A", "B", "C"),
-      Gen.option(Gen.choose(5L, 60L))) { (evs, t1, t2, within) =>
-      import graft.cep.Permute
-      val perm = PatternDef[E](IndexedSeq(Permute[E](IndexedSeq(
-        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2)))),
-        withinMs = within)
-      val land = PatternDef[E](IndexedSeq(Logical.and(
-        Step[E]("a", (e: E) => e.typ == t1),
-        Step[E]("b", (e: E) => e.typ == t2))), withinMs = within)
-      Prop(runPat(perm, evs) == runPat(land, evs)) :| "permute2 != and"
-    }
-
-  /** Quantified PERMUTE must equal the UNROLLED sequence of m plain
-    * Permute elements (renamed slots, per-copy slots concatenated) —
-    * the GroupSeq-unroll argument applied to the any-order iteration.
+  /** Quantified PERMUTE must equal the UNROLLED sequence of m
+    * recursive-element PERMUTEs (renamed slots, per-copy slots
+    * concatenated) — the group-unroll argument applied to the any-order
+    * iteration. The reference runs the forking automaton, not the group
+    * code; over disjoint member predicates an event fires at most one
+    * transition, so forking and priority binding accept the same
+    * matches.
     */
   property("permseq PERMUTE(a,b){m,m} == unrolled renamed permutes") =
-    forAll(genEvents, Gen.choose(1, 3), Gen.oneOf("A", "B", "C"),
-      Gen.oneOf("A", "B", "C")) { (evs, m, t1, t2) =>
-      import graft.cep.{PermSeq, Permute}
-      val seq = PatternDef[E](IndexedSeq(PermSeq[E](IndexedSeq(
-        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2)), m, m)))
-      val unrolled = PatternDef[E]((1 to m).map(i => Permute[E](IndexedSeq(
-        Step[E](s"a$i", (e: E) => e.typ == t1),
-        Step[E](s"b$i", (e: E) => e.typ == t2)))).toIndexedSeq)
+    forAll(genEvents, Gen.choose(1, 3),
+      Gen.oneOf(("A", "B"), ("B", "C"), ("A", "C"))) { (evs, m, ts) =>
+      import graft.cep.{RxElem, RxPermute, RxVar}
+      val (t1, t2) = ts
+      val seq = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(GPerm(
+        IndexedSeq(Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2)))),
+        m, m)))
+      val unrolled = PatternDef[E]((1 to m).map(i => RxElem[E](
+        RxPermute(IndexedSeq[graft.cep.RxNode[E]](
+          RxVar(Step[E](s"a$i", (e: E) => e.typ == t1)),
+          RxVar(Step[E](s"b$i", (e: E) => e.typ == t2)))))).toIndexedSeq)
       def merge(g: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
         Map(
           "a" -> (1 to m).flatMap(i => g.getOrElse(s"a$i", Nil)),
@@ -473,11 +453,10 @@ object NfaProps extends Properties("Nfa") {
     forAll(genEvents, Gen.choose(1, 3), Gen.choose(0, 2),
       Gen.oneOf(("A", "B"), ("B", "C"), ("A", "C"))) {
       (evs, mn, extra, ts) =>
-      import graft.cep.AltSeq
       val (t1, t2) = ts
       val mx = mn + extra
-      val alt = PatternDef[E](IndexedSeq(AltSeq[E](
-        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2), mn, mx)))
+      val alt = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(GAlt(
+        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2))), mn, mx)))
       val step = PatternDef[E](IndexedSeq(
         Step[E]("s", (e: E) => e.typ == t1 || e.typ == t2, mn, mx)))
       def merge(g: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
@@ -489,10 +468,12 @@ object NfaProps extends Properties("Nfa") {
     }
 
   /** A nested group `(a (b|c) PERMUTE(d,e)){m,m}` must equal the
-    * UNROLLED linear pattern of m renamed copies of its items (Step,
-    * Logical.or, Permute — each a proven element) with per-copy slots
-    * concatenated — the GroupSeq-unroll argument generalized to
-    * heterogeneous iteration items.
+    * UNROLLED linear pattern of m renamed copies of its items (a Step,
+    * a recursive-element alternation, a recursive-element PERMUTE) with
+    * per-copy slots concatenated — the group-unroll argument
+    * generalized to heterogeneous iteration items. The alternation
+    * sides and the PERMUTE members have disjoint predicates, so the
+    * forking reference binds as the group's priority rule does.
     */
   property("nested group (a (b|c) PERMUTE(d,e)){m,m} == unrolled " +
       "renamed element sequence") =
@@ -500,7 +481,7 @@ object NfaProps extends Properties("Nfa") {
       Gen.oneOf(("A", "B"), ("B", "C"), ("A", "C")),
       Gen.oneOf(("A", "B"), ("B", "C"), ("A", "C"))) {
       (evs, m, tv, altTs, permTs) =>
-      import graft.cep.{GAlt, GPerm, GVar, NestedGroup, Permute}
+      import graft.cep.{RxAlt, RxElem, RxPermute, RxVar}
       val (ta1, ta2) = altTs
       val (tp1, tp2) = permTs
       val nested = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(
@@ -511,11 +492,12 @@ object NfaProps extends Properties("Nfa") {
       val unrolled = PatternDef[E]((1 to m).flatMap(i =>
         Seq[PatternElem[E]](
           Step[E](s"v$i", (e: E) => e.typ == tv),
-          Logical.or(Step[E](s"x$i", (e: E) => e.typ == ta1),
-            Step[E](s"y$i", (e: E) => e.typ == ta2)),
-          Permute[E](IndexedSeq(
-            Step[E](s"p$i", (e: E) => e.typ == tp1),
-            Step[E](s"q$i", (e: E) => e.typ == tp2))))).toIndexedSeq)
+          RxElem[E](RxAlt(IndexedSeq[graft.cep.RxNode[E]](
+            RxVar(Step[E](s"x$i", (e: E) => e.typ == ta1)),
+            RxVar(Step[E](s"y$i", (e: E) => e.typ == ta2))))),
+          RxElem[E](RxPermute(IndexedSeq[graft.cep.RxNode[E]](
+            RxVar(Step[E](s"p$i", (e: E) => e.typ == tp1)),
+            RxVar(Step[E](s"q$i", (e: E) => e.typ == tp2))))))).toIndexedSeq)
       def merge(g: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
         Seq("v", "x", "y", "p", "q").map(n =>
           n -> (1 to m).flatMap(i => g.getOrElse(s"$n$i", Nil))).toMap
@@ -528,25 +510,35 @@ object NfaProps extends Properties("Nfa") {
       Prop(got == exp) :| s"nested=$got unrolled=$exp"
     }
 
-  /** The recursive Rx element compiling a GroupSeq-shaped pattern must
-    * equal the dedicated GroupSeq element — two independent engines
-    * (counter automaton vs position arithmetic) for one semantics.
+  /** The recursive Rx element compiling a quantified sequence as the
+    * sole element must equal the UNROLLED step chain of its `m`
+    * minimum iterations (renamed steps, per-copy slots concatenated):
+    * a last element emits at its minimum and never grows past it, so
+    * `{m,n}` there is `{m,m}` — two independent engines (counter
+    * automaton vs plain steps) for one semantics.
     */
-  property("rx (a b){m,n} == GroupSeq (a b){m,n}") =
+  property("rx (a b){m,n} as the sole element == unrolled steps " +
+      "(a b) x m") =
     forAll(genEvents, Gen.choose(1, 2), Gen.choose(0, 2),
       Gen.oneOf("A", "B", "C"), Gen.oneOf("A", "B", "C")) {
       (evs, m, extra, t1, t2) =>
-      import graft.cep.{GroupSeq, RxElem, RxRep, RxSeq, RxVar}
+      import graft.cep.{RxElem, RxRep, RxSeq, RxVar}
       val mx = m + extra
-      val g = PatternDef[E](IndexedSeq(GroupSeq[E](IndexedSeq(
-        Step[E]("a", _.typ == t1), Step[E]("b", _.typ == t2)), m, mx)))
+      val unrolled = PatternDef[E]((1 to m).flatMap(i => Seq(
+        Step[E](s"a$i", (e: E) => e.typ == t1),
+        Step[E](s"b$i", (e: E) => e.typ == t2))).toIndexedSeq)
+      def merge(g: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
+        Map(
+          "a" -> (1 to m).flatMap(i => g.getOrElse(s"a$i", Nil)),
+          "b" -> (1 to m).flatMap(i => g.getOrElse(s"b$i", Nil)))
       val rx = PatternDef[E](IndexedSeq(RxElem[E](RxRep(RxSeq(
         IndexedSeq[graft.cep.RxNode[E]](
           RxVar(Step[E]("a", _.typ == t1)),
           RxVar(Step[E]("b", _.typ == t2)))), m, mx))))
       val got = runPat(rx, evs)
-      val exp = runPat(g, evs)
-      Prop(got == exp) :| s"rx=$got groupseq=$exp"
+      val exp = runPat(unrolled, evs)
+        .map { case (s, e, g) => (s, e, merge(g)) }
+      Prop(got == exp) :| s"rx=$got unrolled=$exp"
     }
 
   /** A sole quantified Rx variable must equal the dedicated Step count
@@ -799,8 +791,8 @@ object NfaParityProps extends Properties("NfaParity") {
   property("regression r14: same-ts alternation seeds elect by tie on " +
       "both sides") = {
     val pat = PatternDef[E](IndexedSeq(
-      AltSeq[E](Step[E]("s0aq1", _.typ == "C"),
-        Step[E]("s0aq2", _.typ == "B"), 1, 1),
+      NestedGroup[E](IndexedSeq(GAlt(Step[E]("s0aq1", _.typ == "C"),
+        Step[E]("s0aq2", _.typ == "B"))), 1, 1),
       Step[E]("s1", _.typ == "A", 1, 3)),
       withinMs = Some(30L), every = true, skipPastLastRow = true)
     val evs = List(E(12, 110, "B"), E(13, 110, "C"), E(14, 120, "A"))
@@ -837,8 +829,8 @@ object NfaParityProps extends Properties("NfaParity") {
   property("regression r16: NEXT hold-back blocks MATCH_NUMBER release") = {
     import graft.cep.Cep
     val pat = PatternDef[E](IndexedSeq(
-      AltSeq[E](Step[E]("p", _.typ == "A"),
-        Step[E]("q", _.typ == "B"), 1, 1)),
+      NestedGroup[E](IndexedSeq(GAlt(Step[E]("p", _.typ == "A"),
+        Step[E]("q", _.typ == "B"))), 1, 1)),
       withinMs = Some(50L), every = true)
     val nb = Cep.Neighborhood[E](0, 1, (e, _, _) => e)
     var st = Cep.CepState.empty[E]

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.cep.{Absence, Logical, Nfa, PatternDef, PatternMatch, Step}
+import graft.cep.{Absence, GPerm, GVar, Logical, NestedGroup, Nfa, PatternDef, PatternMatch, Step}
 
 /** Pure-JVM NFA semantics tests with hand-computed expected matches —
   * the SiddhiSyntaxTest-style ground-truth harness (SURVEY §3.3).
@@ -132,6 +132,31 @@ class NfaSpec extends AnyFunSuite {
     assert(ms2.exists(m => ids(m, "a") == Seq(2L) && ids(m, "b") == Seq(1L)))
   }
 
+  // X satisfies both sides of the overlap tests below
+  private val aOrX = (e: E) => e.typ == "A" || e.typ == "X"
+  private val bOrX = (e: E) => e.typ == "B" || e.typ == "X"
+
+  test("or priority: an event satisfying both sides binds the left " +
+      "side only, and the right side stays unbound") {
+    val pat = PatternDef[E](IndexedSeq(
+      Step[E]("s", _.typ == "S"),
+      Logical.or(Step[E]("a", aOrX), Step[E]("b", bOrX)),
+      Step[E]("c", _.typ == "C")))
+    val ms = run(pat, Seq(E(1, 10, "S"), E(2, 20, "X"), E(3, 30, "B"),
+      E(4, 40, "C")))
+    assert(ms.map(m => (ids(m, "s"), ids(m, "a"), ids(m, "b"),
+      ids(m, "c"))) == Seq((Seq(1L), Seq(2L), Seq(), Seq(4L))))
+  }
+
+  test("and priority: an event satisfying both open sides binds the " +
+      "left one; the next binds the right") {
+    val pat = PatternDef[E](IndexedSeq(
+      Logical.and(Step[E]("a", aOrX), Step[E]("b", bOrX))))
+    val ms = run(pat, Seq(E(1, 10, "X"), E(2, 20, "X"), E(3, 30, "B")))
+    assert(ms.map(m => (ids(m, "a"), ids(m, "b"))) ==
+      Seq((Seq(1L), Seq(2L)), (Seq(2L), Seq(3L))))
+  }
+
   test("absence: emits at deadline when no qualifying event (B20)") {
     val pat = PatternDef[E](IndexedSeq(
       Step[E]("a", _.typ == "A"),
@@ -251,9 +276,8 @@ class NfaSpec extends AnyFunSuite {
 
   test("group (a b){2,3}: iterations append to shared slots, greedy-min " +
       "emission at the iteration boundary") {
-    import graft.cep.GroupSeq
-    val pat = PatternDef[E](IndexedSeq(GroupSeq[E](IndexedSeq(
-      Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B")), 2, 3)))
+    val pat = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(
+      GVar(Step[E]("a", _.typ == "A")), GVar(Step[E]("b", _.typ == "B"))), 2, 3)))
     val evs = Seq(E(1, 10, "A"), E(2, 20, "B"), E(3, 30, "A"),
       E(4, 40, "B"), E(5, 50, "A"), E(6, 60, "B"))
     val ms = run(pat, evs)
@@ -268,9 +292,8 @@ class NfaSpec extends AnyFunSuite {
 
   test("group (a b)+ as last element emits one-iteration matches " +
       "(greedy-min), mid-iteration partials never emit") {
-    import graft.cep.GroupSeq
-    val pat = PatternDef[E](IndexedSeq(GroupSeq[E](IndexedSeq(
-      Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B")),
+    val pat = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(
+      GVar(Step[E]("a", _.typ == "A")), GVar(Step[E]("b", _.typ == "B"))),
       1, Int.MaxValue)))
     val evs = Seq(E(1, 10, "A"), E(2, 20, "B"), E(3, 30, "A"),
       E(4, 40, "C"), E(5, 50, "B"))
@@ -283,10 +306,10 @@ class NfaSpec extends AnyFunSuite {
 
   test("group mid-pattern branches: both the min and the grown " +
       "iteration counts advance into the tail") {
-    import graft.cep.GroupSeq
     val pat = PatternDef[E](IndexedSeq(
-      GroupSeq[E](IndexedSeq(
-        Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B")), 1, 2),
+      NestedGroup[E](IndexedSeq(
+        GVar(Step[E]("a", _.typ == "A")), GVar(Step[E]("b", _.typ == "B"))),
+        1, 2),
       Step[E]("c", _.typ == "C")))
     val evs = Seq(E(1, 10, "A"), E(2, 20, "B"), E(3, 30, "A"),
       E(4, 40, "B"), E(5, 50, "C"))
@@ -298,11 +321,10 @@ class NfaSpec extends AnyFunSuite {
   }
 
   test("optional group (a b)* is skippable from the preceding element") {
-    import graft.cep.GroupSeq
     val pat = PatternDef[E](IndexedSeq(
       Step[E]("x", _.typ == "X"),
-      GroupSeq[E](IndexedSeq(
-        Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B")),
+      NestedGroup[E](IndexedSeq(
+        GVar(Step[E]("a", _.typ == "A")), GVar(Step[E]("b", _.typ == "B"))),
         0, Int.MaxValue),
       Step[E]("c", _.typ == "C")))
     // group skipped entirely
@@ -321,10 +343,9 @@ class NfaSpec extends AnyFunSuite {
 
   test("n-ary permute: one event per step, any order, declaration " +
       "priority, every-seeded overlaps") {
-    import graft.cep.Permute
-    val pat = PatternDef[E](IndexedSeq(Permute[E](IndexedSeq(
-      Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B"),
-      Step[E]("c", _.typ == "C")))))
+    val pat = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(GPerm(
+      IndexedSeq(Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B"),
+        Step[E]("c", _.typ == "C")))), 1, 1)))
     // reversed arrival order completes; a second C is ignored (slot
     // taken) but seeds its OWN partial (every), which never completes
     val ms = run(pat, Seq(E(1, 10, "C"), E(2, 20, "C"), E(3, 30, "B"),
@@ -335,8 +356,9 @@ class NfaSpec extends AnyFunSuite {
       Set((Seq(4L), Seq(3L), Seq(1L)), (Seq(4L), Seq(3L), Seq(2L))))
     // declaration priority: an event satisfying two unbound steps binds
     // the FIRST declared one
-    val both = PatternDef[E](IndexedSeq(Permute[E](IndexedSeq(
-      Step[E]("x", _.id < 10), Step[E]("y", _.typ == "B")))))
+    val both = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(GPerm(
+      IndexedSeq(Step[E]("x", _.id < 10), Step[E]("y", _.typ == "B")))),
+      1, 1)))
     val ms2 = run(both, Seq(E(1, 10, "B"), E(2, 20, "B")))
     // B(1) satisfies both -> binds x; B(2) then binds y
     assert(ms2.map(m => (ids(m, "x"), ids(m, "y"))).contains(
@@ -628,12 +650,11 @@ class NfaSpec extends AnyFunSuite {
   }
 
   test("group head must be non-optional; inner steps must be plain") {
-    import graft.cep.GroupSeq
-    val bad = PatternDef[E](IndexedSeq(GroupSeq[E](IndexedSeq(
-      Step[E]("a", _.typ == "A"), Step[E]("b", _.typ == "B")),
+    val bad = PatternDef[E](IndexedSeq(NestedGroup[E](IndexedSeq(
+      GVar(Step[E]("a", _.typ == "A")), GVar(Step[E]("b", _.typ == "B"))),
       0, Int.MaxValue)))
     assertThrows[IllegalArgumentException](new Nfa[E](bad, _.ts))
-    assertThrows[IllegalArgumentException](GroupSeq[E](IndexedSeq(
-      Step[E]("a", _.typ == "A", minCount = 1, maxCount = 2)), 1, 2))
+    assertThrows[IllegalArgumentException](GVar(
+      Step[E]("a", _.typ == "A", minCount = 1, maxCount = 2)))
   }
 }
