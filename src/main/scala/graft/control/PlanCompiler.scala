@@ -1,10 +1,11 @@
 package graft.control
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cep.{Absence, Cep, Logical, PatternDef, PatternElem, PatternMatch, Step}
-import graft.plans.GraftSqlParser
+import graft.cep.{Cep, PatternDef, PatternMatch, Step}
+import graft.plans.{GraftSqlParser, MatchElemSpec, MatchRecognize}
+import graft.plans.MatchRecognize.{EAnd, ENotFor, EOr, EStep}
 
 /** Multi-dialect compiler for dynamic control-plane plan text — the
   * piece that makes runtime-added plans more than relational SQL.
@@ -82,19 +83,6 @@ object PlanCompiler {
     }
   }
 
-  /** Parsed pattern elements; `condIdx` indexes the per-event flag
-    * array (one precomputed boolean per distinct predicate).
-    */
-  private sealed trait ElemSpec
-  private final case class StepSpec(
-      name: String, strict: Boolean, min: Int, max: Int,
-      condIdx: Int) extends ElemSpec
-  private final case class LogicalSpec(
-      leftName: String, leftIdx: Int, rightName: String, rightIdx: Int,
-      isAnd: Boolean) extends ElemSpec
-  private final case class AbsenceSpec(
-      name: String, forMs: Long, condIdx: Int) extends ElemSpec
-
   /** Split plan text into clauses on newline/`;` — but never inside a
     * single-quoted SQL string, so predicates like `t = 'A;B'` survive.
     */
@@ -125,12 +113,18 @@ object PlanCompiler {
     var wmCol: String = null
     var rateLimit: Option[(Boolean, Int)] = None // (isFirst, n)
     val conds = ArrayBuffer.empty[String]
-    val elems = ArrayBuffer.empty[ElemSpec]
+    val elems = ArrayBuffer.empty[MatchRecognize.Elem]
     // an `either`/`both` clause opens a logical element completed by the
     // next `or`/`and` clause
-    var pendingLogical: Option[(String, Int, Boolean)] = None
+    var pendingLogical: Option[(String, String, Boolean)] = None
 
-    def addCond(c: String): Int = { conds += c; conds.length - 1 }
+    // one slot of the per-event flag array per condition, added in the
+    // predicate order of `elems` (a logical element adds both halves
+    // when it closes), so the n-th variable occurrence reads slot n
+    def addCond(c: String): Column = {
+      conds += c
+      col("flags")(conds.length - 1)
+    }
 
     def nameAndCond(ln: String, keyword: String): (String, String) = {
       val wi = ln.toLowerCase.indexOf(" where ")
@@ -178,23 +172,26 @@ object PlanCompiler {
               throw new IllegalArgumentException(s"unknown step modifier: $other")
           }
         }
-        elems += StepSpec(head(0), strict, min, max, addCond(cond))
+        elems += EStep(head(0), addCond(cond), min, max, strict)
       }
       else if (lower.startsWith("either ") || lower.startsWith("both ")) {
         require(pendingLogical.isEmpty, s"dangling logical half before: $ln")
         val kw = if (lower.startsWith("either ")) "either" else "both"
         val (name, cond) = nameAndCond(ln, kw)
-        pendingLogical = Some((name, addCond(cond), kw == "both"))
+        pendingLogical = Some((name, cond, kw == "both"))
       }
       else if (lower.startsWith("or ") || lower.startsWith("and ")) {
         val kw = if (lower.startsWith("or ")) "or" else "and"
-        val (ln2, li, isAnd) = pendingLogical.getOrElse(
+        val (ln2, lc, isAnd) = pendingLogical.getOrElse(
           throw new IllegalArgumentException(
             s"'$kw' clause without a preceding either/both: $ln"))
         require((kw == "and") == isAnd,
           s"'$kw' does not close ${if (isAnd) "'both'" else "'either'"}: $ln")
         val (name, cond) = nameAndCond(ln, kw)
-        elems += LogicalSpec(ln2, li, name, addCond(cond), isAnd)
+        val lp = addCond(lc)
+        val rp = addCond(cond)
+        elems += (if (isAnd) EAnd(ln2, lp, name, rp)
+          else EOr(ln2, lp, name, rp))
         pendingLogical = None
       }
       else if (lower.startsWith("notfor ")) {
@@ -202,7 +199,7 @@ object PlanCompiler {
         val (head, cond) = nameAndCond(ln, "notfor")
         val parts = head.split("\\s+")
         require(parts.length == 2, s"notfor needs '<name> <duration>': $ln")
-        elems += AbsenceSpec(parts(0), parts(1).toLong, addCond(cond))
+        elems += ENotFor(parts(0), addCond(cond), parts(1).toLong)
       }
       else throw new IllegalArgumentException(s"unrecognized pattern clause: $ln")
     }
@@ -230,15 +227,14 @@ object PlanCompiler {
       flags.as("flags"),
       wmc).as[DynEvt]
 
-    val pElems: IndexedSeq[PatternElem[DynEvt]] = elems.toIndexedSeq.map {
-      case StepSpec(name, strict, mn, mx, ci) =>
-        Step[DynEvt](name, _.flags(ci), mn, mx, strict)
-      case LogicalSpec(lName, li, rName, ri, isAnd) =>
-        val (l, r) = (Step[DynEvt](lName, _.flags(li)),
-          Step[DynEvt](rName, _.flags(ri)))
-        if (isAnd) Logical.and(l, r) else Logical.or(l, r)
-      case AbsenceSpec(name, forMs, ci) =>
-        Absence[DynEvt](Step[DynEvt](name, _.flags(ci)), forMs)
+    // built for both paths: the batch path runs the same elements on
+    // the MATCH_RECOGNIZE operator, so a bad quantifier still fails here
+    var ci = -1
+    val pElems = MatchElemSpec.compile[DynEvt](elems.toSeq.map(_.spec)) {
+      (name, mn, mx, strict) =>
+        ci += 1
+        val i = ci
+        Step[DynEvt](name, _.flags(i), mn, mx, strict)
     }
     val pat = PatternDef[DynEvt](pElems, within, every,
       skipPastLastRow = skipPastLast)
@@ -283,18 +279,8 @@ object PlanCompiler {
       // already co-partitioned) instead of the groupByKey kryo
       // round-trip — then the array<struct> match columns fold into the
       // dialect's stable (key, start_ts, end_ts, binds) schema
-      import graft.plans.MatchRecognize
-      import graft.plans.MatchRecognize.{EAnd, ENotFor, EOr, EStep}
-      val elems2: Seq[MatchRecognize.Elem] = elems.toSeq.map {
-        case StepSpec(n, strict, mn, mx, ci) =>
-          EStep(n, col("flags")(ci), mn, mx, strict)
-        case LogicalSpec(ln2, li, rn, ri, isAnd) =>
-          if (isAnd) EAnd(ln2, col("flags")(li), rn, col("flags")(ri))
-          else EOr(ln2, col("flags")(li), rn, col("flags")(ri))
-        case AbsenceSpec(n, f, ci) => ENotFor(n, col("flags")(ci), f)
-      }
       val matched = MatchRecognize(ds.toDF(), Seq("key"), "ts", "tie",
-        elems2, within, every, skipPastLastRow = skipPastLast)
+        elems.toSeq, within, every, skipPastLastRow = skipPastLast)
       val slotNames = pElems.flatMap(_.names)
       val entries = slotNames.map(n =>
         struct(lit(n).as("k"), col(n).as("arr")))

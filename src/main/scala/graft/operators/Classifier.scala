@@ -125,11 +125,12 @@ object Classifier {
     * stays only on the training margins) and
     * `n_feats = Σ_b c_b = 2·|toks|−1` — so the corpus is tokenized
     * once, not twice. Output rows are identical to
-    * `perceptronScore(df, …, perceptronTrain(df, …))` provided `idCol`
-    * is unique and non-null (the assumption training already makes):
-    * rows sharing an id merge their features into one margin, and a
-    * null id misses the left join and scores `(0, 0, 0)`. Docs with
-    * empty/null text score `(0, 0, 0)` via the left join.
+    * `perceptronScore(df, …, perceptronTrain(df, …))`. `idCol` must be
+    * unique and non-null — rows sharing an id would merge their
+    * features into one margin, and a null id would miss the left join
+    * and score `(0, 0, 0)` — so a duplicate or null id fails with an
+    * IllegalArgumentException before training. Docs with empty/null
+    * text score `(0, 0, 0)` via the left join.
     */
   def perceptronTrainScore(df: DataFrame, textCol: String, idCol: String,
       label: Column, buckets: Int = 1024, epochs: Int = 2,
@@ -138,6 +139,7 @@ object Classifier {
       s"buckets must be in [2, 2^24], got $buckets")
     require(epochs >= 1 && epochs <= 64,
       s"epochs must be in [1, 64], got $epochs")
+    requireUniqueIds(df, idCol)
     checkpointDir.foreach(
       Checkpoints.bindDir(df.sparkSession.sparkContext, _))
     val dc0 = docCounts(df, textCol, idCol, label, buckets)
@@ -161,6 +163,21 @@ object Classifier {
         coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("margin"), lit(0L)).as("margin"),
         (coalesce(col("margin"), lit(0L)) > 0).cast("int").as("predicted"))
+  }
+
+  /** Fails unless `idCol` (as the scorer's long join key) is unique
+    * and non-null, naming how many ids repeat and how many are null.
+    * One aggregation over the id column. */
+  private def requireUniqueIds(df: DataFrame, idCol: String): Unit = {
+    val r = df.groupBy(col(idCol).cast("long").as("id"))
+      .agg(count(lit(1)).as("_n"))
+      .agg(count(when(col("id").isNotNull && col("_n") > 1, lit(1))),
+        coalesce(sum(when(col("id").isNull, col("_n"))), lit(0L)))
+      .head()
+    val (dups, nulls) = (r.getLong(0), r.getLong(1))
+    require(dups == 0 && nulls == 0,
+      s"idCol '$idCol' must be unique and non-null: $dups duplicated " +
+        s"id(s), $nulls row(s) with a null id")
   }
 
   /** Score documents against a frozen [[PerceptronModel]] — a
@@ -210,8 +227,8 @@ object Classifier {
     * ([[perceptronTrainScore]] — one tokenize pass instead of three:
     * train features, score features, and the report all read the one
     * materialized per-doc relation). Output identical to
-    * `calibrationReport(df, …, perceptronTrain(df, …), thresholds)`
-    * under the same unique non-null `idCol` assumption.
+    * `calibrationReport(df, …, perceptronTrain(df, …), thresholds)`;
+    * like [[perceptronTrainScore]], fails on a duplicate or null id.
     */
   def trainCalibrationReport(df: DataFrame, textCol: String,
       idCol: String, label: Column, buckets: Int = 1024,

@@ -316,7 +316,7 @@ private[graft] object MatchRecognizeSql {
         // a silent collision between distinct factors in one session
         // would bind both substitutions to one view, so the name is
         // made collision-proof (~96 bits of discrimination)
-        val keyed = table + " " + body
+        val keyed = table + "\u0000" + body
         val view = "_mr_factor_" + java.lang.Integer.toHexString(
             scala.util.hashing.MurmurHash3.stringHash(keyed)) +
           "_" + java.lang.Integer.toHexString(
@@ -1035,9 +1035,9 @@ private[graft] object MatchRecognizeSql {
 
     // PATTERN (a b+ c{2,3} (d|e) PERMUTE(f,g) (h i)+) — a
     // concatenation of top-level items: quantified variables map onto
-    // EStep, groups of plain variables (alternation, PERMUTE,
-    // concatenation, quantified or not) onto EGroupN, anything deeper
-    // onto the recursive ERx element (see `classify` below).
+    // StepSpec, groups of plain variables (alternation, PERMUTE,
+    // concatenation, quantified or not) onto NestedGroupSpec, anything
+    // deeper onto the recursive RxSpec element (see `classify` below).
     val patBody = need("pattern").trim
     require(patBody.startsWith("(") && patBody.endsWith(")"),
       "PATTERN needs parentheses")
@@ -1079,7 +1079,7 @@ private[graft] object MatchRecognizeSql {
       var i = 0
       val len = src.length
       def ws(): Unit = while (i < len && src(i).isWhitespace) i += 1
-      def peek: Char = { ws(); if (i < len) src(i) else ' ' }
+      def peek: Char = { ws(); if (i < len) src(i) else '\u0000' }
       def fail(msg: String): Nothing = throw new IllegalArgumentException(
         s"bad PATTERN: $msg (at '…${src.substring(math.min(i, len))}')")
       def ident(): String = {
@@ -1181,36 +1181,18 @@ private[graft] object MatchRecognizeSql {
       case _: PVar => Nil
     }
 
-    sealed trait PatElem
-    case class Single(name: String, min: Int, max: Int) extends PatElem
-    sealed trait NItem
-    case class NVar(name: String) extends NItem
-    case class NAlt(l: String, r: String) extends NItem
-    case class NPerm(names: Seq[String]) extends NItem
-    case class GrpN(items: Seq[NItem], min: Int, max: Int)
-      extends PatElem
-    /** Anything beyond the structured shapes — compiled to the
-      * recursive [[MatchRecognize.ERx]] element. */
-    case class RxP(node: PNode) extends PatElem
-
     // classification: a step for a quantified variable, one group
     // element for every group of plain variables (alternation,
     // PERMUTE, concatenation — binding by priority), the recursive Rx
     // element for everything else (deeper nesting, quantified items
     // inside groups, alternation of sequences, PERMUTE of composite
     // items)
-    def asPlainVar(n: PNode): Option[String] = n match {
-      case PVar(v) => Some(v)
-      case _ => None
-    }
-    def allPlain(ns: Seq[PNode]): Option[Seq[String]] = {
-      val vs = ns.map(asPlainVar)
-      if (vs.forall(_.isDefined)) Some(vs.flatten) else None
-    }
-    def asNItem(n: PNode): Option[NItem] = n match {
-      case PVar(v) => Some(NVar(v))
-      case PAltN(Seq(PVar(l), PVar(r))) => Some(NAlt(l, r))
-      case PPermute(is) => allPlain(is).map(NPerm(_))
+    def asNItem(n: PNode): Option[NgItemSpec] = n match {
+      case PVar(v) => Some(NgVarSpec(v))
+      case PAltN(Seq(PVar(l), PVar(r))) => Some(NgAltSpec(l, r))
+      case PPermute(is) =>
+        val vs = is.collect { case PVar(v) => v }
+        if (vs.length == is.length) Some(NgPermSpec(vs)) else None
       case _ => None
     }
     // MODE STRICT: ISO SQL:2016 contiguous matching — a live partial
@@ -1240,22 +1222,51 @@ private[graft] object MatchRecognizeSql {
     // ([[graft.cep.Nfa]] candOrder), a preference rather than a cap.
     def lazyMax(mn: Int, mx: Int, rel: Boolean): Int =
       if (rel && !strictMode) math.max(mn, 1) else mx
-    def classify(item: PNode): PatElem = item match {
-      case PVar(n) => Single(n, 1, 1)
+    def rxSpec(n: PNode): RxSpecNode = n match {
+      case PVar(v) => RxVarSpec(v)
+      case PQuant(PVar(v), mn, mx, rel) =>
+        RxVarSpec(v, mn, lazyMax(mn, mx, rel))
+      case PQuant(b, mn, mx, rel) =>
+        RxRepSpec(rxSpec(b), mn, lazyMax(mn, mx, rel))
+      case PSeqN(is) => RxSeqSpec(is.map(rxSpec))
+      case PAltN(as) => RxAltSpec(as.map(rxSpec))
+      case PPermute(is) =>
+        // PERMUTE of non-plain items: the members-seen BITMASK
+        // automaton ([[graft.cep.RxPermute]]) — one shared
+        // sub-automaton per member plus a hub whose mask register
+        // (2^k values in one rxCnt counter) tracks which members have
+        // completed. Replaces rounds ≤16's recursive k!-ordering
+        // expansion (which capped arity at 5: 6! = 720 branch states);
+        // automaton size is now Σ|member| + O(k), and a live partial
+        // still forks only at its next-member choice (≤ k branches),
+        // so matching semantics and per-seed exploration are
+        // UNCHANGED (pinned by the bitmask-vs-expansion parity
+        // property in MatchRecognizeSpec). The arity bound left is
+        // the cep layer's own ≤ 16 (C(k, k/2) interleaving classes
+        // per seed outgrow any maxPartials budget beyond that).
+        require(is.length <= 16,
+          s"PERMUTE of composite items supports at most 16 members " +
+            s"(the members-seen bitmask explores up to C(k, k/2) " +
+            s"interleaving classes per seed), got ${is.length}")
+        RxPermuteSpec(is.map(rxSpec))
+    }
+    def classify(item: PNode): MatchElemSpec = item match {
+      case PVar(n) => StepSpec(n)
       case PQuant(PVar(n), mn, mx, rel) =>
-        Single(n, mn, lazyMax(mn, mx, rel))
+        StepSpec(n, mn, lazyMax(mn, mx, rel))
       case PPermute(_) | PAltN(_) =>
-        asNItem(item).fold[PatElem](RxP(item))(it => GrpN(Seq(it), 1, 1))
+        asNItem(item).fold[MatchElemSpec](RxSpec(rxSpec(item)))(
+          it => NestedGroupSpec(Seq(it), 1, 1))
       case PQuant(b @ (PPermute(_) | PAltN(_)), mn, mx, rel) =>
-        asNItem(b).fold[PatElem](RxP(item))(
-          it => GrpN(Seq(it), mn, lazyMax(mn, mx, rel)))
+        asNItem(b).fold[MatchElemSpec](RxSpec(rxSpec(item)))(
+          it => NestedGroupSpec(Seq(it), mn, lazyMax(mn, mx, rel)))
       case PSeqN(is) => classify(PQuant(PSeqN(is), 1, 1, false))
       case PQuant(PSeqN(is), mn, mx, rel) =>
         val nitems = is.map(asNItem)
         if (nitems.forall(_.isDefined))
-          GrpN(nitems.flatten, mn, lazyMax(mn, mx, rel))
-        else RxP(item)
-      case _ => RxP(item)
+          NestedGroupSpec(nitems.flatten, mn, lazyMax(mn, mx, rel))
+        else RxSpec(rxSpec(item))
+      case _ => RxSpec(rxSpec(item))
     }
     // SQL:2016 pattern anchors: '^' (match starts at the partition's
     // first row) / '$' (match ends at its last row). They compile to
@@ -1303,26 +1314,17 @@ private[graft] object MatchRecognizeSql {
       case PSeqN(is) => is
       case single => Seq(single)
     }
-    val patElems0: Seq[PatElem] = topItems.map(classify)
-    def elemNames(e: PatElem): Seq[String] = e match {
-      case Single(n, _, _) => Seq(n)
-      case GrpN(items, _, _) => items.flatMap {
-        case NVar(n) => Seq(n)
-        case NAlt(l, r) => Seq(l, r)
-        case NPerm(ns) => ns
-      }
-      case RxP(node) => pnVars(node).distinct
-    }
+    val patElems0: Seq[MatchElemSpec] = topItems.map(classify)
     // a variable occurring in several top-level elements (SQL:2016
     // allows e.g. `(a b a)`) cannot ride the structured elements'
     // one-slot-per-element layout — compile the WHOLE pattern as one
     // recursive element instead
-    val patElems: Seq[PatElem] = {
-      val ns = patElems0.flatMap(elemNames)
+    val patElems: Seq[MatchElemSpec] = {
+      val ns = patElems0.flatMap(_.names)
       if (ns.distinct.length == ns.length) patElems0
-      else Seq(RxP(patAst))
+      else Seq(RxSpec(rxSpec(patAst)))
     }
-    val varNames = patElems.flatMap(elemNames).distinct
+    val varNames = patElems.flatMap(_.names).distinct
     // SUBSET w = (a, b): SQL:2016 union variables — parsed HERE so
     // DEFINE aggregates can compose over them; the measures stage
     // reuses the same parse for its binding arrays
@@ -1389,9 +1391,9 @@ private[graft] object MatchRecognizeSql {
     // anchor edges must be plain unquantified variables: the boundary
     // predicate ANDs onto the variable's DEFINE, so a quantified edge
     // would constrain EVERY binding of it, not just the edge one
-    def anchorVar(sym: String, e: PatElem, where: String): String =
+    def anchorVar(sym: String, e: MatchElemSpec, where: String): String =
       e match {
-        case Single(n, 1, 1) => n
+        case StepSpec(n, 1, 1, _) => n
         case _ => throw new IllegalArgumentException(
           s"'$sym' anchor: the pattern must $where with a plain " +
             "unquantified variable (split a quantified edge into a " +
@@ -2230,46 +2232,8 @@ private[graft] object MatchRecognizeSql {
 
     def pred(n: String): Column =
       GraftSqlBridge.column(delegate.parseExpression(defs3(n)))
-    def toERx(n: PNode): MatchRecognize.ERxNode = n match {
-      case PVar(v) => MatchRecognize.ERxVar(v, pred(v), 1, 1)
-      case PQuant(PVar(v), mn, mx, rel) =>
-        MatchRecognize.ERxVar(v, pred(v), mn, lazyMax(mn, mx, rel))
-      case PQuant(b, mn, mx, rel) =>
-        MatchRecognize.ERxRep(toERx(b), mn, lazyMax(mn, mx, rel))
-      case PSeqN(is) => MatchRecognize.ERxSeq(is.map(toERx))
-      case PAltN(as) => MatchRecognize.ERxAlt(as.map(toERx))
-      case PPermute(is) =>
-        // PERMUTE of non-plain items: the members-seen BITMASK
-        // automaton ([[graft.cep.RxPermute]]) — one shared
-        // sub-automaton per member plus a hub whose mask register
-        // (2^k values in one rxCnt counter) tracks which members have
-        // completed. Replaces rounds ≤16's recursive k!-ordering
-        // expansion (which capped arity at 5: 6! = 720 branch states);
-        // automaton size is now Σ|member| + O(k), and a live partial
-        // still forks only at its next-member choice (≤ k branches),
-        // so matching semantics and per-seed exploration are
-        // UNCHANGED (pinned by the bitmask-vs-expansion parity
-        // property in MatchRecognizeSpec). The arity bound left is
-        // the cep layer's own ≤ 16 (C(k, k/2) interleaving classes
-        // per seed outgrow any maxPartials budget beyond that).
-        require(is.length <= 16,
-          s"PERMUTE of composite items supports at most 16 members " +
-            s"(the members-seen bitmask explores up to C(k, k/2) " +
-            s"interleaving classes per seed), got ${is.length}")
-        MatchRecognize.ERxPermute(is.map(toERx))
-    }
-    val elems: Seq[MatchRecognize.Elem] = patElems.map {
-      case Single(n, mn, mx) =>
-        MatchRecognize.EStep(n, pred(n), mn, mx)
-      case GrpN(items, mn, mx) =>
-        MatchRecognize.EGroupN(items.map {
-          case NVar(n) => MatchRecognize.EGStep(n, pred(n))
-          case NAlt(l, r) => MatchRecognize.EGAlt(l, pred(l), r, pred(r))
-          case NPerm(ns) =>
-            MatchRecognize.EGPerm(ns.map(n => n -> pred(n)))
-        }, mn, mx)
-      case RxP(node) => MatchRecognize.ERx(toERx(node))
-    }
+    val elems = patElems.map(e =>
+      MatchRecognize.Elem(e, e.occurrences.map(pred)))
     // batch: PREV/NEXT precompute as lag/lead columns sharing the
     // operator's shuffle+sort; streaming: they feed from the watermark
     // buffer's release order (streamingFull's lagSpecs / Neighborhood)

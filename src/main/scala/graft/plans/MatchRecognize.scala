@@ -6,22 +6,30 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
-/** Pure-data pattern element specs for the MATCH_RECOGNIZE logical plan —
-  * the structural half of [[graft.cep.PatternDef]] with the predicates
-  * lifted out as Catalyst [[Expression]]s (held in the plan node's flat
-  * `predicates` list so the analyzer/optimizer see and resolve them).
-  * Element i consumes `arity` predicates, in order.
+/** The one pattern-shape tree: every front end builds it — the SQL
+  * parser, `pattern:` control-plane plans and the programmatic
+  * [[MatchRecognize.Elem]] constructors — and [[MatchElemSpec.compile]]
+  * is the one lowering onto the executable [[graft.cep.PatternElem]],
+  * for both MATCH_RECOGNIZE executors and the typed streaming
+  * `pattern:` path. Column-free: the predicates travel beside it (the
+  * plan node's flat `predicates` list, which the analyzer/optimizer see
+  * and resolve, or [[MatchRecognize.Elem.preds]]), one per variable
+  * occurrence, in [[occurrences]] order.
   */
 sealed trait MatchElemSpec extends Serializable {
+  /** Variable occurrences in predicate order. */
+  def occurrences: Seq[String]
+  /** Output slot names this element owns. */
   def names: Seq[String]
-  def arity: Int
+  /** Predicates consumed = variable occurrences. */
+  def arity: Int = occurrences.length
 }
 final case class StepSpec(name: String, min: Int = 1, max: Int = 1,
     strict: Boolean = false) extends MatchElemSpec {
-  def names: Seq[String] = Seq(name); def arity = 1
+  def occurrences: Seq[String] = Seq(name); def names = occurrences
 }
 final case class AbsenceSpec(name: String, forTs: Long) extends MatchElemSpec {
-  def names: Seq[String] = Seq(name); def arity = 1
+  def occurrences: Seq[String] = Seq(name); def names = occurrences
 }
 /** Pure-data item shapes for [[NestedGroupSpec]]. Each consumes one
   * predicate per NAME, in order. */
@@ -41,14 +49,14 @@ final case class NgPermSpec(permNames: Seq[String]) extends NgItemSpec {
   * group, alternation and PERMUTE, quantified or not. */
 final case class NestedGroupSpec(items: Seq[NgItemSpec], minRepeat: Int,
     maxRepeat: Int) extends MatchElemSpec {
-  def names: Seq[String] = items.flatMap(_.names)
-  def arity: Int = names.length
+  def occurrences: Seq[String] = items.flatMap(_.names)
+  def names: Seq[String] = occurrences
 }
 
 /** Pure-data regex AST for [[RxSpec]] — the plan-layer mirror of
   * [[graft.cep.RxNode]]; leaves are variable occurrences, each
-  * consuming one predicate from the node's flat list in AST order
-  * (the same name may occur at several leaves — shared slot). */
+  * consuming one predicate in AST order (the same name may occur at
+  * several leaves — shared slot). */
 sealed trait RxSpecNode extends Serializable
 final case class RxVarSpec(name: String, min: Int = 1, max: Int = 1)
     extends RxSpecNode
@@ -72,10 +80,44 @@ final case class RxSpec(root: RxSpecNode) extends MatchElemSpec {
     case RxRepSpec(b, _, _) => occs(b)
     case RxPermuteSpec(ms) => ms.flatMap(occs)
   }
+  def occurrences: Seq[String] = occs(root)
   /** Distinct names in first-occurrence order (slot layout). */
-  def names: Seq[String] = occs(root).distinct
-  /** Predicates consumed = variable OCCURRENCES (not distinct names). */
-  def arity: Int = occs(root).length
+  def names: Seq[String] = occurrences.distinct
+}
+
+object MatchElemSpec {
+  import graft.cep.{Absence, GAlt, GPerm, GVar, NestedGroup, PatternElem,
+    RxAlt, RxElem, RxNode, RxPermute, RxRep, RxSeq, RxVar, Step}
+
+  /** Lower `specs` onto the executable [[graft.cep]] elements — the
+    * only place the plan and control layers build them. `mkStep(name,
+    * min, max, strict)` builds one variable's step and is called once
+    * per variable occurrence, in [[MatchElemSpec.occurrences]] order
+    * across `specs`, so a caller drawing one predicate (or flag slot)
+    * per call stays aligned with the predicate list. */
+  def compile[T](specs: Seq[MatchElemSpec])(
+      mkStep: (String, Int, Int, Boolean) => Step[T])
+      : IndexedSeq[PatternElem[T]] = {
+    def one(n: String): Step[T] = mkStep(n, 1, 1, false)
+    def rx(n: RxSpecNode): RxNode[T] = n match {
+      case RxVarSpec(nm, mn, mx) => RxVar(one(nm), mn, mx)
+      case RxSeqSpec(is) => RxSeq(is.map(rx).toIndexedSeq)
+      case RxAltSpec(as) => RxAlt(as.map(rx).toIndexedSeq)
+      case RxRepSpec(b, mn, mx) => RxRep(rx(b), mn, mx)
+      case RxPermuteSpec(ms) => RxPermute(ms.map(rx).toIndexedSeq)
+    }
+    specs.map {
+      case StepSpec(n, mn, mx, st) => mkStep(n, mn, mx, st)
+      case AbsenceSpec(n, f) => Absence(one(n), f)
+      case NestedGroupSpec(items, mn, mx) =>
+        NestedGroup(items.map {
+          case NgVarSpec(n) => GVar(one(n))
+          case NgAltSpec(l, r) => GAlt(one(l), one(r))
+          case NgPermSpec(ns) => GPerm(ns.map(one).toIndexedSeq)
+        }.toIndexedSeq, mn, mx)
+      case RxSpec(root) => RxElem(rx(root))
+    }.toIndexedSeq
+  }
 }
 
 /** One cross-variable reference inside a DEFINE predicate
@@ -242,35 +284,59 @@ case class MatchRecognizeNode(
   */
 object MatchRecognize {
 
-  sealed trait Elem
+  /** One pattern element: its shape and the DEFINE predicate of each
+    * variable occurrence, in [[MatchElemSpec.occurrences]] order. The
+    * constructor objects below build every element kind. */
+  final case class Elem(spec: MatchElemSpec, preds: Seq[Column]) {
+    require(preds.length == spec.arity,
+      s"${spec.arity} variable occurrence(s) need as many predicates, " +
+        s"got ${preds.length}")
+  }
   /** One pattern step; `min`/`max` are the `<m:n>` quantifier bounds
     * (`+` = (1, MaxValue), `?` = (0, 1)), `strict` = sequence semantics
     * (the immediately-next event must qualify).
     */
-  final case class EStep(name: String, pred: Column, min: Int = 1,
-      max: Int = 1, strict: Boolean = false) extends Elem
+  object EStep {
+    def apply(name: String, pred: Column, min: Int = 1, max: Int = 1,
+        strict: Boolean = false): Elem =
+      Elem(StepSpec(name, min, max, strict), Seq(pred))
+  }
   /** `not pred for forTs`: absence window in `ts` units. */
-  final case class ENotFor(name: String, pred: Column, forTs: Long)
-      extends Elem
-  /** One item of an [[EGroupN]] iteration. */
-  sealed trait EGItem
-  final case class EGStep(name: String, pred: Column) extends EGItem
-  final case class EGAlt(leftName: String, leftPred: Column,
-      rightName: String, rightPred: Column) extends EGItem
-  final case class EGPerm(steps: Seq[(String, Column)]) extends EGItem
+  object ENotFor {
+    def apply(name: String, pred: Column, forTs: Long): Elem =
+      Elem(AbsenceSpec(name, forTs), Seq(pred))
+  }
+  /** One item of an [[EGroupN]] iteration and its predicates. */
+  final case class EGItem(spec: NgItemSpec, preds: Seq[Column])
+  object EGStep {
+    def apply(name: String, pred: Column): EGItem =
+      EGItem(NgVarSpec(name), Seq(pred))
+  }
+  object EGAlt {
+    def apply(leftName: String, leftPred: Column, rightName: String,
+        rightPred: Column): EGItem =
+      EGItem(NgAltSpec(leftName, rightName), Seq(leftPred, rightPred))
+  }
+  object EGPerm {
+    def apply(steps: Seq[(String, Column)]): EGItem =
+      EGItem(NgPermSpec(steps.map(_._1)), steps.map(_._2))
+  }
   /** Quantified group of items — SQL:2016 `(a b){m,n}`, `(a|b){m,n}`,
     * `PERMUTE(a, b, …){m,n}` and groups nested in groups,
     * `(a (b|c) PERMUTE(d,e)){m,n}`: each iteration walks the items in
     * order, iterations share the per-variable slots
     * ([[graft.cep.NestedGroup]] — greedy-min completion).
     */
-  final case class EGroupN(items: Seq[EGItem], minRepeat: Int,
-      maxRepeat: Int) extends Elem
+  object EGroupN {
+    def apply(items: Seq[EGItem], minRepeat: Int, maxRepeat: Int): Elem =
+      Elem(NestedGroupSpec(items.map(_.spec), minRepeat, maxRepeat),
+        items.flatMap(_.preds))
+  }
   /** `left and right`: both sides bind, either arrival order (a
     * one-iteration two-member PERMUTE group). */
   object EAnd {
     def apply(leftName: String, leftPred: Column, rightName: String,
-        rightPred: Column): EGroupN =
+        rightPred: Column): Elem =
       EGroupN(Seq(EGPerm(Seq(leftName -> leftPred, rightName -> rightPred))),
         1, 1)
   }
@@ -278,7 +344,7 @@ object MatchRecognize {
     * it (a one-iteration alternation group). */
   object EOr {
     def apply(leftName: String, leftPred: Column, rightName: String,
-        rightPred: Column): EGroupN =
+        rightPred: Column): Elem =
       EGroupN(Seq(EGAlt(leftName, leftPred, rightName, rightPred)), 1, 1)
   }
   /** Recursive regex element leaves/combinators — arbitrary nesting
@@ -286,42 +352,30 @@ object MatchRecognize {
     * ([[graft.cep.RxElem]] semantics). A variable may occur at several
     * leaves (e.g. a PERMUTE expansion); occurrences share the slot,
     * each with its own predicate evaluation site. */
-  sealed trait ERxNode
-  final case class ERxVar(name: String, pred: Column, min: Int = 1,
-      max: Int = 1) extends ERxNode
-  final case class ERxSeq(items: Seq[ERxNode]) extends ERxNode
-  final case class ERxAlt(alts: Seq[ERxNode]) extends ERxNode
-  final case class ERxRep(body: ERxNode, min: Int, max: Int)
-      extends ERxNode
-  final case class ERxPermute(members: Seq[ERxNode]) extends ERxNode
-  final case class ERx(root: ERxNode) extends Elem
-
-  private def erxOccs(n: ERxNode): Seq[(String, Column)] = n match {
-    case ERxVar(nm, p, _, _) => Seq(nm -> p)
-    case ERxSeq(is) => is.flatMap(erxOccs)
-    case ERxAlt(as) => as.flatMap(erxOccs)
-    case ERxRep(b, _, _) => erxOccs(b)
-    case ERxPermute(ms) => ms.flatMap(erxOccs)
+  final case class ERxNode(spec: RxSpecNode, preds: Seq[Column])
+  object ERxVar {
+    def apply(name: String, pred: Column, min: Int = 1,
+        max: Int = 1): ERxNode =
+      ERxNode(RxVarSpec(name, min, max), Seq(pred))
   }
-  private def erxSpec(n: ERxNode): RxSpecNode = n match {
-    case ERxVar(nm, _, mn, mx) => RxVarSpec(nm, mn, mx)
-    case ERxSeq(is) => RxSeqSpec(is.map(erxSpec))
-    case ERxAlt(as) => RxAltSpec(as.map(erxSpec))
-    case ERxRep(b, mn, mx) => RxRepSpec(erxSpec(b), mn, mx)
-    case ERxPermute(ms) => RxPermuteSpec(ms.map(erxSpec))
+  object ERxSeq {
+    def apply(items: Seq[ERxNode]): ERxNode =
+      ERxNode(RxSeqSpec(items.map(_.spec)), items.flatMap(_.preds))
   }
-  /** Build the cep-side [[graft.cep.RxNode]] from a spec, drawing one
-    * step per occurrence from `mk` in AST order. */
-  private[plans] def rxFromSpec[T](n: RxSpecNode,
-      mk: String => graft.cep.Step[T]): graft.cep.RxNode[T] = n match {
-    case RxVarSpec(nm, mn, mx) => graft.cep.RxVar(mk(nm), mn, mx)
-    case RxSeqSpec(is) =>
-      graft.cep.RxSeq(is.map(rxFromSpec(_, mk)).toIndexedSeq)
-    case RxAltSpec(as) =>
-      graft.cep.RxAlt(as.map(rxFromSpec(_, mk)).toIndexedSeq)
-    case RxRepSpec(b, mn, mx) => graft.cep.RxRep(rxFromSpec(b, mk), mn, mx)
-    case RxPermuteSpec(ms) =>
-      graft.cep.RxPermute(ms.map(rxFromSpec(_, mk)).toIndexedSeq)
+  object ERxAlt {
+    def apply(alts: Seq[ERxNode]): ERxNode =
+      ERxNode(RxAltSpec(alts.map(_.spec)), alts.flatMap(_.preds))
+  }
+  object ERxRep {
+    def apply(body: ERxNode, min: Int, max: Int): ERxNode =
+      ERxNode(RxRepSpec(body.spec, min, max), body.preds)
+  }
+  object ERxPermute {
+    def apply(members: Seq[ERxNode]): ERxNode =
+      ERxNode(RxPermuteSpec(members.map(_.spec)), members.flatMap(_.preds))
+  }
+  object ERx {
+    def apply(root: ERxNode): Elem = Elem(RxSpec(root.spec), root.preds)
   }
 
   /** @param tsCol    event-time column (LongType, any unit — `withinTs` /
@@ -362,27 +416,8 @@ object MatchRecognize {
     val tsA = attr(tsCol)
     require(tsA.dataType == LongType,
       s"ts column '$tsCol' must be LongType, got ${tsA.dataType}")
-    val (specs, predRefs) = pattern.map {
-      case EStep(n, p, mn, mx, st) =>
-        (StepSpec(n, mn, mx, st), Seq(resolve(p)))
-      case ENotFor(n, p, f) =>
-        (AbsenceSpec(n, f), Seq(resolve(p)))
-      case EGroupN(items, mn, mx) =>
-        (NestedGroupSpec(items.map {
-          case EGStep(n, _) => NgVarSpec(n)
-          case EGAlt(l, _, r, _) => NgAltSpec(l, r)
-          case EGPerm(ss) => NgPermSpec(ss.map(_._1))
-        }, mn, mx),
-          items.flatMap {
-            case EGStep(_, pc) => Seq(resolve(pc))
-            case EGAlt(_, lp, _, rp) => Seq(resolve(lp), resolve(rp))
-            case EGPerm(ss) => ss.map(x => resolve(x._2))
-          })
-      case ERx(root) =>
-        (RxSpec(erxSpec(root)), erxOccs(root).map(o => resolve(o._2)))
-    }.unzip
-    val preds = predRefs.map(_.map(_._1))
-    val ctxRefs = predRefs.flatMap(_.map(_._2))
+    val specs = pattern.map(_.spec)
+    val (preds, ctxRefs) = pattern.flatMap(_.preds).map(resolve).unzip
     // every referenced variable must exist in the pattern (a typo'd
     // name would otherwise evaluate to a silent permanent NULL)
     val patVars = specs.flatMap(_.names).toSet
@@ -451,7 +486,7 @@ object MatchRecognize {
           s"(got $dt)")
     }
     GraftSqlBridge.ofRows(spark, MatchRecognizeNode(
-      partitionKeys.map(attr), tsA, tieE, preds.flatten, specs,
+      partitionKeys.map(attr), tsA, tieE, preds, specs,
       withinTs, every, maxPartials, skipPastLastRow, outAttrs, child,
       ctxRefs, skipToVar, reluctantVars.toSeq.sorted, strictAll,
       skipToMembers))
@@ -557,8 +592,10 @@ object MatchRecognize {
     * FIRST event bound to pattern variable `variable` in the current
     * partial match (NULL while unbound) — the SQL:2016
     * `B AS B.price > FIRST(A.price)` shape, usable in any [[Elem]]
-    * predicate. Batch operator only (streaming predicates precompute
-    * as per-event flags and fail fast on these markers).
+    * predicate. Both executors evaluate it per (event, partial match):
+    * the batch operator through the step's cross-variable predicate,
+    * [[streamingFull]] through its `CvStreamEvaluator` (the predicate's
+    * per-event flag slot is then a dead placeholder).
     */
   def cvFirst(variable: String, column: String): Column =
     org.apache.spark.sql.functions.col(
@@ -612,21 +649,6 @@ object MatchRecognize {
     require(kind == "prev" || kind == "next", s"bad lag kind: $kind")
     org.apache.spark.sql.functions.col(s"_mr_${kind}_${column}_$k")
   }
-
-  /** Pattern-element step names in declaration order (the output slot
-    * order of the batch operator and [[streamingFull]]).
-    */
-  private[graft] def slotNamesOf(pattern: Seq[Elem]): Seq[String] =
-    pattern.flatMap {
-      case EStep(n, _, _, _, _) => Seq(n)
-      case ENotFor(n, _, _)     => Seq(n)
-      case EGroupN(items, _, _) => items.flatMap {
-        case EGStep(n, _) => Seq(n)
-        case EGAlt(l, _, r, _) => Seq(l, r)
-        case EGPerm(ss) => ss.map(_._1)
-      }
-      case ERx(root) => erxOccs(root).map(_._1).distinct
-    }
 
   /** ALL ROWS PER MATCH shaping: explode a one-row-per-match frame (the
     * batch operator's / [[streamingFull]]'s output, whose slot columns
@@ -743,45 +765,7 @@ object MatchRecognize {
     explodeAllRows(
       apply(df, partitionKeys, tsCol, tieCol, pattern, withinTs, every,
         maxPartials, skipPastLastRow),
-      df.columns.toIndexedSeq, slotNamesOf(pattern))
-
-  /** The DEFINE predicate of every variable occurrence in `pattern`, in
-    * the order [[streamingFull]] lays out its flag slots. */
-  private def streamPredCols(pattern: Seq[Elem]): Seq[Column] =
-    pattern.flatMap {
-      case EStep(_, p, _, _, _) => Seq(p)
-      case ENotFor(_, p, _)     => Seq(p)
-      case EGroupN(items, _, _) => items.flatMap {
-        case EGStep(_, pc) => Seq(pc)
-        case EGAlt(_, lp, _, rp) => Seq(lp, rp)
-        case EGPerm(ss) => ss.map(_._2)
-      }
-      case ERx(root) => erxOccs(root).map(_._2)
-    }
-
-  /** The streaming NFA elements of `pattern`. `flagStep(name, min, max,
-    * strict)` builds one variable's step and is called once per
-    * occurrence in [[streamPredCols]] order, so a caller counting its
-    * calls consumes the matching flag slot. */
-  private def streamElems(pattern: Seq[Elem],
-      flagStep: (String, Int, Int, Boolean) => graft.cep.Step[Row])
-      : IndexedSeq[graft.cep.PatternElem[Row]] = {
-    import graft.cep.{Absence, GAlt, GPerm, GVar, NestedGroup, RxElem}
-    def one(n: String) = flagStep(n, 1, 1, false)
-    pattern.map {
-      case EStep(n, _, mn, mx, st) => flagStep(n, mn, mx, st)
-      case ENotFor(n, _, f) => Absence[Row](one(n), f)
-      case EGroupN(items, mn, mx) =>
-        NestedGroup[Row](items.map {
-          case EGStep(n, _) => GVar[Row](one(n))
-          case EGAlt(l, _, r, _) => GAlt[Row](one(l), one(r))
-          case EGPerm(ss) => GPerm[Row](ss.map(x => one(x._1)).toIndexedSeq)
-        }.toIndexedSeq, mn, mx)
-      case ERx(root) =>
-        // occurrence order == streamPredCols order
-        RxElem[Row](rxFromSpec[Row](erxSpec(root), one))
-    }.toIndexedSeq
-  }
+      df.columns.toIndexedSeq, pattern.flatMap(_.spec.names))
 
   /** Streaming MATCH_RECOGNIZE with the BATCH operator's output schema:
     * `keys ++ (match_start, match_end) ++ one array<struct> column per
@@ -893,7 +877,7 @@ object MatchRecognize {
         s"PREV/NEXT column '$c' not in [${df.columns.mkString(", ")}]")
     }
 
-    val predCols = streamPredCols(pattern)
+    val predCols = pattern.flatMap(_.preds)
     val rowType = df.schema
     // cross-variable references (cvFirst/cvLast markers): resolved per
     // predicate; ref-bearing predicates evaluate INSIDE the NFA (the
@@ -1020,7 +1004,7 @@ object MatchRecognize {
           strict, ctxPred = Some(ev))
       }
     }
-    val pElems = streamElems(pattern, flagStep)
+    val pElems = MatchElemSpec.compile[Row](pattern.map(_.spec))(flagStep)
     // referenced variables must exist in the pattern (typo guard —
     // the batch builder enforces the same)
     val cvVars = resolvedPreds.flatMap(_._2.map(_.varName))

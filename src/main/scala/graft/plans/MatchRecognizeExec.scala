@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistrib
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import graft.cep.{Absence, Nfa, PatternDef, PatternMatch, Step}
+import graft.cep.{Nfa, PatternDef, PatternMatch, Step}
 
 /** Planner strategy for [[MatchRecognizeNode]] — registered either via
   * `SparkSessionExtensions.injectPlannerStrategy` ([[GraftExtensions]])
@@ -140,27 +140,9 @@ case class MatchRecognizeExec(
             min, max, strict, ctxPred = Some(cv))
         }
       }
-      val pelems = specs.map {
-        case StepSpec(n, mn, mx, st) => mkStep(n, mn, mx, st)
-        case AbsenceSpec(n, f) =>
-          Absence(mkStep(n, 1, 1, strict = false), f)
-        case NestedGroupSpec(items, mn, mx) =>
-          graft.cep.NestedGroup(items.map {
-            case NgVarSpec(n) =>
-              graft.cep.GVar(mkStep(n, 1, 1, strict = false))
-            case NgAltSpec(l, r) =>
-              graft.cep.GAlt(mkStep(l, 1, 1, strict = false),
-                mkStep(r, 1, 1, strict = false))
-            case NgPermSpec(ns) =>
-              graft.cep.GPerm(ns.map(n =>
-                mkStep(n, 1, 1, strict = false)).toIndexedSeq)
-          }.toIndexedSeq, mn, mx)
-        case RxSpec(root) =>
-          // occurrence order == predicates order (mkStep consumes one
-          // predicate per call)
-          graft.cep.RxElem(MatchRecognize.rxFromSpec[InternalRow](root,
-            nm => mkStep(nm, 1, 1, strict = false)))
-      }.toIndexedSeq
+      // occurrence order == predicates order (mkStep consumes one
+      // predicate per call)
+      val pelems = MatchElemSpec.compile[InternalRow](specs)(mkStep)
       val pat = PatternDef[InternalRow](pelems, within, ev, maxP, skipPLR,
         skipTo, skipMembers.map(_.toIndexedSeq), reluctant,
         strictAll = strict)

@@ -143,4 +143,27 @@ class ClassifierSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(fused == ref)
   }
+
+  test("fused entry points reject a duplicated id") {
+    val dup = corpus.union(Seq((2L, "another clean text", true),
+      (5L, "buy buy", false)).toDF("id", "text", "good"))
+    val e = intercept[IllegalArgumentException](
+      Classifier.perceptronTrainScore(dup, "text", "id", col("good"),
+        buckets = 64))
+    assert(e.getMessage.contains("2 duplicated id(s), 0 row(s) with a null id"),
+      e.getMessage)
+    intercept[IllegalArgumentException](
+      Classifier.trainCalibrationReport(dup, "text", "id", col("good"),
+        buckets = 64, thresholds = Seq(0L)))
+  }
+
+  test("fused entry points reject a null id") {
+    val nul = corpus.union(Seq((null.asInstanceOf[java.lang.Long],
+      "clean text", true)).toDF("id", "text", "good"))
+    val e = intercept[IllegalArgumentException](
+      Classifier.trainCalibrationReport(nul, "text", "id", col("good"),
+        buckets = 64, thresholds = Seq(0L)))
+    assert(e.getMessage.contains("0 duplicated id(s), 1 row(s) with a null id"),
+      e.getMessage)
+  }
 }
