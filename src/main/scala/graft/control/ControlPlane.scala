@@ -2,6 +2,7 @@ package graft.control
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Control-event ADT — wire-compatible in spirit with the reference's
@@ -102,6 +103,15 @@ object ControlEvent {
   * generated classes of the plan's earlier starts instead of compiling
   * them again. The cost: artifacts added with `SparkSession.addArtifact`
   * become visible to every session without isolation. graft adds none.
+  * It also sets `spark.sql.streaming.checkpointFileManagerClass` to
+  * Spark's `FileSystemBasedCheckpointFileManager`, so that checkpoint
+  * commits on a `file:` path fork no `readlink` shell per rename, as
+  * the default FileContext-based manager does. The cost: on a non-local
+  * checkpoint file system a no-overwrite commit becomes
+  * exists-then-rename instead of FileContext's atomic rename; within
+  * one session Spark already refuses two active runs of one checkpoint.
+  * The checkpoint layout is the same, so checkpoints written under the
+  * default manager restore.
   *
   * A plan counts as enabled only once its start has returned: a failed
   * enable leaves it disabled, and a failed update, whose old query is
@@ -138,6 +148,20 @@ class ControlPlane(
   // miss the cache and recompile all its generated classes, however
   // identical their code. Without isolation all starts share one loader.
   spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+
+  // Spark's default checkpoint manager renames through Hadoop's
+  // FileContext, which on a file: path forks a `readlink` shell for
+  // every rename of a temp file: each offset-log, commit-log and
+  // state-store write of every plan start and of the control stream.
+  // The FileSystem-based manager renames with FileSystem.rename and
+  // forks nothing. On the perfbench `stream` workload (4 vCPUs) cpu_s
+  // fell from 24.0 to 19.4 s (median of 12 alternating pairs), and a
+  // traced pair showed state.commit_ms 393 -> 18 ms per batch,
+  // streaming.wal_commit_ms 36.5 -> 11 ms and exec.task_run_ms
+  // 14.5 -> 7.3 s for the same ~2.1 s of task CPU. Its cost is in the
+  // class doc.
+  spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+    classOf[FileSystemBasedCheckpointFileManager].getName)
 
   def this(spark: SparkSession,
       sink: (String, DataFrame) => Option[StreamingQuery]) =

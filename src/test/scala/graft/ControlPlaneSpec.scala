@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileContextBasedCheckpointFileManager,
+  FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -652,18 +656,10 @@ class ControlPlaneSpec extends SparkSpec {
   }
 
   test("disable→enable resumes from checkpoint, no loss/duplication (A14)") {
-    import spark.implicits._
     spark.readStream.format("rate").option("rowsPerSecond", "100").load()
       .selectExpr("value").createOrReplaceTempView("rate_ck")
     val outDir = java.nio.file.Files.createTempDirectory("cp_out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("cp_ck").toString
-    def countOut(): Long =
-      try spark.read.parquet(outDir).count() catch { case _: Throwable => 0L }
-    def waitUntil(cond: () => Boolean): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(200)
-      assert(cond(), "timed out waiting for streaming progress")
-    }
     val cp = new ControlPlane(spark,
       (_: String, df: DataFrame) => Some(
         df.writeStream.format("parquet")
@@ -671,20 +667,105 @@ class ControlPlaneSpec extends SparkSpec {
           .outputMode("append").start()))
     try {
       cp.handle(AddPlan("ck1", "SELECT value FROM rate_ck"))
-      waitUntil(() => countOut() > 0)
+      waitUntil(() => parquetCount(outDir) > 0)
       cp.handle(DisablePlan("ck1"))
-      val afterPause = countOut()
+      val afterPause = parquetCount(outDir)
       // resume from the SAME checkpoint: continues at committed offsets
       cp.handle(EnablePlan("ck1"))
-      waitUntil(() => countOut() > afterPause)
+      waitUntil(() => parquetCount(outDir) > afterPause)
       cp.handle(DisablePlan("ck1"))
-      val vals = spark.read.parquet(outDir).select("value").as[Long]
-        .collect().sorted
-      // rate source emits 0,1,2,…: exactly-once resume ⇒ the output is a
-      // gapless, duplicate-free prefix
-      assert(vals.length == vals.distinct.length, "duplicated rows")
-      assert(vals.zipWithIndex.forall { case (v, i) => v == i },
-        "gap in resumed output")
+      assertGaplessPrefix(outDir)
+    } finally cp.shutdown()
+  }
+
+  private def parquetCount(dir: String): Long =
+    try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
+
+  private def waitUntil(cond: () => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 60000
+    while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(200)
+    assert(cond(), "timed out waiting for streaming progress")
+  }
+
+  /** The rate source emits 0,1,2,…: an exactly-once resume leaves a
+    * gapless, duplicate-free prefix of it in the `value` column.
+    */
+  private def assertGaplessPrefix(dir: String): Unit = {
+    val vals = spark.read.parquet(dir).select("value").collect()
+      .map(_.getLong(0)).sorted
+    assert(vals.length == vals.distinct.length, "duplicated rows")
+    assert(vals.zipWithIndex.forall { case (v, i) => v == i },
+      "gap in resumed output")
+  }
+
+  test("a control plane's session checkpoints through the FileSystem " +
+      "manager, which keeps HDFSMetadataLog's no-overwrite contract") {
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("cp_fm")
+    def manager = CheckpointFileManager.create(
+      new Path(dir.toUri), s.sessionState.newHadoopConf())
+    assert(manager.isInstanceOf[FileContextBasedCheckpointFileManager])
+    val cp = new ControlPlane(s, (_: String, _: DataFrame) => None)
+    try {
+      val fm = manager
+      assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager],
+        fm.getClass.getName)
+      def write(name: String, text: String) = {
+        val out = fm.createAtomic(new Path(dir.toUri.toString, name),
+          overwriteIfPossible = false)
+        out.write(text.getBytes("UTF-8"))
+        out
+      }
+      def names = java.nio.file.Files.list(dir).toArray
+        .map(_.toString.split('/').last).toSeq.sorted
+      write("0", "old").close()
+      assert(names == Seq(".0.crc", "0"))
+      // a second writer of batch 0 loses: its commit fails and the
+      // first writer's bytes stay (Spark's stream, shared by both
+      // managers, leaves the loser's temp file behind)
+      val dup = write("0", "new")
+      intercept[FileAlreadyExistsException](dup.close())
+      assert(new String(java.nio.file.Files.readAllBytes(dir.resolve("0")),
+        "UTF-8") == "old")
+      val beforeCancel = names
+      write("1", "cancelled").cancel()
+      assert(names == beforeCancel)
+    } finally cp.shutdown()
+  }
+
+  test("a pattern: plan checkpointed under Spark's default manager " +
+      "resumes through the control plane, no loss/duplication") {
+    val s = spark.newSession()
+    s.readStream.format("rate").option("rowsPerSecond", "100").load()
+      .withWatermark("timestamp", "1 second")
+      .createOrReplaceTempView("rate_rc")
+    // one match per event, so the matched values follow the rate source
+    val plan = "pattern:\nfrom rate_rc\n" +
+      "key value % 3 ; ts unix_millis(timestamp) ; tie value\n" +
+      "eventtime timestamp\nstep a where true"
+    val outDir = java.nio.file.Files.createTempDirectory("rc_out").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("rc_ck").toString
+    val sink = (_: String, df: DataFrame) => Some(
+      df.select(col("binds")("a").as("value"))
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckDir)
+        .outputMode("append").start())
+    assert(CheckpointFileManager.create(new Path(ckDir),
+      s.sessionState.newHadoopConf())
+      .isInstanceOf[FileContextBasedCheckpointFileManager])
+    // the first batches commit under the default manager; the watermark
+    // delay keeps the last second of events buffered in the pattern
+    // state when this run stops, so a state that does not restore
+    // leaves a gap
+    val first = sink("rc", PlanCompiler.compile(s, plan)).get
+    try waitUntil(() => parquetCount(outDir) > 0) finally first.stop()
+    val beforeResume = parquetCount(outDir)
+    val cp = new ControlPlane(s, sink)
+    try {
+      cp.handle(AddPlan("rc", plan))
+      waitUntil(() => parquetCount(outDir) > beforeResume)
+      cp.handle(DisablePlan("rc"))
+      assertGaplessPrefix(outDir)
     } finally cp.shutdown()
   }
 }
