@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-generated test tables (TESTDATA.md).
   *
@@ -22,22 +23,17 @@ object Tables {
 
   /** The events table with a µs-epoch `ts_us` BIGINT plus `ts`
     * normalized to a µs TimestampType — whatever physical type the
-    * generator wrote: TIMESTAMP(NANOS) (read as long under the legacy
-    * flag, ÷1000), TIMESTAMP(MICROS) (read as timestamp or ntz,
-    * `unix_micros`). The dispatch is on the READ schema, so a testdata
-    * regeneration that flips the parquet type cannot silently break
-    * every event query again (round 9: nanos → micros).
+    * generator wrote: TIMESTAMP(NANOS) (read as long, ÷1000),
+    * TIMESTAMP(MICROS) (read as timestamp or ntz). The dispatch is on
+    * the READ schema, so a testdata regeneration that flips the parquet
+    * type cannot silently break every event query again (round 9:
+    * nanos → micros).
     *
-    * NTZ→timestamp interprets the wall-clock in the session timezone;
-    * both confs are pinned here as the safety net for sessions that
-    * didn't set them (the SparkEntry.evts convention, generalized).
+    * Writes nothing on the session; `ts_us` reads an NTZ wall clock as
+    * UTC whatever the session time zone. NANOS reads as a long only
+    * under `parquet.nanosAsLong` ([[GraftSession]] sets it).
     */
   def eventsTsUs(spark: SparkSession, dir: String): DataFrame = {
-    if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        != "true")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
-      spark.conf.set("spark.sql.session.timeZone", "UTC")
     val raw = load(spark, dir, "events")
     val tsUs = raw.schema("ts").dataType match {
       case LongType =>
@@ -56,7 +52,11 @@ object Tables {
           s"events.ts read as BIGINT with max |ts| = $m — neither a " +
             "nanosecond (>= 1e17) nor a microsecond (>= 1e13) epoch; " +
             "refusing to guess the unit")
-      case _: TimestampNTZType => unix_micros(col("ts").cast("timestamp"))
+      // the Cast carries its own zone, so the session's never applies
+      // (timestampdiff from the epoch gives the same value at ~1.4x
+      // the per-row cost)
+      case _: TimestampNTZType => unix_micros(GraftSqlBridge.column(Cast(
+        GraftSqlBridge.expression(col("ts")), TimestampType, Some("UTC"))))
       case _ => unix_micros(col("ts"))
     }
     raw.withColumn("ts_us", tsUs)

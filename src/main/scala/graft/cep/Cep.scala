@@ -88,15 +88,15 @@ object Cep {
         * (cross-variable DEFINE + AFTER MATCH SKIP modes — see
         * [[Nfa.snapshot]]); empty otherwise. */
       pendingCands: List[PatternMatch[E]] = Nil,
-      /** MATCH_NUMBER() bookkeeping (only when `numberMatches`):
+      /** MATCH_NUMBER() bookkeeping (only under `BatchOrder` numbering):
         * completed matches held until no at-or-before-starting live
         * work remains and the watermark passes their start ts, so
         * numbers follow the batch `(start, end, slot sizes)` order… */
       heldMatches: Vector[PatternMatch[E]] = Vector.empty,
-      /** …and the count of numbers already assigned for this key. The
-        * counter outlives quiescence by design: numbering is defined
-        * over the key's whole lifetime, so a numbered key retains a
-        * minimal state entry. */
+      /** …and the count of numbers already assigned for this key (any
+        * numbering mode). The counter outlives quiescence by design:
+        * numbering is defined over the key's whole lifetime, so a
+        * numbered key retains a minimal state entry. */
       matchSeq: Long = 0L,
       /** Compiled-automaton layout fingerprint
         * ([[PatternDef.layoutFp]]) of the pattern this state was
@@ -163,7 +163,8 @@ object Cep {
               "or this build's pattern compilation changed" +
               (if (strict)
                 ", or (strict restore is on) the statement's DEFINE " +
-                  "predicates, skip mode, or WITHIN bound changed"
+                  "predicates, skip mode, or WITHIN bound changed, or " +
+                  "(pattern: plan) its output clause was added or removed"
               else "") +
               ". In-flight partial matches cannot be migrated; " +
               "restart the query with a fresh checkpointLocation.")
@@ -208,7 +209,8 @@ object Cep {
     * shape pointed at the same checkpointLocation is rejected too
     * instead of silently adopting the old partials (the default keeps
     * Structured Streaming's usual query-evolution semantics; both
-    * documented in DIALECT.md).
+    * documented in DIALECT.md). A `pattern:` plan's `output` clause
+    * salts too (`PlanCompiler.RateLimitSalt`).
     */
   private[graft] def storedFp(layoutFp: Long, restoreSalt: Long): Long =
     if (restoreSalt == 0L) layoutFp
@@ -233,6 +235,17 @@ object Cep {
       decorate: (E, IndexedSeq[E], IndexedSeq[E]) => E) {
     require(maxPrev >= 0 && maxNext >= 0 && (maxPrev > 0 || maxNext > 0),
       "neighborhood needs maxPrev or maxNext > 0")
+  }
+
+  /** How [[step]] numbers each key's matches into [[PatternMatch.seq]]
+    * from [[CepState.matchSeq]]: not at all, in emission order (what a
+    * `pattern:` plan's `output` clause counts), or in MATCH_NUMBER()'s
+    * batch order. */
+  sealed trait Numbering
+  object Numbering {
+    case object Off extends Numbering
+    case object Arrival extends Numbering
+    case object BatchOrder extends Numbering
   }
 
   /** Reserved pseudo-slot name carrying an UNMATCHED input event out
@@ -279,17 +292,17 @@ object Cep {
         * stays NULL-starved there).
         */
       unmatchedWithin: Option[Long] = None,
-      /** SQL:2016 MATCH_NUMBER(): stamp each emitted match's [[PatternMatch.seq]]
-        * with its 1-based per-key number in the batch operator's
-        * `(match_start, match_end, size(v1), …)` order. A completed
-        * match is held in state until no live partial or pending
-        * candidate starting at-or-before its start ts remains AND the
-        * watermark has strictly passed that ts (either could still
-        * produce a match that sorts first under the batch key), so a
-        * WITHIN bound is required — it is what guarantees every blocker
-        * eventually completes or expires.
+      /** [[Numbering]]. `Arrival` stamps matches as this step emits
+        * them. `BatchOrder` (SQL:2016 MATCH_NUMBER()) stamps the batch
+        * operator's `(match_start, match_end, size(v1), …)` order: a
+        * completed match is held in state until no live partial or
+        * pending candidate starting at-or-before its start ts remains
+        * AND the watermark has strictly passed that ts (either could
+        * still produce a match that sorts first under the batch key),
+        * so a WITHIN bound is required — it is what guarantees every
+        * blocker eventually completes or expires.
         */
-      numberMatches: Boolean = false,
+      numberMatches: Numbering = Numbering.Off,
       /** '$' end anchor on a stream (round 19): the quiescence horizon
         * in event-time units (the statement's WITHIN bound). A
         * NEXT-withheld event whose ts + horizon the watermark has
@@ -441,6 +454,11 @@ object Cep {
     }
     val unmatchedMatches = unmatchedOut.map(e =>
       PatternMatch(tsOf(e), tsOf(e), Map(UnmatchedSlot -> Vector(e))))
+    // stamps a run of emitted matches from the key's counter
+    def stamp(ms: Vector[PatternMatch[E]]) =
+      (ms.zipWithIndex.map { case (m, i) =>
+        m.copy(seq = prev.matchSeq + 1 + i)
+      }, prev.matchSeq + ms.length)
     // MATCH_NUMBER(): completed matches join the held set, sorted by the
     // BATCH numbering key — `(match_start, match_end, size(v1), …)` in
     // declaration order, exactly the batch operator's row_number window
@@ -457,10 +475,13 @@ object Cep {
     //     otherwise seed a new earlier-sorting match).
     // Both fences resolve: blockers complete or expire under the
     // required WITHIN, and the watermark advances past any fixed ts.
-    val (realOut, heldOut, nSeq) =
-      if (!numberMatches)
+    val (realOut, heldOut, nSeq) = numberMatches match {
+      case Numbering.Off =>
         (matches ++ timeMatches, prev.heldMatches, prev.matchSeq)
-      else {
+      case Numbering.Arrival =>
+        val (out, n) = stamp(matches ++ timeMatches)
+        (out, prev.heldMatches, n)
+      case Numbering.BatchOrder =>
         require(pattern.withinMs.isDefined,
           "MATCH_NUMBER() on a stream needs a WITHIN bound: numbering " +
             "follows (match_start, match_end) order, so each completed " +
@@ -497,10 +518,9 @@ object Cep {
         val (emit, stay) = held.partition(m =>
           (nt || (hasWatermark && wm > m.startTs)) &&
             blockerTs.forall(_ > m.startTs))
-        (emit.zipWithIndex.map { case (m, i) =>
-          m.copy(seq = prev.matchSeq + 1 + i)
-        }, stay, prev.matchSeq + emit.length)
-      }
+        val (out, n) = stamp(emit)
+        (out, stay, n)
+    }
     if (keep.isEmpty && np.isEmpty && !nt && nHeld.isEmpty &&
         neighborhood.isEmpty && nUndecided.isEmpty && nBound.isEmpty &&
         npend.isEmpty && heldOut.isEmpty && nSeq == 0L)
@@ -543,7 +563,7 @@ object Cep {
       tsScale: Long = 1L,
       neighborhood: Option[Neighborhood[E]] = None,
       unmatchedWithin: Option[Long] = None,
-      numberMatches: Boolean = false,
+      numberMatches: Numbering = Numbering.Off,
       nextFlushHorizon: Option[Long] = None,
       restoreSalt: Long = 0L)(
       build: (K, PatternMatch[E]) => IterableOnce[O]): Dataset[O] = {

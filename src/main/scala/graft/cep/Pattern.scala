@@ -584,10 +584,12 @@ final case class PatternMatch[E](
     startTs: Long,
     endTs: Long,
     groups: Map[String, IndexedSeq[E]],
-    /** SQL:2016 MATCH_NUMBER(): the match's 1-based sequential number
-      * within its key, in the batch operator's `(match_start,
-      * match_end)` order. Stamped by [[Cep.step]] only when numbering
-      * is requested (`numberMatches`); 0 otherwise. */
+    /** The match's 1-based sequential number within its key, stamped
+      * by [[Cep.step]] only when numbering is requested
+      * (`numberMatches`); 0 otherwise. Under [[Cep.Numbering.BatchOrder]]
+      * (SQL:2016 MATCH_NUMBER()) it follows the batch operator's
+      * `(match_start, match_end)` order; under [[Cep.Numbering.Arrival]]
+      * the order the stream emits matches in. */
     seq: Long = 0L) {
   def head(step: String): E = groups(step).head
   def apply(step: String, i: Int): E = groups(step)(i)

@@ -38,7 +38,8 @@ import graft.plans.MatchRecognize.{EAnd, ENotFor, EOr, EStep}
   *                        -- per key, pass match 1, n+1, 2n+1… (first)
   *                        -- or n, 2n… (last) of each count-batch
   *                        -- (SiddhiQL `output first every n events`,
-  *                        -- SURVEY §2.B26)
+  *                        -- SURVEY §2.B26); streams count in emission
+  *                        -- order, batch views in (start_ts, end_ts)
   *   step <name> [strict] [min m] [max n] where <boolean expr>
   *   either <n1> where <c1> ; or <n2> where <c2>    -- logical OR element
   *   both <n1> where <c1> ; and <n2> where <c2>     -- logical AND element
@@ -64,6 +65,10 @@ object PlanCompiler {
       binds: Map[String, Long])
 
   def apply(spark: SparkSession): String => DataFrame = compile(spark, _)
+
+  /** [[Cep.storedFp]] salt of a streaming plan with an `output` clause:
+    * its state holds the per-key match count the clause filters on. */
+  private val RateLimitSalt: Long = 0x6f75747075744e4cL
 
   /** `pattern:` text compiles here; everything else (with or without
     * the `sql:` prefix) goes through [[graft.plans.GraftSqlParser]], the
@@ -238,9 +243,6 @@ object PlanCompiler {
     }
     val pat = PatternDef[DynEvt](pElems, within, every,
       skipPastLastRow = skipPastLast)
-    val build = (k: String, m: PatternMatch[DynEvt]) => Iterator.single(
-      DynMatch(k, m.startTs, m.endTs,
-        m.groups.map { case (n, es) => n -> es.head.tie }))
 
     if (ds.isStreaming) {
       // Typed on purpose. Lowering streaming pattern plans onto the
@@ -252,27 +254,23 @@ object PlanCompiler {
       // (median); a traced pair showed state.update_ms 346 -> 470,
       // state.memory_mb 0.40 -> 0.77 and exec.gc_ms 172 -> 348 for the
       // same 29 matches.
-      val matches = Cep.streaming[DynEvt, String, DynMatch](
-        ds, _.key, pat, _.ts, _.tie, tsScale)(build)
-      // `output first|last every n`: a second keyed stateful op (O(1)
-      // counter per key) chained after the CEP operator. Spark's
-      // global-watermark checker rejects ANY stateful op downstream of
-      // flatMapGroupsWithState on the heuristic that it might drop
-      // "late" rows — but the counter is watermark-AGNOSTIC (NoTimeout,
-      // no event-time columns, user code sees every input row), so the
-      // flagged correctness hazard cannot occur; relax the check to the
-      // documented warning for this session
-      rateLimit.fold(matches.toDF()) { case (isFirst, n) =>
-        spark.conf.set(
-          "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-          "false")
-        (if (isFirst)
-          graft.streaming.Emission.firstEveryN[DynMatch, String](
-            matches, _.key, n)
-        else
-          graft.streaming.Emission.lastEveryN[DynMatch, String](
-            matches, _.key, n)).toDF()
+      // `output` runs inside the CEP operator: it numbers each key's
+      // matches in emission order and build keeps every n-th. The salt
+      // stops a checkpoint without that count restoring as count 0.
+      val keepSeq: Long => Boolean = rateLimit match {
+        case None => _ => true
+        case Some((isFirst, n)) => s => (if (isFirst) s - 1 else s) % n == 0
       }
+      val build = (k: String, m: PatternMatch[DynEvt]) =>
+        if (keepSeq(m.seq))
+          Iterator.single(DynMatch(k, m.startTs, m.endTs,
+            m.groups.map { case (n, es) => n -> es.head.tie }))
+        else Iterator.empty
+      val (numbering, salt) =
+        if (rateLimit.isEmpty) (Cep.Numbering.Off, 0L)
+        else (Cep.Numbering.Arrival, RateLimitSalt)
+      Cep.streaming[DynEvt, String, DynMatch](ds, _.key, pat, _.ts, _.tie,
+        tsScale, numberMatches = numbering, restoreSalt = salt)(build).toDF()
     } else {
       // batch pattern plans run on the MATCH_RECOGNIZE custom operator:
       // Catalyst plans one hash shuffle + sort (elided when the view is

@@ -1092,7 +1092,8 @@ object MatchRecognize {
     val unWithin = if (withUnmatched) withinTs else None
     Cep.streaming[Row, Row, Row](
       env, _.getStruct(0), pat, _.getLong(1), _.getLong(2),
-      tsScale, neighborhood, unWithin, withMatchSeq,
+      tsScale, neighborhood, unWithin,
+      if (withMatchSeq) Cep.Numbering.BatchOrder else Cep.Numbering.Off,
       nextFlushWithin, restoreSalt)(build)(kEnc, oEnc).toDF()
   }
 

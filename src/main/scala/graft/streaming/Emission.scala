@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Output rate limiting, snapshot output and time triggers — SURVEY B26
   * (`output [first|last|all] every N sec/events`, `output snapshot`) and
@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   *    micro-batch contract;
   *  - `output snapshot every N sec` → Complete output mode on the same
   *    trigger: the full current aggregation state each tick;
-  *  - count-driven `first/last every N events` → a per-key stateful
-  *    modulo filter (O(1) state per key);
+  *  - count-driven `first/last every N events` runs inside a `pattern:`
+  *    plan's CEP operator ([[graft.control.PlanCompiler]]);
   *  - `define trigger at every N sec` → a tick stream derived from the
   *    rate source. Cron-expression triggers have no Spark source; drive
   *    them externally into the control plane.
@@ -34,41 +34,6 @@ object Emission {
   def snapshot(agg: DataFrame, interval: String): DataStreamWriter[Row] =
     agg.writeStream.outputMode(OutputMode.Complete())
       .trigger(Trigger.ProcessingTime(interval))
-
-  /** Boxed per-key event counter (kryo can't encode bare primitives). */
-  final case class Cnt(n: Long)
-
-  /** B26 `output first every n events` per key: passes events 1, n+1,
-    * 2n+1… of each key (the first of each count-batch).
-    */
-  def firstEveryN[E: Encoder, K: Encoder](
-      ds: Dataset[E], key: E => K, n: Int): Dataset[E] =
-    everyNth(ds, key, n, phase = 0L)
-
-  /** B26 `output last every n events` per key: passes events n, 2n… of
-    * each key (the last of each count-batch).
-    */
-  def lastEveryN[E: Encoder, K: Encoder](
-      ds: Dataset[E], key: E => K, n: Int): Dataset[E] =
-    everyNth(ds, key, n, phase = n - 1L)
-
-  private def everyNth[E: Encoder, K: Encoder](
-      ds: Dataset[E], key: E => K, n: Int, phase: Long): Dataset[E] = {
-    require(n >= 1)
-    implicit val stateEnc: Encoder[Cnt] = Encoders.kryo[Cnt]
-    ds.groupByKey(key).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (_: K, it: Iterator[E], state: GroupState[Cnt]) =>
-        var c = state.getOption.map(_.n).getOrElse(0L)
-        val out = it.filter { _ =>
-          val keep = c % n == phase
-          c += 1
-          keep
-        }.toList
-        state.update(Cnt(c))
-        out.iterator
-    }
-  }
 
   /** B28 `define trigger T at every <everySeconds> sec`: a named tick
     * stream — one `(triggered_time)` row per period. `ticksPerSecond`

@@ -151,7 +151,7 @@ object ThroughputBench {
     val mnEps = drive[TpOut](memSink("tp_cep_matchnum"), in =>
       Cep.streaming[TpEvt, Long, TpOut](cepInput(in),
         _.user_id, pat, _.ts_us, _.event_id, tsScale = 1000L,
-        numberMatches = true)(buildNum))
+        numberMatches = Cep.Numbering.BatchOrder)(buildNum))
 
     // streaming cross-variable DEFINE (the interpreted per-partial
     // evaluator on the full-row streamingFull envelope): purchase

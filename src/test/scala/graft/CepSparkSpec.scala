@@ -206,8 +206,17 @@ class CepSparkSpec extends SparkSpec {
     // Fixture = the NfaProps r16 regression shape: p completes first
     // but q's match (sorting FIRST in batch-key order) is still locked
     // inside the hold-back, so releasing anything pre-restart would
-    // already be the bug.
-    implicit val sqlCtx = spark.sqlContext
+    // already be the bug. It runs under both checkpoint managers, each
+    // on its own session (CheckpointManagers).
+    for (manager <- CheckpointManagers.all)
+      withClue(s"${manager.getSimpleName}: ") {
+        midHoldRestart(CheckpointManagers.session(spark, manager))
+      }
+  }
+
+  private def midHoldRestart(
+      session: org.apache.spark.sql.SparkSession): Unit = {
+    implicit val sqlCtx = session.sqlContext
     import graft.cep.{GAlt, NestedGroup}
     val pat = PatternDef[TEvt](IndexedSeq(
       NestedGroup[TEvt](IndexedSeq(GAlt(Step[TEvt]("p", _.typ == "A"),
@@ -238,7 +247,8 @@ class CepSparkSpec extends SparkSpec {
           .as[TEvt]
         Cep.streaming[TEvt, Long, SeqOut](
           withTs, _.user, pat, _.ts_ms, _.id,
-          neighborhood = Some(nb), numberMatches = true)(build)
+          neighborhood = Some(nb),
+          numberMatches = Cep.Numbering.BatchOrder)(build)
           .writeStream
           .option("checkpointLocation", ck)
           .foreachBatch((b: org.apache.spark.sql.Dataset[SeqOut],

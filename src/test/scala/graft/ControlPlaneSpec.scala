@@ -585,6 +585,98 @@ class ControlPlaneSpec extends SparkSpec {
     } finally cp.shutdown()
   }
 
+  test("streaming plan: output last every 3 keeps its count across " +
+      "micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[TEvt]
+    input.toDS()
+      .withColumn("tsc", timestamp_millis($"ts_ms"))
+      .withWatermark("tsc", "5 seconds")
+      .createOrReplaceTempView("cpo3_stream")
+    val q = PlanCompiler.compile(spark,
+      "pattern:\nfrom cpo3_stream\nkey user ; ts ts_ms ; tie id\n" +
+        "eventtime tsc\nstep a where typ = 'A'\noutput last every 3")
+      .writeStream.format("memory").queryName("cpo3_out")
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("cpo3_ck").toString)
+      .start()
+    try {
+      // matches 1 and 2 release in the first batches: count at 2,
+      // nothing out
+      input.addData(TEvt(1, 1000, 1, "A"), TEvt(2, 2000, 1, "A"),
+        TEvt(8, 10000, 9, "X"))
+      q.processAllAvailable()
+      // the 3rd match crosses the count-batch line, the 4th does not
+      input.addData(TEvt(3, 11000, 1, "A"), TEvt(4, 12000, 1, "A"),
+        TEvt(9, 100000L, 9, "X"))
+      q.processAllAvailable()
+      input.addData(TEvt(10, 200000L, 9, "X")) // flush the tail
+      q.processAllAvailable()
+      val got = spark.table("cpo3_out")
+        .selectExpr("key", "binds['a'] AS a_id")
+        .as[(String, Long)].collect().toSet
+      assert(got == Set(("1", 3L)))
+    } finally q.stop()
+  }
+
+  test("a rate-limited streaming plan compiles to one stateful operator " +
+      "and leaves the session's settings alone") {
+    import spark.implicits._
+    val s = spark.newSession()
+    implicit val sqlCtx = s.sqlContext
+    MemoryStream[TEvt].toDS()
+      .withColumn("tsc", timestamp_millis($"ts_ms"))
+      .withWatermark("tsc", "5 seconds")
+      .createOrReplaceTempView("cpo_one")
+    val df = PlanCompiler.compile(s,
+      "pattern:\nfrom cpo_one\nkey user ; ts ts_ms ; tie id\n" +
+        "eventtime tsc\nstep a where typ = 'A'\noutput first every 2")
+    assert(!s.conf.getAll.contains(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"))
+    val stateful = df.queryExecution.analyzed.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical
+          .FlatMapGroupsWithState => f
+    }
+    assert(stateful.size == 1, df.queryExecution.analyzed.treeString)
+  }
+
+  test("a checkpoint written without the output clause fails to restore " +
+      "under the rate-limited plan with the fresh-checkpoint error") {
+    import spark.implicits._
+    val s = spark.newSession()
+    implicit val sqlCtx = s.sqlContext
+    val input = MemoryStream[TEvt]
+    input.toDS()
+      .withColumn("tsc", timestamp_millis($"ts_ms"))
+      .withWatermark("tsc", "5 seconds")
+      .createOrReplaceTempView("cpo_rs")
+    val ck = java.nio.file.Files.createTempDirectory("cpo_rs_ck").toString
+    val plan = "pattern:\nfrom cpo_rs\nkey user ; ts ts_ms ; tie id\n" +
+      "eventtime tsc\nstep a where typ = 'A'"
+    def start(text: String) = PlanCompiler.compile(s, text)
+      .writeStream.option("checkpointLocation", ck)
+      .foreachBatch((b: DataFrame, _: Long) => { b.collect(); () })
+      .start()
+    // key 1's event stays buffered behind the watermark: the state row
+    // is written under the unsalted fingerprint
+    val q1 = start(plan)
+    input.addData(TEvt(1, 1000, 1, "A"))
+    q1.processAllAvailable()
+    q1.stop()
+    val q2 = start(plan + "\noutput first every 2")
+    try {
+      input.addData(TEvt(2, 2000, 1, "A"))
+      val ex = intercept[Exception](q2.processAllAvailable())
+      def chain(t: Throwable): List[Throwable] =
+        if (t == null) Nil else t :: chain(t.getCause)
+      assert(chain(ex).exists(t => t.getMessage != null &&
+          t.getMessage.contains("fresh checkpointLocation")),
+        s"expected the fresh-checkpoint restore error, got:\n$ex")
+    } finally q2.stop()
+  }
+
   test("JSON control stream drives the plane; poison pills are dropped") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -9,36 +9,6 @@ case class Ev(id: Long, user: Long)
 class EmissionSpec extends SparkSpec {
   import spark.implicits._
 
-  test("firstEveryN emits the first event of each count-batch per key") {
-    val ds = (1L to 10L).map(i => Ev(i, 1L)).toDS()
-    val got = Emission.firstEveryN[Ev, Long](ds, _.user, 3)
-      .collect().map(_.id).sorted
-    assert(got.toSeq == Seq(1L, 4L, 7L, 10L))
-  }
-
-  test("lastEveryN emits the last event of each count-batch per key") {
-    val ds = (1L to 10L).map(i => Ev(i, 1L)).toDS()
-    val got = Emission.lastEveryN[Ev, Long](ds, _.user, 3)
-      .collect().map(_.id).sorted
-    assert(got.toSeq == Seq(3L, 6L, 9L))
-  }
-
-  test("count-batch emission state persists across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Emission.lastEveryN[Ev, Long](input.toDS(), _.user, 3)
-      .writeStream.format("memory").queryName("emission_out")
-      .outputMode("append").start()
-    try {
-      input.addData(Ev(1, 1), Ev(2, 1)) // counter at 2, nothing out
-      q.processAllAvailable()
-      input.addData(Ev(3, 1), Ev(4, 1)) // 3rd event crosses the batch line
-      q.processAllAvailable()
-      val got = spark.table("emission_out").as[Ev].collect().map(_.id).sorted
-      assert(got.toSeq == Seq(3L))
-    } finally q.stop()
-  }
-
   test("rateLimited writer runs on a processing-time trigger (B26)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]

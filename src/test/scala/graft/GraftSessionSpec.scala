@@ -38,6 +38,23 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(calls.isEmpty, calls.mkString("\n"))
   }
 
+  test("library code writes no session settings outside ControlPlane " +
+      "and JobProfile") {
+    // ControlPlane sets its two settings on the session it is given;
+    // JobProfile applies the settings named on its command line
+    val allowed = Set("control/ControlPlane.scala", "tools/JobProfile.scala")
+    val root = mainSrc.resolve("graft")
+    val files = Files.walk(mainSrc).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val writes = for {
+      f <- files if !allowed(root.relativize(f).toString)
+      (line, i) <- text(f).split("\n").zipWithIndex
+      if !isComment(line) && Seq("spark.conf.set", "conf.set(",
+        "setConfString").exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(writes.isEmpty, writes.mkString("\n"))
+  }
+
   test("GraftSession pins the planner settings perfbench's session pins") {
     val ours = literalConfigs(text(mainSrc.resolve("graft/GraftSession.scala")))
     val bench = literalConfigs(text(

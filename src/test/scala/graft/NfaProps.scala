@@ -680,11 +680,15 @@ object NfaParityProps extends Properties("NfaParity") {
     * incremental NFA) must emit exactly the ordered-replay matches, for
     * ANY chunking of the stream with shuffled intra-chunk order. Both
     * sides receive the id tie-break — the engine contract (row identity
-    * is the full (ts, tie) pair on both executors).
+    * is the full (ts, tie) pair on both executors). Under arrival
+    * numbering (what a `pattern:` plan's `output` clause filters on)
+    * the same matches come out stamped 1..n in replay order; without
+    * numbering every `seq` stays 0.
     */
   property("chunked streaming steps == ordered batch replay") =
-    forAll(genPattern, genChunked, Gen.choose(0L, 25L)) {
-      case (pat, (evs, cuts), wmLag) =>
+    forAll(genPattern, genChunked, Gen.choose(0L, 25L),
+        Gen.oneOf(Cep.Numbering.Off, Cep.Numbering.Arrival)) {
+      case (pat, (evs, cuts), wmLag, numbering) =>
       val sorted = evs.sortBy(e => (e.ts, e.id))
       val expected = {
         val nfa = new Nfa[E](pat, _.ts, _.id)
@@ -702,11 +706,13 @@ object NfaParityProps extends Properties("NfaParity") {
       var st = Cep.CepState.empty[E]
       val got = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Map[String, Seq[Long]])]
+      val seqs = scala.collection.mutable.ArrayBuffer.empty[Long]
       def doStep(chunk: Seq[E], wm: Long): Unit = {
         val (ns, ms, _) = Cep.step[E](st, chunk, wm, hasWatermark = true,
-          pat, _.ts, _.id)
+          pat, _.ts, _.id, numberMatches = numbering)
         got ++= ms.map(m =>
           (m.startTs, m.endTs, m.groups.view.mapValues(_.map(_.id)).toMap))
+        seqs ++= ms.map(_.seq)
         st = ns.getOrElse(Cep.CepState.empty[E])
       }
       // watermark lags each chunk's max ts: later events stay buffered in
@@ -716,7 +722,12 @@ object NfaParityProps extends Properties("NfaParity") {
       }
       // final watermark advance: everything releasable, absences flush
       doStep(Nil, Long.MaxValue / 2)
-      Prop(got.toList == expected) :| s"got=$got expected=$expected"
+      val wantSeqs =
+        if (numbering == Cep.Numbering.Arrival) 1L to got.size.toLong
+        else Seq.fill(got.size)(0L)
+      (Prop(got.toList == expected) :| s"got=$got expected=$expected") &&
+        (Prop(seqs.toList == wantSeqs.toList) :|
+          s"$numbering seqs=$seqs")
     }
 
   /** MATCH_NUMBER chunking: for ANY chunking with shuffled intra-chunk
@@ -760,7 +771,7 @@ object NfaParityProps extends Properties("NfaParity") {
         .empty[graft.cep.PatternMatch[E]]
       def doStep(chunk: Seq[E], wm: Long): Unit = {
         val (ns, ms, _) = Cep.step[E](st, chunk, wm, hasWatermark = true,
-          pat, _.ts, _.id, numberMatches = true)
+          pat, _.ts, _.id, numberMatches = Cep.Numbering.BatchOrder)
         got ++= ms
         st = ns.getOrElse(Cep.CepState.empty[E])
       }
@@ -837,7 +848,8 @@ object NfaParityProps extends Properties("NfaParity") {
     val got = scala.collection.mutable.ArrayBuffer.empty[PatternMatch[E]]
     def doStep(evs: Seq[E], wm: Long): Unit = {
       val (ns, ms, _) = Cep.step[E](st, evs, wm, hasWatermark = true,
-        pat, _.ts, _.id, neighborhood = Some(nb), numberMatches = true)
+        pat, _.ts, _.id, neighborhood = Some(nb),
+        numberMatches = Cep.Numbering.BatchOrder)
       got ++= ms
       st = ns.getOrElse(Cep.CepState.empty[E])
     }

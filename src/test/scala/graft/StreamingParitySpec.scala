@@ -1880,8 +1880,18 @@ class StreamingParitySpec extends SparkSpec {
     // or mid-release, whatever the draw lands on — then asserts the
     // restored run's full emitted multiset equals the uninterrupted
     // control's. State-shape bugs under restore (a CepState field the
-    // kryo round-trip loses or reinterprets) are the target class.
-    implicit val sqlCtx = spark.sqlContext
+    // kryo round-trip loses or reinterprets) are the target class. The
+    // soak runs under Spark's default checkpoint manager and under the
+    // FileSystem-based one ControlPlane sets, each on its own session,
+    // so the suite order cannot decide which one it runs under.
+    for (manager <- CheckpointManagers.all)
+      withClue(s"${manager.getSimpleName}: ") {
+        killRestartSoak(CheckpointManagers.session(spark, manager))
+      }
+  }
+
+  private def killRestartSoak(s: org.apache.spark.sql.SparkSession): Unit = {
+    implicit val sqlCtx = s.sqlContext
     val fuzzSeed = sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong)
     val rnd = new scala.util.Random(fuzzSeed.getOrElse(424242L))
     val types = Vector("A", "B", "X")
@@ -1890,89 +1900,86 @@ class StreamingParitySpec extends SparkSpec {
     }
     val ticks = Seq((91L, 300000L, 9L, "T"), (92L, 600000L, 9L, "T"))
     val parser = new graft.plans.GraftSqlParser(
-      spark.sessionState.sqlParser, spark)
+      s.sessionState.sqlParser, s)
     // in-suite default 3 statements (each runs 1 control + 2 kill-restart
     // passes, 5 query starts); GRAFT_SOAK=1 raises to the off-suite 8
     val nTrials = Soak.knob("GRAFT_FUZZ_TRIALS", 3, 8)
     // the default SQL dispatch (the flatMapGroupsWithState executor) on
     // the RocksDB state store: restore through the provider that keeps
     // state off the executor heap
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state." +
         "RocksDBStateStoreProvider")
-    try {
-      for (trial <- 1 to nTrials) {
-        val (stmt, _) = drawFuzzStatement(rnd, trial)
-        // randomized stage plan, FIXED across this trial's runs: the
-        // 36 rows in three chunks at random boundaries, then the two
-        // flush ticks as their own stages
-        val c1 = 6 + rnd.nextInt(12)
-        val c2 = c1 + 6 + rnd.nextInt(12)
-        val stages: Seq[Seq[(Long, Long, Long, String)]] = Seq(
-          rows.take(c1), rows.slice(c1, c2), rows.drop(c2),
-          Seq(ticks(0)), Seq(ticks(1)))
-        // two distinct random cut points among the stage boundaries
-        // that can hold live state (after stage 0..3)
-        val cuts = rnd.shuffle((0 to 3).toVector).take(2)
-        def run(killAfter: Option[Int]): Seq[(Long, String, Long, Long,
-            Long)] = {
-          import scala.jdk.CollectionConverters._
-          val ck = java.nio.file.Files
-            .createTempDirectory("mr_killfuzz_ck").toString
-          val input = MemoryStream[(Long, Long, Long, String)]
-          // memory sink refuses checkpoint recovery; foreachBatch keyed
-          // by batch id is the recoverable path (an at-least-once replay
-          // of the last batch overwrites instead of duplicating)
-          val sink = new java.util.concurrent.ConcurrentHashMap[
-            java.lang.Long, Seq[(Long, String, Long, Long, Long)]]()
-          def startQuery() = {
-            input.toDF().toDF("event_id", "ts_ms", "user_id", "event_type")
-              .withColumn("etc", timestamp_millis($"ts_ms"))
-              .withWatermark("etc", "10 seconds")
-              .createOrReplaceTempView("mr_killfuzz_stream")
-            org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-                parser.parsePlan(stmt("mr_killfuzz_stream", "EVENTTIME etc")))
-              .writeStream.outputMode("append")
-              .option("checkpointLocation", ck)
-              .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => {
-                sink.put(id, b.filter($"user_id" <= 2L)
-                  .select($"event_id", $"classifier", $"match_start",
-                    $"match_end", $"f_id")
-                  .as[(Long, String, Long, Long, Long)].collect().toSeq)
-                ()
-              })
-              .start()
-          }
-          var q = startQuery()
-          try {
-            for ((evs, si) <- stages.zipWithIndex) {
-              input.addData(evs: _*)
-              q.processAllAvailable()
-              if (killAfter.contains(si)) {
-                q.stop()
-                q = startQuery() // resume from the RocksDB checkpoint
-              }
+    for (trial <- 1 to nTrials) {
+      val (stmt, _) = drawFuzzStatement(rnd, trial)
+      // randomized stage plan, FIXED across this trial's runs: the
+      // 36 rows in three chunks at random boundaries, then the two
+      // flush ticks as their own stages
+      val c1 = 6 + rnd.nextInt(12)
+      val c2 = c1 + 6 + rnd.nextInt(12)
+      val stages: Seq[Seq[(Long, Long, Long, String)]] = Seq(
+        rows.take(c1), rows.slice(c1, c2), rows.drop(c2),
+        Seq(ticks(0)), Seq(ticks(1)))
+      // two distinct random cut points among the stage boundaries
+      // that can hold live state (after stage 0..3)
+      val cuts = rnd.shuffle((0 to 3).toVector).take(2)
+      def run(killAfter: Option[Int]): Seq[(Long, String, Long, Long,
+          Long)] = {
+        import scala.jdk.CollectionConverters._
+        val ck = java.nio.file.Files
+          .createTempDirectory("mr_killfuzz_ck").toString
+        val input = MemoryStream[(Long, Long, Long, String)]
+        // memory sink refuses checkpoint recovery; foreachBatch keyed
+        // by batch id is the recoverable path (an at-least-once replay
+        // of the last batch overwrites instead of duplicating)
+        val sink = new java.util.concurrent.ConcurrentHashMap[
+          java.lang.Long, Seq[(Long, String, Long, Long, Long)]]()
+        def startQuery() = {
+          input.toDF().toDF("event_id", "ts_ms", "user_id", "event_type")
+            .withColumn("etc", timestamp_millis($"ts_ms"))
+            .withWatermark("etc", "10 seconds")
+            .createOrReplaceTempView("mr_killfuzz_stream")
+          org.apache.spark.sql.GraftSqlBridge.ofRows(s,
+              parser.parsePlan(stmt("mr_killfuzz_stream", "EVENTTIME etc")))
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", ck)
+            .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => {
+              sink.put(id, b.filter($"user_id" <= 2L)
+                .select($"event_id", $"classifier", $"match_start",
+                  $"match_end", $"f_id")
+                .as[(Long, String, Long, Long, Long)].collect().toSeq)
+              ()
+            })
+            .start()
+        }
+        var q = startQuery()
+        try {
+          for ((evs, si) <- stages.zipWithIndex) {
+            input.addData(evs: _*)
+            q.processAllAvailable()
+            if (killAfter.contains(si)) {
+              q.stop()
+              q = startQuery() // resume from the RocksDB checkpoint
             }
-          } finally {
-            q.stop()
-            // r18 ADVICE: 3 checkpoint dirs per trial — env-raised
-            // soaks would otherwise accumulate unbounded /tmp disk
-            org.apache.commons.io.FileUtils
-              .deleteQuietly(new java.io.File(ck)); ()
           }
-          sink.asScala.toSeq.sortBy(_._1).flatMap(_._2)
-            .sortBy(r => (r._1, r._3, r._4, r._2))
+        } finally {
+          q.stop()
+          // r18 ADVICE: 3 checkpoint dirs per trial — env-raised
+          // soaks would otherwise accumulate unbounded /tmp disk
+          org.apache.commons.io.FileUtils
+            .deleteQuietly(new java.io.File(ck)); ()
         }
-        val control = run(None)
-        for (cut <- cuts) {
-          val restarted = run(Some(cut))
-          assert(restarted == control,
-            s"trial $trial cut-after-stage $cut diverged for " +
-              s"${stmt("mr_killfuzz_stream", "EVENTTIME etc")}: " +
-              s"restarted=${restarted.size} control=${control.size}")
-        }
+        sink.asScala.toSeq.sortBy(_._1).flatMap(_._2)
+          .sortBy(r => (r._1, r._3, r._4, r._2))
       }
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val control = run(None)
+      for (cut <- cuts) {
+        val restarted = run(Some(cut))
+        assert(restarted == control,
+          s"trial $trial cut-after-stage $cut diverged for " +
+            s"${stmt("mr_killfuzz_stream", "EVENTTIME etc")}: " +
+            s"restarted=${restarted.size} control=${control.size}")
+      }
+    }
   }
 }

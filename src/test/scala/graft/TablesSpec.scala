@@ -42,6 +42,21 @@ class TablesSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to guess"))
   }
 
+  test("ts_us does not depend on the session time zone, and the loader " +
+      "writes nothing on the session") {
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    la.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    def tsUs(s: org.apache.spark.sql.SparkSession) =
+      Tables.eventsTsUs(s, sfDir).select(col("ts_us")).as[Long]
+        .collect().sorted.toSeq
+    val utc = tsUs(spark)
+    assert(utc.nonEmpty)
+    assert(tsUs(la) == utc)
+    assert(la.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
+    assert(la.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+  }
+
   test("the real testdata still loads with a sane µs epoch") {
     val got = Tables.eventsTsUs(spark, sfDir)
       .agg(min(col("ts_us")), max(col("ts_us")))
